@@ -43,8 +43,7 @@ from pyspark.sql import functions as F
 
 from .codec import decode_doc_ids, decode_postings, encode_postings
 from .index import POSTINGS_SCHEMA, IndexManifest, term_id
-from .search import parse_query
-from .searcher import LoadedIndex
+from .searcher import LoadedIndex, _by_tid
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
@@ -54,14 +53,16 @@ _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
 
 def _shard_match_fn(tids: list[int], neg_tids: list[int], mode: str):
-    """Grouped-map body: one shard's posting rows → matching doc_ids.
+    """Per-shard body: one shard's posting rows → matching doc_ids.
     No scoring, no heap, no k — a pure posting-list union/intersection, so
     delete-by-query never pays top-k machinery for an unbounded match set."""
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fn(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
+        by_tid = _by_tid(pdf)
+
         def ids_of(t: int) -> np.ndarray | None:
-            rows = pdf[pdf["tid"] == t]
-            if not len(rows):
+            rows = by_tid.get(t)
+            if rows is None:
                 return None
             parts = [
                 decode_doc_ids(r.doc_ids_enc, r.skips)
@@ -94,28 +95,17 @@ def _shard_match_fn(tids: list[int], neg_tids: list[int], mode: str):
 
 
 def match_doc_ids(index: LoadedIndex, query: str, mode: str = "or") -> DataFrame:
-    """All doc_ids matching `query` → DataFrame(doc_id). The scan is the same
-    pruned posting fetch the ranked path uses (bucket partition pruning + tid
-    pushdown); per shard the UDF unions/intersects decoded id lists."""
-    q = parse_query(query)
-    found = index._lookup(q.terms + q.must_not)
-    terms = [t for t in q.terms if t in found]
-    if not terms or (mode == "and" and len(terms) < len(q.terms)):
+    """All doc_ids matching `query` → DataFrame(doc_id). Planned like a
+    ranked search (the manifest's analyzer, one term-dict seek) and scanned
+    by the searcher's per-shard exchange (bucket partition pruning + tid
+    pushdown); per shard the UDF unions/intersects decoded id lists.
+    Tombstones are not applied: delete_by_query anti-joins them itself."""
+    (q,), found = index._parse([query])
+    spec = index._flat_spec("", q, found, 0, mode)
+    if spec is None:
         return index.spark.createDataFrame([], "doc_id long")
-    neg = [t for t in q.must_not if t in found]
-    tids = [found[t][2] for t in terms]
-    neg_tids = [found[t][2] for t in neg]
-    buckets = sorted({found[t][1] for t in terms + neg})
-    rows = index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("tid").isin(tids + neg_tids)
-    )
-    from .searcher import _pin_shard_parallelism
-
-    return (
-        _pin_shard_parallelism(rows)
-        .groupBy("shard")
-        .applyInPandas(_shard_match_fn(tids, neg_tids, mode), "doc_id long")
-    )
+    fn = _shard_match_fn(list(spec.pos.values()), list(spec.neg.values()), mode)
+    return index._shard_frame([spec], fn, "doc_id long")
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,14 @@ Mirrors the ES query-then-fetch search lifecycle [public]:
    → per-shard block-max WAND top-k inside a grouped Arrow UDF
    → coordinating merge: global TakeOrderedAndProject(k, score DESC, doc ASC)
 
+`search`, `search_tree` and `search_many` run this lifecycle through ONE
+executor: every query is a `_Spec`, a single query is a batch of one, and
+`LoadedIndex._execute` answers a whole batch with one pruned posting scan and
+one per-shard Arrow pass (`LoadedIndex._shard_frame`, which
+engine.mutate.match_doc_ids shares). Only the coordinating merge differs per
+entry point: a global top-k for `search`/`search_tree`, a per-qid window for
+`search_many`.
+
 idf uses GLOBAL corpus stats from the manifest/term_dict (like ES
 dfs_query_then_fetch — pinned so scores are shard-count-invariant).
 """
@@ -16,16 +24,20 @@ from __future__ import annotations
 
 import math
 import os
+from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .codec import decode_postings
 from .index import IndexManifest
-from .search import parse_query
-from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk
+from .search import ParsedQuery, parse_query
+from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk, wand_tree_topk
 
 TOPK_SCHEMA = "doc_id long, score double"
+BATCH_TOPK_SCHEMA = "qid string, doc_id long, score double"
 
 
 def _pin_shard_parallelism(df):
@@ -42,8 +54,9 @@ def _pin_shard_parallelism(df):
 def _pack_rows(rows: pd.DataFrame) -> list[dict]:
     """One term's posting rows → the cursor wire format (part-sorted, skip
     entries as plain tuples). The per-skip conversion is the expensive part
-    — batch search packs each tid ONCE and shares the result across every
-    query's cursor (engine/wand.py TermCursor also shares decoded blocks)."""
+    — the executor packs each tid ONCE per shard and shares the result across
+    every query's cursor (engine/wand.py TermCursor also shares decoded
+    blocks)."""
     rs = rows.sort_values("part")
     return [
         {
@@ -65,173 +78,113 @@ def _pack_rows(rows: pd.DataFrame) -> list[dict]:
     ]
 
 
-def _rows_to_cursor(rows: pd.DataFrame, idf: float, avgdl: float) -> TermCursor:
-    return TermCursor(_pack_rows(rows), idf, avgdl)
+def _by_tid(pdf: pd.DataFrame) -> dict[int, pd.DataFrame]:
+    """One pass over a shard's posting rows → its rows per tid (a dict of
+    sub-frames instead of a boolean mask per term — O(R), not O(T*R))."""
+    return {int(t): g for t, g in pdf.groupby("tid", sort=False)}
 
 
-def _shard_topk_fn(
-    terms: list[int],
-    idfs: dict[int, float],
-    must_not: list[int],
-    avgdl: float,
-    k: int,
-    mode: str,
-    algo: str,
-    after: tuple[float, int] | None = None,
-    min_match: int = 1,
-    round_to: int | None = 4,
-):
-    """Grouped-map UDF body: one shard's posting rows → local top-k.
-    `terms`/`must_not` are numeric tids (term_dict resolves strings).
-    The returned fn is single-parameter (a 2-arg grouped-map fn would be
-    treated as fn(key, pdf) by PySpark); the tombstone-aware core rides on
-    `fn.core` for the cogrouped delete-by-query path."""
+@dataclass
+class _Spec:
+    """One query of an executor batch. `pos` / `neg` map analyzed term → tid
+    in positive / must-not context; `idfs` covers `pos`. mode 'or' | 'and'
+    runs the flat kernels (algo 'wand', or 'exhaustive' for the oracle
+    path), 'tree' runs wand_tree_topk over `tree`."""
 
-    def core(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
-        # one pass over the shard frame (dict of sub-frames keyed by tid)
-        # instead of a full boolean mask per term — O(R), not O(T*R)
-        by_tid = {t: g for t, g in pdf.groupby("tid")}
-        cursors = []
-        for t in terms:
-            rows = by_tid.get(t)
-            if rows is not None and len(rows):
-                cursors.append(_rows_to_cursor(rows, idfs[t], avgdl))
-        neg = []
-        for t in must_not:
-            rows = by_tid.get(t)
-            if rows is not None and len(rows):
-                neg.append(_rows_to_cursor(rows, 0.0, avgdl))
-        if not cursors or (mode == "and" and len(cursors) < len(terms)):
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-        if algo == "exhaustive":
-            from .codec import decode_postings
-
-            lists = []
-            for c in cursors:
-                import numpy as np
-
-                ids_parts, tf_parts, dl_parts = [], [], []
-                for r in c.rows:
-                    i, t_, d_ = decode_postings(
-                        r["doc_ids_enc"], r["tfs_enc"], r["dls_enc"], r["skips"]
-                    )
-                    ids_parts.append(i)
-                    tf_parts.append(t_)
-                    dl_parts.append(d_)
-                lists.append(
-                    (
-                        np.concatenate(ids_parts),
-                        np.concatenate(tf_parts),
-                        np.concatenate(dl_parts),
-                        c.idf,
-                    )
-                )
-            mn_ids = None
-            if neg:
-                import numpy as np
-
-                parts = []
-                for c in neg:
-                    for r in c.rows:
-                        i, _, _ = decode_postings(
-                            r["doc_ids_enc"], r["tfs_enc"], r["dls_enc"], r["skips"]
-                        )
-                        parts.append(i)
-                mn_ids = np.concatenate(parts) if parts else None
-            if not_ids is not None and len(not_ids):
-                import numpy as np
-
-                mn_ids = (
-                    np.concatenate([mn_ids, not_ids]) if mn_ids is not None else not_ids
-                )
-            hits = exhaustive_topk(
-                lists, k, avgdl, mode=mode, must_not_ids=mn_ids, after=after,
-                min_match=min_match, round_to=round_to,
-            )
-        elif mode == "and":
-            hits = intersect_topk(
-                cursors, k, must_not=neg, after=after, not_ids=not_ids,
-                round_to=round_to,
-            )
-        else:
-            hits = wand_topk(
-                cursors, k, must_not=neg, after=after, not_ids=not_ids,
-                min_match=min_match, round_to=round_to,
-            )
-        return pd.DataFrame(
-            {"doc_id": [h[0] for h in hits], "score": [h[1] for h in hits]}
-        )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return core(pdf)
-
-    fn.core = core
-    return fn
+    qid: str
+    pos: dict[str, int]
+    neg: dict[str, int]
+    idfs: dict[str, float]
+    k: int
+    mode: str = "or"
+    after: tuple[float, int] | None = None
+    min_match: int = 1
+    algo: str = "wand"
+    tree: object = None
 
 
-def _shard_tree_fn(
-    tree,
-    pos_tids: dict[str, int],
-    neg_tids: dict[str, int],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    after: tuple[float, int] | None = None,
-    round_to: int | None = 4,
-):
-    """Grouped-map UDF body for NESTED bool trees (engine/boolquery.py): one
-    shard's posting rows → local top-k under wand_tree_topk. Same shape as
-    _shard_topk_fn; cursors are keyed by term string because tree
-    evaluation is term-name-based."""
-    from .wand import wand_tree_topk
+def _exhaustive_hits(
+    s: _Spec, pos: list[TermCursor], neg: list[TermCursor], not_ids, avgdl: float,
+    round_to: int | None,
+) -> list[tuple[int, float]]:
+    """The oracle reference: decode every posting and score without skipping."""
+
+    def decoded(c: TermCursor) -> list[np.ndarray]:
+        parts = [
+            decode_postings(r["doc_ids_enc"], r["tfs_enc"], r["dls_enc"], r["skips"])
+            for r in c.rows
+        ]
+        return [np.concatenate(p) for p in zip(*parts)]
+
+    lists = [(*decoded(c), c.idf) for c in pos]
+    dead = [decoded(c)[0] for c in neg]
+    if not_ids is not None and len(not_ids):
+        dead.append(not_ids)
+    return exhaustive_topk(
+        lists, s.k, avgdl, mode=s.mode, must_not_ids=np.concatenate(dead) if dead else None,
+        after=s.after, min_match=s.min_match, round_to=round_to,
+    )
+
+
+def _shard_topk_core(specs: list[_Spec], avgdl: float, round_to: int | None):
+    """The executor's per-shard body: core(shard's posting rows, its sorted
+    tombstoned ids or None) → local top-k rows (qid, doc_id, score) for every
+    spec. Shared per-tid state across ALL specs: rows are packed once (skip-
+    tuple conversion is per-entry Python) and every cursor over a tid shares
+    one decoded-block memo — "the" appearing in 7 of 8 queries decodes once
+    per shard, not 7 times."""
 
     def core(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
-        by_tid = {t: g for t, g in pdf.groupby("tid")}
-        pos: dict[str, TermCursor] = {}
-        for term, tid in pos_tids.items():
-            rows = by_tid.get(tid)
-            if rows is not None and len(rows):
-                pos[term] = _rows_to_cursor(rows, idfs[term], avgdl)
-        neg: dict[str, TermCursor] = {}
-        for term, tid in neg_tids.items():
-            rows = by_tid.get(tid)
-            if rows is not None and len(rows):
-                neg[term] = _rows_to_cursor(rows, 0.0, avgdl)
-        if not pos:
-            return pd.DataFrame(
-                {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-            )
-        hits = wand_tree_topk(
-            tree, pos, k, neg_cursors=neg, after=after, not_ids=not_ids,
-            round_to=round_to,
-        )
-        return pd.DataFrame(
-            {"doc_id": [h[0] for h in hits], "score": [h[1] for h in hits]}
-        )
+        by_tid = _by_tid(pdf)
+        packed: dict[int, tuple[list, dict]] = {}
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return core(pdf)
+        def cursors(terms: dict[str, int], idfs: dict[str, float]) -> dict[str, TermCursor]:
+            out = {}
+            for term, t in terms.items():
+                rows = by_tid.get(t)
+                if rows is None:
+                    continue
+                if t not in packed:
+                    packed[t] = (_pack_rows(rows), {})
+                pk, cache = packed[t]
+                out[term] = TermCursor(pk, idfs.get(term, 0.0), avgdl, cache=cache)
+            return out
 
-    fn.core = core
-    return fn
+        out_q, out_d, out_s = [], [], []
+        for s in specs:
+            pos, neg = cursors(s.pos, s.idfs), cursors(s.neg, {})
+            if not pos or (s.mode == "and" and len(pos) < len(s.pos)):
+                continue
+            if s.mode == "tree":
+                hits = wand_tree_topk(
+                    s.tree, pos, s.k, neg_cursors=neg, after=s.after, not_ids=not_ids,
+                    round_to=round_to,
+                )
+            elif s.algo == "exhaustive":
+                hits = _exhaustive_hits(
+                    s, list(pos.values()), list(neg.values()), not_ids, avgdl, round_to
+                )
+            elif s.mode == "and":
+                hits = intersect_topk(
+                    list(pos.values()), s.k, must_not=list(neg.values()), after=s.after,
+                    not_ids=not_ids, round_to=round_to,
+                )
+            else:
+                hits = wand_topk(
+                    list(pos.values()), s.k, must_not=list(neg.values()), after=s.after,
+                    not_ids=not_ids, min_match=s.min_match, round_to=round_to,
+                )
+            for d, sc in hits:
+                out_q.append(s.qid)
+                out_d.append(d)
+                out_s.append(sc)
+        return pd.DataFrame({
+            "qid": pd.Series(out_q, dtype=object),
+            "doc_id": pd.Series(out_d, dtype="int64"),
+            "score": pd.Series(out_s, dtype="float64"),
+        })
 
-
-def _shard_topk_cogroup_fn(core):
-    """Cogrouped-map wrapper: (shard's posting rows, shard's tombstone rows)
-    → local top-k. Tombstones ride the same shard key as the postings —
-    per-shard live-docs arrive WITH the shard's work, no broadcast of the
-    global delete set (the distributed analog of Lucene's per-segment
-    live-docs [public])."""
-    import numpy as np
-
-    def fn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        not_ids = (
-            np.sort(right["doc_id"].to_numpy(dtype="int64")) if len(right) else None
-        )
-        return core(left, not_ids)  # core returns its own empty-schema frame
-
-    return fn
+    return core
 
 
 class LoadedIndex:
@@ -262,6 +215,79 @@ class LoadedIndex:
         n = self.manifest.n_docs
         return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
+    def _parse(self, texts: list[str]) -> tuple[list[ParsedQuery], dict]:
+        """Analyze query strings with the analyzer the index manifest pins
+        (rank identity: an english-stemmed index queried with
+        standard-analyzed terms would silently miss), then ONE term-dict seek
+        for the whole batch → (parsed queries, {term: (df, bucket, tid)})."""
+        qs = [parse_query(t, self.manifest.analyzer) for t in texts]
+        return qs, self._lookup([t for q in qs for t in q.terms + q.must_not])
+
+    def _flat_spec(
+        self, qid: str, q: ParsedQuery, found: dict, k: int, mode: str = "or",
+        after: tuple[float, int] | None = None, min_match: int = 1, algo: str = "wand",
+    ) -> _Spec | None:
+        """A parsed flat query → its executor spec; None when no doc can
+        match (no known positive term, an AND term missing from the
+        dictionary, or fewer known terms than min_match)."""
+        pos = {t: found[t][2] for t in q.terms if t in found}
+        if not pos or (mode == "and" and len(pos) < len(q.terms)) or len(pos) < min_match:
+            return None
+        return _Spec(
+            qid, pos, {t: found[t][2] for t in q.must_not if t in found},
+            {t: self.idf(found[t][0]) for t in pos}, k, mode, after, min_match, algo,
+        )
+
+    def _shard_frame(self, specs: list[_Spec], core, schema: str, dead=None) -> DataFrame:
+        """The one per-shard exchange: scan the posting rows of every term the
+        specs name (D3: bucket is the file-partition column → partition
+        pruning; tid is a numeric Parquet pushdown predicate over tid-sorted
+        files), pin the shard exchange, and run core(shard's rows, sorted
+        dead ids or None) once per shard. Without a dead set (DataFrame of
+        doc_id) this is a plain grouped map. With one, the dead ids ride the
+        same shard key through a cogroup — per-shard live-docs arrive WITH the
+        shard's work and the delete set is never broadcast whole (the
+        distributed analog of Lucene's per-segment live-docs [public])."""
+        terms = {t: tid for s in specs for t, tid in (*s.pos.items(), *s.neg.items())}
+        # every spec term came through _lookup, so its bucket is cached
+        buckets = sorted({self._td_cache[t][1] for t in terms})
+        rows = self.postings.filter(
+            F.col("bucket").isin(buckets) & F.col("tid").isin(sorted(set(terms.values())))
+        )
+        grouped = _pin_shard_parallelism(rows).groupBy("shard")
+        if dead is None:
+            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+                return core(pdf, None)
+
+            return grouped.applyInPandas(fn, schema)
+        tomb = dead.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            (F.col("doc_id") / F.lit(self.manifest.docs_per_shard)).cast("int").alias("shard"),
+        )
+
+        def cofn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+            not_ids = np.sort(right["doc_id"].to_numpy(dtype="int64")) if len(right) else None
+            return core(left, not_ids)
+
+        return grouped.cogroup(_pin_shard_parallelism(tomb).groupBy("shard")).applyInPandas(
+            cofn, schema
+        )
+
+    def _execute(
+        self, specs: list[_Spec], round_to: int | None, exclude: DataFrame | None = None
+    ) -> DataFrame:
+        """The shard-scoring executor → every spec's per-shard local top-k as
+        (qid, doc_id, score), scores rounded as the kernels ranked them.
+        Persisted tombstones and `exclude` are the dead set."""
+        dead = self.tombstones.select("doc_id") if self.tombstones is not None else None
+        if exclude is not None:
+            ex = exclude.select("doc_id")
+            dead = ex if dead is None else dead.unionByName(ex).distinct()
+        core = _shard_topk_core(specs, self.manifest.avgdl, round_to)
+        local = self._shard_frame(specs, core, BATCH_TOPK_SCHEMA, dead)
+        score = F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
+        return local.select("qid", "doc_id", score.alias("score"))
+
     def search(
         self,
         query: str,
@@ -284,7 +310,7 @@ class LoadedIndex:
         exclude: DataFrame(doc_id) of docs to treat as deleted, ON TOP of any
         persisted tombstones — routed per shard via a cogroup so the delete
         set is never broadcast whole (engine.mutate.delete_by_query)."""
-        idx_an = getattr(self.manifest, "analyzer", "standard")
+        idx_an = self.manifest.analyzer
         if analyzer is not None and analyzer != idx_an:
             # rank-identity invariant: query analysis MUST match the config
             # recorded in the index manifest (an english-stemmed index
@@ -294,56 +320,13 @@ class LoadedIndex:
                 f"query analyzer {analyzer!r} != index analyzer {idx_an!r} "
                 "(the index manifest pins the analysis chain)"
             )
-        q = parse_query(query, idx_an)
-        found = self._lookup(q.terms + q.must_not)
-        terms = [t for t in q.terms if t in found]
-        empty = self.spark.createDataFrame([], TOPK_SCHEMA)
-        if (
-            not terms
-            or (mode == "and" and len(terms) < len(q.terms))
-            or len(terms) < min_should_match
-        ):
-            return empty
-        neg = [t for t in q.must_not if t in found]
-        tids = [found[t][2] for t in terms]
-        neg_tids = [found[t][2] for t in neg]
-        idfs = {found[t][2]: self.idf(found[t][0]) for t in terms}
-        buckets = sorted({found[t][1] for t in terms + neg})
-        # D3: bucket is the file-partition column → partition pruning; tid is
-        # a numeric Parquet pushdown predicate over tid-sorted files
-        rows = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids + neg_tids)
-        )
-        core = _shard_topk_fn(
-            tids, idfs, neg_tids, self.manifest.avgdl, k, mode, algo, after,
-            min_should_match, round_to,
-        )
-        dead = self.tombstones.select("doc_id") if self.tombstones is not None else None
-        if exclude is not None:
-            ex = exclude.select("doc_id")
-            dead = ex if dead is None else dead.unionByName(ex).distinct()
-        if dead is not None:
-            tomb = dead.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                (F.col("doc_id") / F.lit(self.manifest.docs_per_shard))
-                .cast("int")
-                .alias("shard"),
-            )
-            local = (
-                _pin_shard_parallelism(rows).groupBy("shard")
-                .cogroup(_pin_shard_parallelism(tomb).groupBy("shard"))
-                .applyInPandas(_shard_topk_cogroup_fn(core.core), TOPK_SCHEMA)
-            )
-        else:
-            local = (
-                _pin_shard_parallelism(rows)
-                .groupBy("shard").applyInPandas(core, TOPK_SCHEMA)
-            )
-        score_col = (
-            F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-        )
+        (q,), found = self._parse([query])
+        spec = self._flat_spec("", q, found, k, mode, after, min_should_match, algo)
+        if spec is None:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         return (
-            local.select("doc_id", score_col.alias("score"))
+            self._execute([spec], round_to, exclude)
+            .select("doc_id", "score")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
         )
@@ -358,10 +341,8 @@ class LoadedIndex:
     ) -> DataFrame:
         """Top-k under a NESTED bool query tree (engine/boolquery.Bool/Term)
         on the block-max WAND path → DataFrame(doc_id, score), ordered
-        (score desc, doc_id asc). Same lifecycle as search(): term-dict
-        seek, bucket-pruned + tid-pushdown posting scan (one scan covers
-        every leaf of the tree), per-shard wand_tree_topk, global top-k.
-        Tombstones route per shard via cogroup exactly as in search()."""
+        (score desc, doc_id asc). Same executor as search(): one scan covers
+        every leaf of the tree, per-shard wand_tree_topk, global top-k."""
         from .boolquery import collect_leaves, is_pure_bool
 
         if not is_pure_bool(tree):
@@ -371,50 +352,17 @@ class LoadedIndex:
             )
         pos_t, neg_t = collect_leaves(tree)
         found = self._lookup(sorted(pos_t | neg_t))
-        empty = self.spark.createDataFrame([], TOPK_SCHEMA)
-        pos_tids = {t: found[t][2] for t in pos_t if t in found}
-        if not pos_tids:
-            return empty
+        pos = {t: found[t][2] for t in pos_t if t in found}
+        if not pos:
+            return self.spark.createDataFrame([], TOPK_SCHEMA)
         # a term in both contexts keeps its positive cursor (match flags are
         # per term, context-free in eval_tree)
-        neg_tids = {
-            t: found[t][2] for t in neg_t if t in found and t not in pos_tids
-        }
-        idfs = {t: self.idf(found[t][0]) for t in pos_tids}
-        buckets = sorted({found[t][1] for t in found})
-        all_tids = list(pos_tids.values()) + list(neg_tids.values())
-        rows = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(all_tids)
-        )
-        core = _shard_tree_fn(
-            tree, pos_tids, neg_tids, idfs, self.manifest.avgdl, k, after, round_to
-        )
-        dead = self.tombstones.select("doc_id") if self.tombstones is not None else None
-        if exclude is not None:
-            ex = exclude.select("doc_id")
-            dead = ex if dead is None else dead.unionByName(ex).distinct()
-        if dead is not None:
-            tomb = dead.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                (F.col("doc_id") / F.lit(self.manifest.docs_per_shard))
-                .cast("int")
-                .alias("shard"),
-            )
-            local = (
-                _pin_shard_parallelism(rows).groupBy("shard")
-                .cogroup(_pin_shard_parallelism(tomb).groupBy("shard"))
-                .applyInPandas(_shard_topk_cogroup_fn(core.core), TOPK_SCHEMA)
-            )
-        else:
-            local = (
-                _pin_shard_parallelism(rows)
-                .groupBy("shard").applyInPandas(core, TOPK_SCHEMA)
-            )
-        score_col = (
-            F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-        )
+        neg = {t: found[t][2] for t in neg_t if t in found and t not in pos}
+        idfs = {t: self.idf(found[t][0]) for t in pos}
+        spec = _Spec("", pos, neg, idfs, k, "tree", after, tree=tree)
         return (
-            local.select("doc_id", score_col.alias("score"))
+            self._execute([spec], round_to, exclude)
+            .select("doc_id", "score")
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
             .limit(k)
         )
@@ -434,68 +382,17 @@ class LoadedIndex:
         queries, each shard computes every query's local top-k in-loop, and
         a single per-qid window finishes the coordinating merge. Per-query
         Spark overhead amortizes to ~zero."""
-        from pyspark.sql import Window
-
         items = list(queries.items()) if isinstance(queries, dict) else list(queries)
-        # analyze with the config the index manifest pins — same
-        # rank-identity invariant search() enforces (an english-stemmed
-        # index queried with standard-analyzed terms would silently miss)
-        idx_an = getattr(self.manifest, "analyzer", "standard")
-        all_terms: list[str] = []
-        parsed = []
-        for qid, qtext in items:
-            q = parse_query(qtext, idx_an)
-            parsed.append((qid, q))
-            all_terms += q.terms + q.must_not
-        found = self._lookup(all_terms)
-        specs = []
-        for qid, q in parsed:
-            terms = [t for t in q.terms if t in found]
-            if not terms or (mode == "and" and len(terms) < len(q.terms)):
-                continue
-            specs.append(
-                {
-                    "qid": qid,
-                    "tids": [found[t][2] for t in terms],
-                    "idfs": {found[t][2]: self.idf(found[t][0]) for t in terms},
-                    "neg": [found[t][2] for t in q.must_not if t in found],
-                    "k": k,
-                    "mode": mode,
-                }
-            )
-        empty = self.spark.createDataFrame([], BATCH_TOPK_SCHEMA)
+        qs, found = self._parse([text for _, text in items])
+        specs = [
+            s for (qid, _), q in zip(items, qs)
+            if (s := self._flat_spec(qid, q, found, k, mode)) is not None
+        ]
         if not specs:
-            return empty
-        tids = sorted({t for s in specs for t in s["tids"] + s["neg"]})
-        buckets = sorted({found[t][1] for t in found})
-        rows = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(tids)
-        )
-        fn = _shard_multi_topk_fn(specs, self.manifest.avgdl, round_to=round_to)
-        if self.tombstones is not None:
-            # same per-shard live-docs routing as single-query search
-            tomb = self.tombstones.select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                (F.col("doc_id") / F.lit(self.manifest.docs_per_shard))
-                .cast("int")
-                .alias("shard"),
-            )
-            local = (
-                _pin_shard_parallelism(rows).groupBy("shard")
-                .cogroup(_pin_shard_parallelism(tomb).groupBy("shard"))
-                .applyInPandas(_shard_topk_cogroup_fn(fn.core), BATCH_TOPK_SCHEMA)
-            )
-        else:
-            local = (
-                _pin_shard_parallelism(rows)
-                .groupBy("shard").applyInPandas(fn, BATCH_TOPK_SCHEMA)
-            )
-        score_col = (
-            F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-        )
+            return self.spark.createDataFrame([], BATCH_TOPK_SCHEMA)
         w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return (
-            local.select("qid", "doc_id", score_col.alias("score"))
+            self._execute(specs, round_to)
             .withColumn("_r", F.row_number().over(w))
             .filter(F.col("_r") <= k)
             .drop("_r")
@@ -578,71 +475,3 @@ class LoadedIndex:
         from .search import fetch
 
         return fetch(topk, docs, cols)
-
-
-BATCH_TOPK_SCHEMA = "qid string, doc_id long, score double"
-
-
-def _shard_multi_topk_fn(specs: list[dict], avgdl: float, round_to: int | None = 4):
-    """Grouped-map body for search_many: one shard's postings → local top-k
-    for EVERY query in `specs` (each {qid, tids, idfs, neg, k, mode}).
-    One scan + one Arrow crossing amortized over the whole query batch.
-    `fn.core` (pdf, not_ids) is the tombstone-aware form used by the
-    cogrouped delete-by-query path. (Batch mode always runs the WAND/
-    intersect kernels — the exhaustive oracle path is single-query only; a
-    former unused `algo` parameter pretended otherwise.)"""
-
-    def core(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
-        out_q, out_d, out_s = [], [], []
-        by_tid = {int(t): g for t, g in pdf.groupby("tid", sort=False)}
-        # shared per-tid state across ALL queries in the batch: rows are
-        # packed once (skip-tuple conversion is per-entry Python) and every
-        # cursor over a tid shares one decoded-block memo — "the" appearing
-        # in 7 of 8 queries decodes once per shard, not 7 times
-        packed: dict[int, list] = {}
-        caches: dict[int, dict] = {}
-
-        def cursor_for(t: int, idf: float) -> TermCursor | None:
-            rows = by_tid.get(t)
-            if rows is None:
-                return None
-            pk = packed.get(t)
-            if pk is None:
-                pk = _pack_rows(rows)
-                packed[t] = pk
-                caches[t] = {}
-            return TermCursor(pk, idf, avgdl, cache=caches[t])
-
-        for spec in specs:
-            cursors = []
-            for t in spec["tids"]:
-                c = cursor_for(int(t), spec["idfs"][t])
-                if c is not None:
-                    cursors.append(c)
-            neg = [
-                c for c in (cursor_for(int(t), 0.0) for t in spec["neg"])
-                if c is not None
-            ]
-            if not cursors or (spec["mode"] == "and" and len(cursors) < len(spec["tids"])):
-                continue
-            if spec["mode"] == "and":
-                hits = intersect_topk(
-                    cursors, spec["k"], must_not=neg, not_ids=not_ids,
-                    round_to=round_to,
-                )
-            else:
-                hits = wand_topk(
-                    cursors, spec["k"], must_not=neg, not_ids=not_ids,
-                    round_to=round_to,
-                )
-            for d, s in hits:
-                out_q.append(spec["qid"])
-                out_d.append(d)
-                out_s.append(s)
-        return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s})
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        return core(pdf)
-
-    fn.core = core
-    return fn

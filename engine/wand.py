@@ -7,8 +7,10 @@ impacts] over the engine's compressed posting rows:
 * a `TermCursor` lazily decodes 128-doc blocks through the skip table
   (`next_geq` binary-searches block first_docs, then within the block) — the
   document-at-a-time skip path;
-* the WAND pivot loop prunes with list-level upper bounds (idf·list max
-  impact) and refines with block-level maxima before scoring;
+* one WAND pivot loop (`_wand_loop`) prunes with list-level upper bounds
+  (idf·list max impact) and refines with block-level maxima before scoring;
+  flat queries (`wand_topk`) and nested bool trees (`wand_tree_topk`) plug
+  in their per-cursor bound weights and per-candidate evaluation;
 * AND mode is a document-at-a-time posting-list intersection driven by the
   rarest list (BASELINE.json:6 verbatim capability), must_not lists exclude;
 * tie-break is (score desc, doc_id asc) — because traversal is doc-ascending,
@@ -233,6 +235,78 @@ def _after_ok(
     return r < after[0] or (r == after[0] and doc > after[1])
 
 
+def _wand_loop(
+    items: list[tuple[int, TermCursor]],
+    k: int,
+    evaluate,
+    after: tuple[float, int] | None,
+    not_ids: np.ndarray | None,
+    round_to: int | None,
+) -> list[tuple[int, float]]:
+    """The block-max WAND pivot loop behind wand_topk and wand_tree_topk.
+
+    items: (bound weight, cursor) pairs — a cursor's score bound is
+    weight · (list or block) max score. evaluate(doc, aligned) → score, or
+    None to reject the doc; `aligned` is every cursor positioned on `doc`, in
+    pivot order. Tombstones, the after boundary and the heap live here."""
+    active = [(w, c) for w, c in items if c.n_blocks > 0]
+    for _, c in active:
+        c.next_geq(0)
+    heap: list = []
+    theta = float("-inf")
+    while True:
+        active = [wc for wc in active if wc[1].doc < INF]
+        if not active:
+            break
+        active.sort(key=lambda wc: wc[1].doc)
+        # pivot: first prefix whose summed list upper bounds can beat θ
+        acc = 0.0
+        pivot = -1
+        for p, (w, c) in enumerate(active):
+            acc += w * c.max_score
+            if len(heap) < k or acc > theta:
+                pivot = p
+                break
+        if pivot == -1:
+            break  # total remaining upper bound <= θ: done
+        pivot_doc = active[pivot][1].doc
+        # include every cursor currently positioned ON pivot_doc — they all
+        # contribute to its score, so they must count in the upper bound
+        lim = pivot
+        while lim + 1 < len(active) and active[lim + 1][1].doc == pivot_doc:
+            lim += 1
+        if len(heap) >= k:
+            # block-max refinement (BMW): shallow block UBs at pivot_doc
+            bub = sum(w * c.block_max_score_at(pivot_doc) for w, c in active[: lim + 1])
+            if bub <= theta:
+                # skip: jump past the nearest block boundary, but never past
+                # the next unaligned cursor's doc — lists beyond the pivot
+                # set start contributing there (Ding & Suel GetNewCandidate)
+                d = min(c.next_block_first_after(pivot_doc) for _, c in active[: lim + 1])
+                if lim + 1 < len(active):
+                    d = min(d, active[lim + 1][1].doc)
+                d = max(d, pivot_doc + 1)
+                for _, c in active[: lim + 1]:
+                    if c.doc < d:
+                        c.next_geq(d)
+                continue
+        if active[0][1].doc == pivot_doc:
+            # fully evaluate pivot_doc: sorted by doc, so active[: lim + 1]
+            # is exactly the cursors positioned on it
+            aligned = [c for _, c in active[: lim + 1]]
+            if not _tombstoned(pivot_doc, not_ids):
+                s = evaluate(pivot_doc, aligned)
+                if s is not None and _after_ok(s, pivot_doc, after, round_to):
+                    theta = _push(heap, k, _rank_score(s, round_to), pivot_doc)
+            for c in aligned:
+                c.next_geq(pivot_doc + 1)
+        else:
+            for _, c in active[:pivot]:
+                if c.doc < pivot_doc:
+                    c.next_geq(pivot_doc)
+    return _heap_result(heap)
+
+
 def wand_topk(
     cursors: list[TermCursor],
     k: int,
@@ -262,69 +336,16 @@ def wand_topk(
     bound stays a valid bound (it never understates), so pruning is sound;
     under-matched docs are rejected at evaluation."""
     must_not = must_not or []
-    active = [c for c in cursors if c.n_blocks > 0]
-    for c in active:
-        c.next_geq(0)
-    heap: list = []
-    theta = float("-inf")
-    while True:
-        active = [c for c in active if c.doc < INF]
-        if not active:
-            break
-        active.sort(key=lambda c: c.doc)
-        # pivot: first prefix whose summed list upper bounds can beat θ
-        acc = 0.0
-        pivot = -1
-        for p, c in enumerate(active):
-            acc += c.max_score
-            if len(heap) < k or acc > theta:
-                pivot = p
-                break
-        if pivot == -1:
-            break  # total remaining upper bound <= θ: done
-        pivot_doc = active[pivot].doc
-        # include every cursor currently positioned ON pivot_doc — they all
-        # contribute to its score, so they must count in the upper bound
-        lim = pivot
-        while lim + 1 < len(active) and active[lim + 1].doc == pivot_doc:
-            lim += 1
-        if len(heap) >= k:
-            # block-max refinement (BMW): shallow block UBs at pivot_doc
-            bub = sum(c.block_max_score_at(pivot_doc) for c in active[: lim + 1])
-            if bub <= theta:
-                # skip: jump past the nearest block boundary, but never past
-                # the next unaligned cursor's doc — lists beyond the pivot
-                # set start contributing there (Ding & Suel GetNewCandidate)
-                d = min(c.next_block_first_after(pivot_doc) for c in active[: lim + 1])
-                if lim + 1 < len(active):
-                    d = min(d, active[lim + 1].doc)
-                d = max(d, pivot_doc + 1)
-                for c in active[: lim + 1]:
-                    if c.doc < d:
-                        c.next_geq(d)
-                continue
-        if active[0].doc == pivot_doc:
-            # fully evaluate pivot_doc (all aligned cursors contribute)
-            if not _tombstoned(pivot_doc, not_ids) and not _excluded(pivot_doc, must_not):
-                s = 0.0
-                nm = 0
-                for c in active:
-                    if c.doc != pivot_doc:
-                        break
-                    s += c.score()
-                    nm += 1
-                if nm >= min_match and _after_ok(s, pivot_doc, after, round_to):
-                    theta = _push(heap, k, _rank_score(s, round_to), pivot_doc)
-            for c in active:
-                if c.doc == pivot_doc:
-                    c.next_geq(pivot_doc + 1)
-                else:
-                    break
-        else:
-            for c in active[:pivot]:
-                if c.doc < pivot_doc:
-                    c.next_geq(pivot_doc)
-    return _heap_result(heap)
+
+    def evaluate(doc: int, aligned: list[TermCursor]) -> float | None:
+        if _excluded(doc, must_not):
+            return None
+        s = 0.0
+        for c in aligned:
+            s += c.score()
+        return s if len(aligned) >= min_match else None
+
+    return _wand_loop([(1, c) for c in cursors], k, evaluate, after, not_ids, round_to)
 
 
 def wand_tree_topk(
@@ -361,71 +382,23 @@ def wand_tree_topk(
     # partial up to m times (see boolquery.scoring_multiplicity); pure
     # filter/negation-context terms weigh 0 (they gate, never score)
     mult = scoring_multiplicity(tree)
-    items = [(t, c) for t, c in pos_cursors.items() if c.n_blocks > 0]
-    for _, c in items:
-        c.next_geq(0)
-    heap: list = []
-    theta = float("-inf")
-    active = items
-    while True:
-        active = [(t, c) for t, c in active if c.doc < INF]
-        if not active:
-            break
-        active.sort(key=lambda tc: tc[1].doc)
-        acc = 0.0
-        pivot = -1
-        for p, (t, c) in enumerate(active):
-            acc += mult.get(t, 0) * c.max_score
-            if len(heap) < k or acc > theta:
-                pivot = p
-                break
-        if pivot == -1:
-            break
-        pivot_doc = active[pivot][1].doc
-        lim = pivot
-        while lim + 1 < len(active) and active[lim + 1][1].doc == pivot_doc:
-            lim += 1
-        if len(heap) >= k:
-            bub = sum(
-                mult.get(t, 0) * c.block_max_score_at(pivot_doc)
-                for t, c in active[: lim + 1]
-            )
-            if bub <= theta:
-                d = min(
-                    c.next_block_first_after(pivot_doc) for _, c in active[: lim + 1]
-                )
-                if lim + 1 < len(active):
-                    d = min(d, active[lim + 1][1].doc)
-                d = max(d, pivot_doc + 1)
-                for _, c in active[: lim + 1]:
-                    if c.doc < d:
-                        c.next_geq(d)
-                continue
-        if active[0][1].doc == pivot_doc:
-            if not _tombstoned(pivot_doc, not_ids):
-                matched: dict[str, bool] = {}
-                partial: dict[str, float] = {}
-                for t, c in active:
-                    if c.doc != pivot_doc:
-                        break
-                    matched[t] = True
-                    partial[t] = c.score()
-                for t, c in neg_cursors.items():
-                    if c.next_geq(pivot_doc) == pivot_doc:
-                        matched[t] = True
-                ok, s = eval_tree(tree, matched, partial)
-                if ok and _after_ok(s, pivot_doc, after, round_to):
-                    theta = _push(heap, k, _rank_score(s, round_to), pivot_doc)
-            for _, c in active:
-                if c.doc == pivot_doc:
-                    c.next_geq(pivot_doc + 1)
-                else:
-                    break
-        else:
-            for _, c in active[:pivot]:
-                if c.doc < pivot_doc:
-                    c.next_geq(pivot_doc)
-    return _heap_result(heap)
+    term_of = {c: t for t, c in pos_cursors.items()}
+
+    def evaluate(doc: int, aligned: list[TermCursor]) -> float | None:
+        matched: dict[str, bool] = {}
+        partial: dict[str, float] = {}
+        for c in aligned:
+            t = term_of[c]
+            matched[t] = True
+            partial[t] = c.score()
+        for t, c in neg_cursors.items():
+            if c.next_geq(doc) == doc:
+                matched[t] = True
+        ok, s = eval_tree(tree, matched, partial)
+        return s if ok else None
+
+    items = [(mult.get(t, 0), c) for t, c in pos_cursors.items()]
+    return _wand_loop(items, k, evaluate, after, not_ids, round_to)
 
 
 def intersect_topk(

@@ -147,3 +147,22 @@ def test_batch_and_mlt_follow_manifest_analyzer(spark, tmp_path):
     got = idx.search_many({"q1": "tables queries"}, k=5).collect()
     assert got, "stemmed batch query must hit the english index"
     assert idx.more_like_this(docs, 0, k=5).collect()
+
+
+def test_delete_by_query_follows_manifest_analyzer(spark, tmp_path):
+    """delete_by_query matches with the manifest's analyzer, exactly like
+    search: on an english index "tables" must delete what it finds."""
+    from engine import mutate
+
+    docs = spark.createDataFrame(
+        [(0, "the tables are slow"), (1, "a table of queries"),
+         (2, "plain words here only")],
+        "doc_id long, text string",
+    )
+    root = str(tmp_path / "eng_delete")
+    build_index(spark, docs, root, n_buckets=2, docs_per_shard=8,
+                block_size=8, analyzer="english")
+    idx = LoadedIndex(spark, root)
+    assert {r["doc_id"] for r in idx.search("tables", k=10).collect()} == {0, 1}
+    assert mutate.delete_by_query(idx, "tables") == 2
+    assert idx.search("tables", k=10).collect() == []

@@ -186,6 +186,58 @@ def test_search_many_respects_tombstones(spark, index):
     assert not (hits & dead)
 
 
+
+def _tree_of(query, mode):
+    """The search_tree twin of a flat query: OR → should, AND → must,
+    -words → must_not."""
+    from engine.boolquery import Bool, Term
+    from engine.search import parse_query
+
+    q = parse_query(query)
+    pos = tuple(Term(t) for t in q.terms)
+    neg = tuple(Term(t) for t in q.must_not)
+    return Bool(must=pos, must_not=neg) if mode == "and" else Bool(should=pos, must_not=neg)
+
+
+def test_entry_points_agree_with_and_without_tombstones(spark, index):
+    """search(q), search_many({qid: q})[qid] and search_tree(twin of q) are
+    rank-identical for OR, AND and must-not queries, before and after a
+    delete_by_query leaves live tombstones."""
+    cases = [("window stream", "or"), ("sort merge join", "and"), ("scan -filter", "or")]
+
+    def answers():
+        out = []
+        for query, mode in cases:
+            single = _hits(index.search(query, k=10, mode=mode))
+            many = _hits(index.search_many({"q": query}, k=10, mode=mode))
+            tree = _hits(index.search_tree(_tree_of(query, mode), k=10))
+            assert single, query
+            assert many == single, (query, mode)
+            assert tree == single, (query, mode)
+            out.append(single)
+        return out
+
+    before = answers()
+    assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
+    dead = {int(r["doc_id"]) for r in index.tombstones.collect()}
+    # non-vacuous: the tombstones remove hits the queries returned before
+    assert any(d in dead for hits in before for d, _ in hits)
+    after = answers()
+    assert not any(d in dead for hits in after for d, _ in hits)
+
+
+def test_search_plans_cogroup_only_with_tombstones(spark, index):
+    """Without tombstones a search is one grouped Arrow map; with live
+    tombstones it is exactly one cogroup (no extra exchange otherwise)."""
+
+    def pandas_nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan.count("FlatMapGroupsInPandas"), plan.count("FlatMapCoGroupsInPandas")
+
+    assert pandas_nodes(index.search("table", k=10)) == (1, 0)
+    assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
+    assert pandas_nodes(index.search("table", k=10)) == (0, 1)
+
 def test_update_by_query_does_not_resurrect_tombstoned(spark, docs, tmp_path):
     """ES _update_by_query only processes LIVE docs: a doc tombstoned by
     delete_by_query must not be reindexed (resurrected) just because the

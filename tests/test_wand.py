@@ -48,14 +48,28 @@ def cursors_from(encs_idfs, avgdl):
 
 
 @pytest.mark.parametrize("seed", range(25))
-@pytest.mark.parametrize("k", [1, 5, 50])
-def test_wand_equals_exhaustive_or(seed, k):
+@pytest.mark.parametrize(
+    "k,tombstones",
+    [
+        pytest.param(k, t, id=f"{k}-tombstones" if t else str(k))
+        for t in (False, True)
+        for k in (1, 5, 50)
+    ],
+)
+def test_wand_equals_exhaustive_or(seed, k, tombstones):
     rng = np.random.default_rng(seed)
     lists, encs_idfs, avgdl = make_corpus(rng)
     nq = int(rng.integers(1, 5))
     q = rng.choice(len(lists), size=nq, replace=False)
-    want = exhaustive_topk([lists[i] for i in q], k, avgdl, mode="or")
-    got = wand_topk(cursors_from([encs_idfs[i] for i in q], avgdl), k)
+    not_ids = None
+    if tombstones:
+        # a sorted live-docs filter over ~1/3 of the query's candidate docs
+        cand = np.unique(np.concatenate([lists[i][0] for i in q]))
+        not_ids = cand[rng.random(len(cand)) < 1 / 3]
+    want = exhaustive_topk(
+        [lists[i] for i in q], k, avgdl, mode="or", must_not_ids=not_ids
+    )
+    got = wand_topk(cursors_from([encs_idfs[i] for i in q], avgdl), k, not_ids=not_ids)
     assert [d for d, _ in got] == [d for d, _ in want]
     np.testing.assert_allclose(
         [s for _, s in got], [s for _, s in want], rtol=1e-9
