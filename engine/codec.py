@@ -8,9 +8,12 @@ metadata; [public: Lucene index format; Ding & Suel 2011, "Faster top-k
 document retrieval using block-max indexes"]).
 
 Everything here is pure NumPy (no Spark imports) so it is unit-testable and
-runs vectorized inside Arrow-batched grouped UDFs. No per-element Python in
-the hot paths: varint encode/decode loop over *byte positions* (≤10) not over
-values.
+runs vectorized inside Arrow-batched UDFs. No per-element or per-row Python
+in the hot paths: varint encode/decode loop over *byte positions* (≤10) not
+over values, and `encode_lists` / `decode_rows` take a whole Arrow batch of
+posting lists per call (one varint pass per stream for the batch), so the
+Zipf tail of 1-posting lists costs a slice each, not a codec call each.
+`encode_postings` / `decode_postings` are the same core on a batch of one.
 """
 
 from __future__ import annotations
@@ -194,6 +197,118 @@ def _f32_ceil(x: np.ndarray) -> np.ndarray:
     return f
 
 
+def _restart_gaps(ids: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Gap stream of `ids` (int64) that restarts with the ABSOLUTE id at every
+    index in `starts`, so each block (or run) decodes on its own. Gaps across
+    a restart may be negative; their wrapped values are overwritten."""
+    gaps = np.empty(len(ids), dtype=np.uint64)
+    if len(ids):
+        gaps[0] = np.uint64(ids[0])
+        gaps[1:] = np.diff(ids).astype(np.uint64)
+        gaps[starts] = ids[starts].astype(np.uint64)
+    return gaps
+
+
+def encode_lists(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    list_ids: np.ndarray,
+    n_lists: int,
+    avgdl: float,
+    block_size: int = BLOCK_SIZE,
+) -> dict:
+    """Encode many posting lists in one pass: the batched codec core.
+
+    `list_ids[i]` (0..n_lists-1) names the list posting i belongs to. Postings
+    are stable-sorted by (list id, doc_id) — already-sorted input skips the
+    sort — then every stream of the whole batch is varint-encoded once, and
+    block/list maxima come from `np.maximum.reduceat`. The per-list work is
+    a bytes/list slice. Returns one column per field, entry j for list j:
+
+      doc_ids_enc: list[bytes]  delta-gap + varint of ascending doc_ids, the
+                                gaps restarting absolute at each block
+      tfs_enc:     list[bytes]  varint of term frequencies (aligned)
+      dls_enc:     list[bytes]  varint of doc lengths (the norm stream —
+                                baked in so shards are self-contained for
+                                scoring + merge, the analog of Lucene's
+                                per-segment norms [public])
+      skips:       list[list[(first_doc, doc_off, tf_off, dl_off, max_impact)]]
+      block_max:   float32 array  max impact over each list (0 when empty)
+      df, cf:      int64 arrays
+
+    Block offsets are *byte* offsets into the list's own streams, so a reader
+    can seek a block without decoding prior blocks (skip data per Lucene's
+    skip lists [public]). Because each value's varint is independent, the
+    batch encode is byte-identical to encoding every list on its own."""
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    tf = np.asarray(tfs, dtype=np.int64)
+    dl = np.asarray(dls, dtype=np.int64)
+    lid = np.asarray(list_ids, dtype=np.int64)
+    if len(ids) > 1:
+        dlid = np.diff(lid)
+        if not ((dlid > 0) | ((dlid == 0) & (np.diff(ids) >= 0))).all():
+            order = np.lexsort((ids, lid))  # stable: ties keep input order
+            ids, tf, dl, lid = ids[order], tf[order], dl[order], lid[order]
+    n = len(ids)
+    df = np.bincount(lid, minlength=n_lists).astype(np.int64)
+    lstart = np.zeros(n_lists + 1, dtype=np.int64)
+    np.cumsum(df, out=lstart[1:])
+    # block starts: every block_size-th posting of each list (so every
+    # non-empty list's first posting starts a block)
+    pos = np.arange(n, dtype=np.int64) - np.repeat(lstart[:-1], df)
+    starts = np.flatnonzero(pos % block_size == 0)
+    nb = len(starts)
+    gaps = _restart_gaps(ids, starts)
+    at = np.concatenate([starts, lstart])
+    doc_enc, d_offs = _varint_encode_offsets(gaps, at)
+    tf_enc, t_offs = _varint_encode_offsets(tf.astype(np.uint64), at)
+    dl_enc, l_offs = _varint_encode_offsets(dl.astype(np.uint64), at)
+
+    nonempty = df > 0
+    block_max = np.zeros(n_lists, dtype=np.float32)
+    cf = np.zeros(n_lists, dtype=np.int64)
+    blk_list = lid[starts]
+    if n:
+        impacts = bm25_impact(tf, dl, avgdl)
+        raw_max = np.maximum.reduceat(impacts, starts)
+        fb = np.searchsorted(blk_list, np.flatnonzero(nonempty))  # first block per list
+        # UPPER bounds must survive the float32 parquet round-trip
+        # (SKIP_STRUCT stores FloatType): cast-to-nearest can round BELOW
+        # the true float64 impact, which would make WAND's block skip
+        # unsound. Round up to the next float32 wherever the cast decreased
+        # the value.
+        block_max[nonempty] = _f32_ceil(np.maximum.reduceat(raw_max, fb))
+        cf[nonempty] = np.add.reduceat(tf, lstart[:-1][nonempty])
+        skip_rows = list(
+            zip(
+                ids[starts].tolist(),
+                (d_offs[:nb] - d_offs[nb:][blk_list]).tolist(),
+                (t_offs[:nb] - t_offs[nb:][blk_list]).tolist(),
+                (l_offs[:nb] - l_offs[nb:][blk_list]).tolist(),
+                _f32_ceil(raw_max).tolist(),
+            )
+        )
+    else:
+        skip_rows = []
+    bstart = np.zeros(n_lists + 1, dtype=np.int64)
+    np.cumsum(np.bincount(blk_list, minlength=n_lists), out=bstart[1:])
+
+    def cut(buf, offs):
+        b = offs.tolist()
+        return [buf[b[j]:b[j + 1]] for j in range(n_lists)]
+
+    return {
+        "doc_ids_enc": cut(doc_enc, d_offs[nb:]),
+        "tfs_enc": cut(tf_enc, t_offs[nb:]),
+        "dls_enc": cut(dl_enc, l_offs[nb:]),
+        "skips": cut(skip_rows, bstart),
+        "block_max": block_max,
+        "df": df,
+        "cf": cf,
+    }
+
+
 def encode_postings(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -201,131 +316,82 @@ def encode_postings(
     avgdl: float,
     block_size: int = BLOCK_SIZE,
 ) -> dict:
-    """Encode one term's posting list.
-
-    Returns dict with:
-      doc_ids_enc: bytes   delta-gap + varint of ascending doc_ids
-      tfs_enc:     bytes   varint of term frequencies (aligned with doc_ids)
-      dls_enc:     bytes   varint of doc lengths (the norm stream — baked in
-                           so shards are self-contained for scoring + merge,
-                           the analog of Lucene's per-segment norms [public])
-      skips:       list[(first_doc, doc_off, tf_off, dl_off, max_impact)]
-      block_max:   float   max impact over the whole list
-      df:          int, cf: int
-    Block offsets are *byte* offsets so a reader can seek a block without
-    decoding prior blocks (skip data per Lucene's skip lists [public]).
-    """
-    order = np.argsort(doc_ids, kind="stable")
-    ids = np.asarray(doc_ids, dtype=np.int64)[order]
-    tf = np.asarray(tfs, dtype=np.int64)[order]
-    dl = np.asarray(dls, dtype=np.int64)[order]
-    n = len(ids)
-    if n == 0:
-        return {
-            "doc_ids_enc": b"", "tfs_enc": b"", "dls_enc": b"",
-            "skips": [], "block_max": 0.0, "df": 0, "cf": 0,
-        }
-    impacts = bm25_impact(tf, dl, avgdl)
-
-    # One vectorized pass over the whole list: the gap stream with per-block
-    # restarts (gaps[block start] = absolute id) encodes byte-identically to
-    # concatenated per-block encodes, and the skip byte offsets fall out of
-    # the encoder's cumulative byte counts — no per-block Python loop.
-    starts = np.arange(0, n, block_size, dtype=np.int64)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(ids[0])
-    if n > 1:
-        gaps[1:] = np.diff(ids).astype(np.uint64)
-    gaps[starts] = ids[starts].astype(np.uint64)  # each block restarts absolute
-    doc_enc, doc_offs = _varint_encode_offsets(gaps, starts)
-    tf_enc, tf_offs = _varint_encode_offsets(tf.astype(np.uint64), starts)
-    dl_enc, dl_offs = _varint_encode_offsets(dl.astype(np.uint64), starts)
-    # UPPER bounds must survive the float32 parquet round-trip (SKIP_STRUCT
-    # stores FloatType): cast-to-nearest can round BELOW the true float64
-    # impact, which would make WAND's block skip unsound (a doc whose exact
-    # score beats θ could sit in a skipped block). Round up to the next
-    # float32 wherever the cast decreased the value.
-    block_maxes = _f32_ceil(np.maximum.reduceat(impacts, starts))
-    skips = list(
-        zip(
-            ids[starts].tolist(),
-            doc_offs.tolist(),
-            tf_offs.tolist(),
-            dl_offs.tolist(),
-            block_maxes.tolist(),
-        )
+    """Encode one term's posting list — `encode_lists` on a batch of one.
+    Returns {doc_ids_enc, tfs_enc, dls_enc: bytes, skips: list of tuples,
+    block_max: float, df: int, cf: int} (fields as in encode_lists)."""
+    enc = encode_lists(
+        doc_ids, tfs, dls, np.zeros(len(doc_ids), dtype=np.int64), 1, avgdl,
+        block_size,
     )
-    return {
-        "doc_ids_enc": doc_enc,
-        "tfs_enc": tf_enc,
-        "dls_enc": dl_enc,
-        "skips": skips,
-        "block_max": float(_f32_ceil(np.asarray([impacts.max()]))[0]),
-        "df": int(n),
-        "cf": int(tf.sum()),
-    }
+    out = {c: enc[c][0] for c in ("doc_ids_enc", "tfs_enc", "dls_enc", "skips")}
+    out.update(
+        block_max=float(enc["block_max"][0]), df=int(enc["df"][0]), cf=int(enc["cf"][0])
+    )
+    return out
+
+
+def _doc_off(s) -> int:
+    """A skip entry's doc byte offset: entries may be tuples, Spark Rows, or
+    Arrow-struct dicts."""
+    return s["doc_off"] if isinstance(s, dict) else s[1]
+
+
+def decode_rows(doc_bufs, skips, tf_bufs=None, dl_bufs=None):
+    """Decode many posting rows with one varint pass per stream → (doc_ids,
+    tfs, dls, counts): int64 arrays concatenated in row order, and each row's
+    posting count. tfs/dls are None when their buffers are not given (match-
+    only consumers skip two of the three decodes).
+
+    The rows' doc blobs are joined into one stream; the naive cumsum carries
+    every earlier block's sum into each delta restart, and one correction per
+    restart is subtracted with `np.repeat`. A restart sits at each row's byte
+    base and, for multi-block rows, at base + each later block's skip
+    `doc_off`. skips=None: every row is a single delta run (the index
+    build's map-side partials)."""
+    n_rows = len(doc_bufs)
+    base = np.zeros(n_rows + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, doc_bufs), dtype=np.int64, count=n_rows), out=base[1:])
+    gaps, vstarts = _varint_decode_starts(b"".join(doc_bufs))
+    restarts = base[:-1]
+    if skips is not None:
+        nblk = np.fromiter(
+            (0 if s is None else len(s) for s in skips), dtype=np.int64, count=n_rows
+        )
+        multi = np.flatnonzero(nblk > 1)
+        if len(multi):
+            offs = np.fromiter(
+                (_doc_off(s) for r in multi.tolist() for s in skips[r][1:]),
+                dtype=np.int64,
+            )
+            inner = np.repeat(base[multi], nblk[multi] - 1) + offs
+            restarts = np.sort(np.concatenate([restarts, inner]))
+    ids = np.cumsum(gaps.astype(np.int64))
+    if len(ids):
+        # int64 overflow in the running sum wraps, and the subtraction
+        # wraps back: the corrected ids are exact either way
+        at = np.searchsorted(vstarts, restarts)
+        corr = np.where(at > 0, ids[np.maximum(at - 1, 0)], 0)
+        ids = ids - np.repeat(corr, np.diff(np.append(at, len(ids))))
+    counts = np.diff(np.searchsorted(vstarts, base))
+
+    def plain(bufs):
+        if bufs is None:
+            return None
+        return varint_decode(b"".join(bufs)).astype(np.int64)
+
+    return ids, plain(tf_bufs), plain(dl_bufs), counts
 
 
 def decode_postings(
     doc_ids_enc: bytes, tfs_enc: bytes, dls_enc: bytes, skips
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a full posting list → (doc_ids asc, tfs, dls) int64 arrays.
-
-    Blocks are delta-restarted; the whole gap stream decodes in one
-    vectorized pass, then a per-block correction (the naive cumsum carries
-    the previous blocks' sum into each restarted block) is subtracted with
-    `np.repeat` — no per-block Python loop. Skip entries may be tuples,
-    Spark Rows, or Arrow-struct dicts; only the doc byte offset is read."""
+    """Decode one full posting list → (doc_ids asc, tfs, dls) int64 arrays
+    (`decode_rows` on a batch of one)."""
     if skips is None or len(skips) == 0:  # len(): skips may be a numpy array
         z = np.empty(0, dtype=np.int64)
         return z, z.copy(), z.copy()
-    gaps, vstarts = _varint_decode_starts(doc_ids_enc)
-    ids = np.cumsum(gaps.astype(np.int64))
-    n_blocks = len(skips)
-    if n_blocks > 1:
-        if isinstance(skips[0], dict):
-            doc_offs = np.fromiter(
-                (s["doc_off"] for s in skips), dtype=np.int64, count=n_blocks
-            )
-        else:
-            doc_offs = np.fromiter(
-                (s[1] for s in skips), dtype=np.int64, count=n_blocks
-            )
-        bstarts = np.searchsorted(vstarts, doc_offs)
-        reps = np.diff(np.append(bstarts, len(gaps)))
-        corr = np.zeros(n_blocks, dtype=np.int64)
-        corr[1:] = ids[bstarts[1:] - 1]
-        ids = ids - np.repeat(corr, reps)
-    tfs = varint_decode(tfs_enc).astype(np.int64)
-    dls = varint_decode(dls_enc).astype(np.int64)
+    ids, tfs, dls, _ = decode_rows([doc_ids_enc], [skips], [tfs_enc], [dls_enc])
     return ids, tfs, dls
-
-
-def decode_doc_ids(doc_ids_enc: bytes, skips) -> np.ndarray:
-    """Decode ONLY the doc_id stream (delta-restarted gaps → absolute ids).
-    Match-only consumers (delete/update-by-query) need no tf/dl values, so
-    skipping those two varint decodes roughly cuts the match-scan decode
-    cost to a third."""
-    if skips is None or len(skips) == 0:
-        return np.empty(0, dtype=np.int64)
-    gaps, vstarts = _varint_decode_starts(doc_ids_enc)
-    ids = np.cumsum(gaps.astype(np.int64))
-    n_blocks = len(skips)
-    if n_blocks > 1:
-        if isinstance(skips[0], dict):
-            doc_offs = np.fromiter(
-                (s["doc_off"] for s in skips), dtype=np.int64, count=n_blocks
-            )
-        else:
-            doc_offs = np.fromiter(
-                (s[1] for s in skips), dtype=np.int64, count=n_blocks
-            )
-        bstarts = np.searchsorted(vstarts, doc_offs)
-        reps = np.diff(np.append(bstarts, len(gaps)))
-        corr = np.zeros(n_blocks, dtype=np.int64)
-        corr[1:] = ids[bstarts[1:] - 1]
-        ids = ids - np.repeat(corr, reps)
-    return ids
 
 
 def decode_block(

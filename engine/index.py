@@ -21,8 +21,9 @@ Layout (mirrors the ES/Lucene shard model [public]):
   not split skewed groupBy keys, so this is load-bearing for scaling
   (SURVEY.md §7 risk 4). The merge job re-combines salted parts.
 
-The encode UDF is a grouped-map Arrow UDF (`applyInPandas`); all inner work
-is NumPy-vectorized (engine/codec.py).
+The encode UDF is a streaming `mapInPandas` kernel over the sorted shuffle
+output; each Arrow batch of term runs is one batched codec call
+(engine/codec.py encode_lists).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import BLOCK_SIZE
-from .codec import _varint_decode_starts, _varint_encode_offsets, encode_postings
+from .codec import _restart_gaps, _varint_encode_offsets, decode_rows, encode_lists
 from .corpus import corpus_base, corpus_stats, exploded_tf, term_stats
 
 SKIP_STRUCT = T.StructType(
@@ -92,6 +93,58 @@ def run_starts(key_arrays: list[np.ndarray]) -> np.ndarray:
         for v in key_arrays:
             change[1:] |= v[1:] != v[:-1]
     return np.flatnonzero(change)
+
+
+# Postings one batched decode/re-encode kernel holds decoded at once (~24 B
+# each plus sort temporaries): merge and expunge cut their Arrow batches into
+# chunks of about this many postings (weight_chunks over the df column).
+DECODE_CHUNK_POSTINGS = 1 << 21
+
+
+def weight_chunks(weights: np.ndarray, starts: np.ndarray) -> list[tuple[int, int]]:
+    """Cut rows [0, len(weights)) at run `starts` (starts[0] == 0) into
+    (lo, hi) ranges: a range ends at the first run that begins past another
+    DECODE_CHUNK_POSTINGS of summed weight, so only its last run can push it
+    over (a single heavier run stays whole)."""
+    before = np.concatenate([[0], np.cumsum(weights.astype(np.int64))])[starts]
+    new = starts[np.flatnonzero(np.diff(before // DECODE_CHUNK_POSTINGS)) + 1]
+    cuts = np.concatenate([[0], new, [len(weights)]]).tolist()
+    return list(zip(cuts[:-1], cuts[1:]))
+
+
+def complete_runs(batches, cols: list[str], keys: list[str], weight: str | None = None):
+    """Stream `mapInPandas` batches sorted by `keys` as (column arrays, run
+    starts) chunks that hold only COMPLETE key runs: a run spanning Arrow
+    batches is carried over to the next one. With `weight`, chunks are also
+    cut by weight_chunks over that column."""
+    leftover: dict[str, np.ndarray] | None = None
+
+    def cut(arrs, starts):
+        if weight is None:
+            yield arrs, starts
+            return
+        for lo, hi in weight_chunks(arrs[weight], starts):
+            sub = {c: a[lo:hi] for c, a in arrs.items()}
+            yield sub, starts[(starts >= lo) & (starts < hi)] - lo
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        arrs = {c: pdf[c].to_numpy() for c in cols}
+        if leftover is not None:
+            arrs = {c: np.concatenate([leftover[c], arrs[c]]) for c in cols}
+            leftover = None
+        starts = run_starts([arrs[c] for c in keys])
+        if len(starts) == 1:  # single (possibly incomplete) run — hold
+            leftover = arrs
+            continue
+        last = int(starts[-1])
+        # .copy() releases the batch's base arrays (a view would pin every
+        # emitted row's buffers until the next batch); copies pointers only
+        leftover = {c: arrs[c][last:].copy() for c in cols}
+        yield from cut({c: a[:last] for c, a in arrs.items()}, starts[:-1])
+    if leftover is not None and len(leftover[keys[0]]):
+        yield from cut(leftover, np.array([0]))
 
 
 def sorted_run_starts(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
@@ -148,15 +201,9 @@ def _partial_encode_fn(max_pairs: int = 1 << 22):
                             arrs["seg_id"], arrs["shard"], arrs["bucket"]))
         arrs = {c: arrs[c][order] for c in _cols}
         starts = run_starts([arrs[c] for c in _GROUP_COLS])
-        ids = arrs["doc_id"]
-        gaps = np.empty(n, dtype=np.uint64)
-        gaps[0] = np.uint64(ids[0])
-        if n > 1:
-            # run-boundary diffs may be negative — wrapped values are
-            # overwritten by the absolute restarts on the next line
-            gaps[1:] = np.diff(ids).astype(np.uint64)
-        gaps[starts] = ids[starts].astype(np.uint64)
-        doc_enc, d_off = _varint_encode_offsets(gaps, starts)
+        doc_enc, d_off = _varint_encode_offsets(
+            _restart_gaps(arrs["doc_id"], starts), starts
+        )
         tf_enc, t_off = _varint_encode_offsets(arrs["tf"].astype(np.uint64), starts)
         dl_enc, l_off = _varint_encode_offsets(arrs["dl"].astype(np.uint64), starts)
         d_b = np.append(d_off, len(doc_enc))
@@ -198,29 +245,16 @@ def _partial_encode_fn(max_pairs: int = 1 << 22):
 
 
 def _expand_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Decode a batch of partial rows back to pair rows (vectorized: the
-    batch's blobs concatenate into ONE varint stream per column; per-partial
-    delta restarts are corrected with the same searchsorted/np.repeat trick
-    as codec.decode_postings). Row order — and so group contiguity from the
+    """Decode a batch of partial rows back to pair rows with the shared
+    batched decoder (codec.decode_rows: one varint pass per stream, each
+    partial one delta run). Row order — and so group contiguity from the
     reduce-side sort — is preserved."""
-    ids_bufs = pdf["ids_enc"].to_numpy()
-    n_rows = len(ids_bufs)
-    lens = np.fromiter((len(b) for b in ids_bufs), dtype=np.int64, count=n_rows)
-    vals, vstarts = _varint_decode_starts(b"".join(ids_bufs))
-    ids = np.cumsum(vals.astype(np.int64))
-    byte_starts = np.zeros(n_rows, dtype=np.int64)
-    np.cumsum(lens[:-1], out=byte_starts[1:])
-    bstarts = np.searchsorted(vstarts, byte_starts)
-    reps = np.diff(np.append(bstarts, len(vals)))
-    corr = np.zeros(n_rows, dtype=np.int64)
-    corr[1:] = ids[bstarts[1:] - 1]
-    ids = ids - np.repeat(corr, reps)
-    from .codec import varint_decode
-
-    out = {c: np.repeat(pdf[c].to_numpy(), reps) for c in _GROUP_COLS}
-    out["doc_id"] = ids
-    out["tf"] = varint_decode(b"".join(pdf["tfs_enc"].to_numpy())).astype(np.int64)
-    out["dl"] = varint_decode(b"".join(pdf["dls_enc"].to_numpy())).astype(np.int64)
+    ids, tfs, dls, counts = decode_rows(
+        pdf["ids_enc"].to_numpy(), None, pdf["tfs_enc"].to_numpy(),
+        pdf["dls_enc"].to_numpy(),
+    )
+    out = {c: np.repeat(pdf[c].to_numpy(), counts) for c in _GROUP_COLS}
+    out.update(doc_id=ids, tf=tfs, dl=dls)
     return pd.DataFrame(out)
 
 
@@ -239,6 +273,14 @@ def _partial_merge_fn(avgdl: float, block_size: int):
     return fn
 
 
+def postings_frame(keys: dict[str, np.ndarray], enc: dict) -> pd.DataFrame:
+    """POSTINGS_SCHEMA frame from per-row key columns and the matching
+    codec.encode_lists columns."""
+    cols = dict(keys)
+    cols.update((c, enc[c]) for c in _POSTINGS_COLS if c not in keys)
+    return pd.DataFrame(cols, columns=_POSTINGS_COLS)
+
+
 def _encode_stream_fn(avgdl: float, block_size: int):
     """Streaming encoder for `mapInPandas` over partitions sorted by
     (bucket,shard,seg_id,part,term,doc_id).
@@ -248,48 +290,23 @@ def _encode_stream_fn(avgdl: float, block_size: int):
     GROUP, which the Zipf tail of rare single-posting terms turns into the
     dominant cost; here dispatch is per Arrow batch (~10k rows) and memory
     is bounded by one batch + the largest single run (itself bounded by
-    docs_per_shard × salting). Runs spanning batch boundaries are carried
-    over between iterations."""
+    docs_per_shard × salting). Every run of a batch is one posting list of
+    ONE codec.encode_lists call — no per-run codec call; runs spanning
+    batch boundaries are carried over (complete_runs)."""
 
     _cols = _GROUP_COLS + ["doc_id", "tf", "dl"]
 
     def fn(batches):
-        leftover: dict[str, np.ndarray] | None = None
-
-        def encode_runs(arrs: dict[str, np.ndarray], starts: np.ndarray, end: int) -> pd.DataFrame:
-            ids, tfs, dls = arrs["doc_id"], arrs["tf"], arrs["dl"]
-            bounds = np.append(starts, end)
-            rows = []
-            for i in range(len(bounds) - 1):
-                s, e = int(bounds[i]), int(bounds[i + 1])
-                enc = encode_postings(ids[s:e], tfs[s:e], dls[s:e], avgdl, block_size)
-                rows.append(
-                    (
-                        int(arrs["tid"][s]), int(arrs["bucket"][s]),
-                        int(arrs["shard"][s]), int(arrs["seg_id"][s]),
-                        int(arrs["part"][s]),
-                        enc["df"], enc["cf"], enc["doc_ids_enc"], enc["tfs_enc"],
-                        enc["dls_enc"], enc["skips"], enc["block_max"],
-                    )
-                )
-            return pd.DataFrame(rows, columns=_POSTINGS_COLS)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = {c: pdf[c].to_numpy() for c in _cols}
-            if leftover is not None:
-                arrs = {c: np.concatenate([leftover[c], arrs[c]]) for c in _cols}
-                leftover = None
-            starts = run_starts([arrs[c] for c in _GROUP_COLS])
-            if len(starts) == 1:  # single (possibly incomplete) run — hold
-                leftover = arrs
-                continue
-            last = int(starts[-1])
-            leftover = {c: arrs[c][last:].copy() for c in _cols}
-            yield encode_runs(arrs, starts[:-1], last)
-        if leftover is not None and len(leftover["tid"]):
-            yield encode_runs(leftover, np.array([0]), len(leftover["tid"]))
+        for arrs, starts in complete_runs(batches, _cols, _GROUP_COLS):
+            n = len(arrs["tid"])
+            list_ids = np.repeat(
+                np.arange(len(starts)), np.diff(np.append(starts, n))
+            )
+            enc = encode_lists(
+                arrs["doc_id"], arrs["tf"], arrs["dl"], list_ids, len(starts),
+                avgdl, block_size,
+            )
+            yield postings_frame({c: arrs[c][starts] for c in _GROUP_COLS}, enc)
 
     return fn
 

@@ -8,9 +8,11 @@ by doc_id so readers/WAND stream parts in order; bounds per-row memory for
 stop-word-class terms at 10^12-doc scale).
 
 Duplicate doc_ids across segments (a re-indexed document) resolve to the
-highest seg_id — ES upsert semantics [public]. Grouped-map Arrow UDF with
-NumPy-vectorized decode/merge/encode (mirrors Lucene segment merging
-[public: Lucene merge policy]).
+highest seg_id — ES upsert semantics [public]. A streaming `mapInPandas`
+merger decodes, merges and re-encodes a whole Arrow batch of terms at a time
+with the batched codec (engine/codec.py encode_lists / decode_rows) — no
+per-term Python (mirrors Lucene segment merging [public: Lucene merge
+policy]).
 """
 
 from __future__ import annotations
@@ -20,122 +22,84 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from . import BLOCK_SIZE
-from .codec import decode_postings, encode_postings
-from .index import POSTINGS_SCHEMA
+from .codec import decode_rows, encode_lists
+from .index import POSTINGS_SCHEMA, complete_runs, postings_frame
 
 
-_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
+def live_mask(ids: np.ndarray, dead: np.ndarray) -> np.ndarray:
+    """True where ids[i] is NOT in the sorted array `dead` (vectorized
+    searchsorted membership)."""
+    if not len(dead) or not len(ids):
+        return np.ones(len(ids), dtype=bool)
+    pos = np.minimum(np.searchsorted(dead, ids), len(dead) - 1)
+    return dead[pos] != ids
 
 
-def _merge_one_term(
-    tid, bucket, shard, seg_col, skips_col, de_col, te_col, le_col,
-    avgdl, block_size, max_postings_per_row, drop_ids=None,
-):
-    """Merge one (bucket, shard, tid)'s rows, given as column-array slices
-    (zero-copy NumPy views — no per-group DataFrame materialization)."""
-    ids_all, tfs_all, dls_all, segs_all = [], [], [], []
-    for i in range(len(seg_col)):
-        # decode_postings reads only the doc byte offsets out of skips and
-        # accepts Arrow-struct dicts directly — no per-block tuple conversion
-        ids, tfs, dls = decode_postings(de_col[i], te_col[i], le_col[i], skips_col[i])
-        ids_all.append(ids)
-        tfs_all.append(tfs)
-        dls_all.append(dls)
-        segs_all.append(np.full(len(ids), seg_col[i], dtype=np.int64))
-    ids = np.concatenate(ids_all)
-    tfs = np.concatenate(tfs_all)
-    dls = np.concatenate(dls_all)
-    segs = np.concatenate(segs_all)
+def _merge_runs(
+    arrs: dict[str, np.ndarray], starts: np.ndarray, avgdl: float,
+    block_size: int, max_postings_per_row: int, drop_ids=None,
+) -> pd.DataFrame:
+    """Merge every (bucket, shard, tid) run of a chunk of posting rows with
+    one batched decode and one batched encode (engine/codec.py)."""
+    n_rows = len(arrs["tid"])
+    ids, tfs, dls, counts = decode_rows(
+        arrs["doc_ids_enc"], arrs["skips"], arrs["tfs_enc"], arrs["dls_enc"]
+    )
+    run_of_row = np.zeros(n_rows, dtype=np.int64)
+    run_of_row[starts[1:]] = 1
+    run = np.repeat(np.cumsum(run_of_row), counts)
+    seg = np.repeat(arrs["seg_id"].astype(np.int64), counts)
 
-    # sort by (doc_id, seg_id); keep the LAST occurrence per doc_id
-    order = np.lexsort((segs, ids))
-    ids, tfs, dls = ids[order], tfs[order], dls[order]
+    # sort by (run, doc_id, seg_id) — stable, so equal keys keep row order —
+    # and keep the LAST occurrence of a doc_id per run: the highest segment
+    order = np.lexsort((seg, ids, run))
+    ids, tfs, dls, run = ids[order], tfs[order], dls[order], run[order]
     keep = np.ones(len(ids), dtype=bool)
-    keep[:-1] = ids[:-1] != ids[1:]
-    ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
-
-    if drop_ids is not None and len(drop_ids) and len(ids):
+    keep[:-1] = (ids[:-1] != ids[1:]) | (run[:-1] != run[1:])
+    if drop_ids is not None:
         # expunge deletes during the merge (Lucene merges drop docs the
         # live-docs bitset marks dead [public]); drop_ids is sorted
-        pos = np.searchsorted(drop_ids, ids)
-        pos[pos >= len(drop_ids)] = len(drop_ids) - 1
-        live = drop_ids[pos] != ids
-        ids, tfs, dls = ids[live], tfs[live], dls[live]
+        keep &= live_mask(ids, drop_ids)
+    ids, tfs, dls, run = ids[keep], tfs[keep], dls[keep], run[keep]
 
-    rows = []
-    n = len(ids)
-    if n == 0:
-        return rows
-    n_parts = max(1, -(-n // max_postings_per_row))
-    for p in range(n_parts):
-        s, e = p * max_postings_per_row, min((p + 1) * max_postings_per_row, n)
-        enc = encode_postings(ids[s:e], tfs[s:e], dls[s:e], avgdl, block_size)
-        rows.append(
-            (
-                tid, int(bucket), int(shard), 0, p,
-                enc["df"], enc["cf"], enc["doc_ids_enc"], enc["tfs_enc"],
-                enc["dls_enc"], enc["skips"], enc["block_max"],
-            )
-        )
-    return rows
+    # range-split each run into parts of ≤ max_postings_per_row postings:
+    # part = a posting's position in its run // max_postings_per_row
+    run_n = np.bincount(run, minlength=len(starts))
+    first = np.zeros(len(starts), dtype=np.int64)
+    np.cumsum(run_n[:-1], out=first[1:])
+    part = (np.arange(len(ids)) - np.repeat(first, run_n)) // max_postings_per_row
+    new_list = np.ones(len(ids), dtype=bool)
+    new_list[1:] = (run[1:] != run[:-1]) | (part[1:] != part[:-1])
+    lstarts = np.flatnonzero(new_list)
+    enc = encode_lists(
+        ids, tfs, dls, np.cumsum(new_list) - 1, len(lstarts), avgdl, block_size
+    )
+    row = starts[run[lstarts]]
+    keys = {c: arrs[c][row] for c in ("tid", "bucket", "shard")}
+    keys.update(seg_id=np.zeros(len(lstarts), dtype=np.int32), part=part[lstarts])
+    return postings_frame(keys, enc)
 
 
 def _merge_stream_fn(
     avgdl: float, block_size: int, max_postings_per_row: int, drop_bc=None
 ):
     """Streaming merger for `mapInPandas` over partitions sorted by
-    (bucket,shard,tid). All rows of a (bucket,shard,tid) land in the same
-    partition (the shuffle key is a pure function of them), so each run is a
-    complete merge group; runs spanning Arrow batches are carried over.
-    No per-term Arrow dispatch (see index._encode_stream_fn).
-
-    Works on per-column NumPy arrays: batch → arrays once, run slices are
-    zero-copy views, and leftovers concatenate pointer arrays — pd.concat /
-    .iloc row-frame copies of the big binary buffers are gone."""
-    from .index import run_starts
-
+    (bucket,shard,tid,seg_id,part). All rows of a (bucket,shard,tid) land in
+    the same partition (the shuffle key is a pure function of them), so each
+    run is a complete merge group; runs spanning Arrow batches are carried
+    over (index.complete_runs). No per-term Arrow dispatch and no per-term
+    codec call: each chunk of complete runs — cut at ~2M postings by the df
+    column, so decoded memory stays bounded — is ONE batched decode, one
+    lexsort over (run, doc_id, seg_id), and ONE batched encode."""
     keys = ["bucket", "shard", "tid"]
-    cols = ["bucket", "shard", "tid", "seg_id", "skips", "doc_ids_enc", "tfs_enc", "dls_enc"]
+    cols = keys + ["seg_id", "df", "skips", "doc_ids_enc", "tfs_enc", "dls_enc"]
 
     def fn(batches):
-        leftover: dict[str, np.ndarray] | None = None
         drop_ids = drop_bc.value if drop_bc is not None else None
-
-        def merge_runs(arrs: dict[str, np.ndarray], starts: np.ndarray, end: int) -> pd.DataFrame:
-            bounds = np.append(starts, end)
-            tid_a, b_a, sh_a = arrs["tid"], arrs["bucket"], arrs["shard"]
-            seg_a, sk_a = arrs["seg_id"], arrs["skips"]
-            de_a, te_a, le_a = arrs["doc_ids_enc"], arrs["tfs_enc"], arrs["dls_enc"]
-            rows: list[tuple] = []
-            for i in range(len(bounds) - 1):
-                s, e = int(bounds[i]), int(bounds[i + 1])
-                rows.extend(
-                    _merge_one_term(
-                        int(tid_a[s]), int(b_a[s]), int(sh_a[s]),
-                        seg_a[s:e], sk_a[s:e], de_a[s:e], te_a[s:e], le_a[s:e],
-                        avgdl, block_size, max_postings_per_row, drop_ids,
-                    )
-                )
-            return pd.DataFrame(rows, columns=_COLS)
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            arrs = {c: pdf[c].to_numpy() for c in cols}
-            if leftover is not None:
-                arrs = {c: np.concatenate([leftover[c], arrs[c]]) for c in cols}
-                leftover = None
-            starts = run_starts([arrs[c] for c in keys])
-            if len(starts) == 1:
-                leftover = arrs
-                continue
-            last = int(starts[-1])
-            # .copy() releases the batch's base arrays (a view would pin every
-            # emitted row's buffers until the next batch); copies pointers only
-            leftover = {c: arrs[c][last:].copy() for c in cols}
-            yield merge_runs(arrs, starts[:-1], last)
-        if leftover is not None and len(leftover["tid"]):
-            yield merge_runs(leftover, np.array([0]), len(leftover["tid"]))
+        for arrs, starts in complete_runs(batches, cols, keys, weight="df"):
+            yield _merge_runs(
+                arrs, starts, avgdl, block_size, max_postings_per_row, drop_ids
+            )
 
     return fn
 

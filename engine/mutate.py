@@ -25,10 +25,16 @@ fresh internal doc id. The Spark-first re-expression:
   under-bound and break WAND's pruning soundness). term_dict df/cf and
   doc_stats/manifest stats are rebuilt distributed;
 * `update_by_query` tombstones the matched docs and reindexes their
-  transformed text as a NEW segment under fresh doc_ids in fresh shards,
-  then runs the ordinary segment merge with the tombstones as drop_ids —
-  the result is value-identical to a from-scratch build over the
-  transformed corpus (tests/test_mutate.py pins this equivalence).
+  transformed text as a NEW segment under fresh doc_ids in fresh shards;
+  the old postings go through the same (bucket, shard) expunge cogroup
+  (`expunge_postings`, under the post-update avgdl), then the ordinary
+  segment merge folds in the new segment with no drop list — the result is
+  value-identical to a fresh build over the transformed corpus
+  (tests/test_mutate.py pins this equivalence).
+
+Every posting rewrite here (expunge, and the match scan of
+delete/update-by-query) runs the batched codec (engine/codec.py
+encode_lists / decode_rows) over a whole batch of posting rows per call.
 """
 
 from __future__ import annotations
@@ -41,9 +47,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import decode_doc_ids, decode_postings, encode_postings
-from .index import POSTINGS_SCHEMA, IndexManifest, term_id
-from .searcher import LoadedIndex, _by_tid
+from .codec import decode_rows, encode_lists
+from .index import POSTINGS_SCHEMA, IndexManifest, postings_frame, term_id, weight_chunks
+from .merge import live_mask
+from .searcher import LoadedIndex
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
@@ -55,20 +62,20 @@ _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 def _shard_match_fn(tids: list[int], neg_tids: list[int], mode: str):
     """Per-shard body: one shard's posting rows → matching doc_ids.
     No scoring, no heap, no k — a pure posting-list union/intersection, so
-    delete-by-query never pays top-k machinery for an unbounded match set."""
+    delete-by-query never pays top-k machinery for an unbounded match set.
+    Every row's doc stream decodes in ONE batched call (codec.decode_rows,
+    doc ids only)."""
 
     def fn(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
-        by_tid = _by_tid(pdf)
+        tid_a = pdf["tid"].to_numpy()
+        ids_all, _, _, counts = decode_rows(
+            pdf["doc_ids_enc"].to_numpy(), pdf["skips"].to_numpy()
+        )
+        owner = np.repeat(tid_a, counts)
+        have = set(tid_a.tolist())
 
         def ids_of(t: int) -> np.ndarray | None:
-            rows = by_tid.get(t)
-            if rows is None:
-                return None
-            parts = [
-                decode_doc_ids(r.doc_ids_enc, r.skips)
-                for r in rows.itertuples(index=False)
-            ]
-            return np.concatenate(parts)
+            return ids_all[owner == t] if t in have else None
 
         per_term = [ids_of(t) for t in tids]
         present = [p for p in per_term if p is not None]
@@ -153,34 +160,30 @@ def delete_by_query(index: LoadedIndex, query: str, mode: str = "or") -> int:
 def _expunge_pdf(
     pdf: pd.DataFrame, drop: np.ndarray, avgdl: float, block_size: int
 ) -> pd.DataFrame:
-    """Rewrite one batch of posting rows: decode → drop dead ids (sorted
-    `drop`, searchsorted membership) → re-encode with the post-delete avgdl.
-    Rows whose every posting died are dropped."""
-    cols = {c: pdf[c].to_numpy() for c in _POSTINGS_COLS}
-    out = []
-    for i in range(len(pdf)):
-        ids, tfs, dls = decode_postings(
-            cols["doc_ids_enc"][i], cols["tfs_enc"][i],
-            cols["dls_enc"][i], cols["skips"][i],
+    """Rewrite posting rows: decode → drop dead ids (sorted `drop`,
+    searchsorted membership) → re-encode with the post-delete avgdl. Rows
+    whose every posting died are dropped. Each row is one list of a batched
+    decode and encode (engine/codec.py) — chunks of ~2M postings by the df
+    column, not one codec call per row."""
+    keys = ["tid", "bucket", "shard", "seg_id", "part"]
+    cols = {
+        c: pdf[c].to_numpy()
+        for c in keys + ["df", "doc_ids_enc", "tfs_enc", "dls_enc", "skips"]
+    }
+    frames = []
+    for lo, hi in weight_chunks(cols["df"], np.arange(len(pdf))):
+        ids, tfs, dls, counts = decode_rows(
+            cols["doc_ids_enc"][lo:hi], cols["skips"][lo:hi],
+            cols["tfs_enc"][lo:hi], cols["dls_enc"][lo:hi],
         )
-        if len(drop) and len(ids):
-            pos = np.searchsorted(drop, ids)
-            pos[pos >= len(drop)] = len(drop) - 1
-            live = drop[pos] != ids
-            ids, tfs, dls = ids[live], tfs[live], dls[live]
-        if not len(ids):
-            continue  # every posting was deleted — drop the row
-        enc = encode_postings(ids, tfs, dls, avgdl, block_size)
-        out.append(
-            (
-                int(cols["tid"][i]), int(cols["bucket"][i]),
-                int(cols["shard"][i]), int(cols["seg_id"][i]),
-                int(cols["part"][i]),
-                enc["df"], enc["cf"], enc["doc_ids_enc"], enc["tfs_enc"],
-                enc["dls_enc"], enc["skips"], enc["block_max"],
-            )
+        row = np.repeat(np.arange(hi - lo), counts)
+        live = live_mask(ids, drop)
+        enc = encode_lists(
+            ids[live], tfs[live], dls[live], row[live], hi - lo, avgdl, block_size
         )
-    return pd.DataFrame(out, columns=_POSTINGS_COLS)
+        frames.append(postings_frame({c: cols[c][lo:hi] for c in keys}, enc))
+    out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+    return out[out["df"] > 0]
 
 
 def _expunge_cogroup_fn(avgdl: float, block_size: int):

@@ -135,3 +135,141 @@ def test_block_max_is_float32_safe_upper_bound(ids):
         stored_f32 = np.float32(s[4])
         assert float(stored_f32) >= true_max
     assert float(np.float32(enc["block_max"])) >= float(impacts.max())
+
+
+# ---------------------------------------------------------------------------
+# batching boundaries: the batched core (encode_lists / decode_rows) must be
+# byte-identical to running it on a batch of one, list by list
+
+
+_SKIP_FIELDS = ("first_doc", "doc_off", "tf_off", "dl_off", "max_impact")
+
+
+@st.composite
+def _posting_batches(draw):
+    """(block_size, lists, seed): lists of unique doc ids with tf/dl values,
+    lengths straddling the block boundaries, values up to 2^40 (multi-byte
+    varints in all three streams)."""
+    bs = draw(st.sampled_from([1, 2, 4, 16, 128]))
+    length = st.sampled_from([1, bs, bs + 1, 2 * bs + 3]) | st.integers(1, 300)
+    lens = draw(st.lists(length, min_size=1, max_size=8))
+    big = draw(st.sampled_from([2**7, 2**14, 2**40]))
+    seed = draw(st.integers(0, 2**32 - 1))
+    rng = np.random.default_rng(seed)
+    lists = []
+    for n in lens:
+        ids = np.cumsum(rng.integers(1, big, n)) + int(rng.integers(0, big))
+        lists.append((rng.permutation(ids), rng.integers(1, big, n), rng.integers(1, big, n)))
+    return bs, lists, seed
+
+
+def _leb128(v: int) -> bytes:
+    out = bytearray()
+    while True:
+        byte, v = v & 0x7F, v >> 7
+        out.append(byte | (0x80 if v else 0))
+        if not v:
+            return bytes(out)
+
+
+def _reference_encode(ids, tfs, dls, avgdl, bs):
+    """Per-value Python loop reference for one list: block-restarted gaps,
+    LEB128 bytes, skip byte offsets, float32-rounded-up impact maxima per
+    block and for the whole list."""
+    from engine.codec import _f32_ceil, bm25_impact
+
+    order = np.argsort(ids, kind="stable")
+    ids, tfs, dls = ids[order].tolist(), tfs[order].tolist(), dls[order].tolist()
+    imp = bm25_impact(np.array(tfs), np.array(dls), avgdl)
+    streams, skips = [b"", b"", b""], []
+    for s in range(0, len(ids), bs):
+        skips.append((ids[s], *(len(x) for x in streams),
+                      float(_f32_ceil(imp[s:s + bs].max(keepdims=True))[0])))
+        for i in range(s, min(s + bs, len(ids))):
+            gap = ids[i] - (ids[i - 1] if i > s else 0)
+            for k, v in enumerate((gap, tfs[i], dls[i])):
+                streams[k] += _leb128(v)
+    return streams, skips, float(_f32_ceil(imp.max(keepdims=True))[0])
+
+
+@given(_posting_batches())
+@settings(max_examples=80, deadline=None)
+def test_batch_encode_decode_equals_batch_of_one(batch):
+    from engine.codec import decode_rows, encode_lists
+
+    bs, lists, seed = batch
+    avgdl = 57.5
+    lid = np.concatenate([np.full(len(ids), j) for j, (ids, _, _) in enumerate(lists)])
+    ids, tfs, dls = (np.concatenate([lst[k] for lst in lists]) for k in range(3))
+    perm = np.random.default_rng(seed).permutation(len(ids))  # interleave lists
+    enc = encode_lists(ids[perm], tfs[perm], dls[perm], lid[perm], len(lists), avgdl, bs)
+    ones = [encode_postings(i, t, d, avgdl, bs) for i, t, d in lists]
+    for one, (i, t, d) in zip(ones, lists):
+        streams, skips, list_max = _reference_encode(i, t, d, avgdl, bs)
+        assert [one["doc_ids_enc"], one["tfs_enc"], one["dls_enc"]] == streams
+        assert one["skips"] == skips and one["block_max"] == list_max
+    for j, one in enumerate(ones):
+        for c in ("doc_ids_enc", "tfs_enc", "dls_enc", "skips"):
+            assert enc[c][j] == one[c], (j, c)
+        assert float(enc["block_max"][j]) == one["block_max"]
+        assert int(enc["df"][j]) == one["df"] and int(enc["cf"][j]) == one["cf"]
+
+    # decode the concatenated rows at once; skip entries as tuples on even
+    # rows and as Arrow-struct dicts on odd rows (both reach the decoder)
+    skips = [
+        sk if j % 2 == 0 else [dict(zip(_SKIP_FIELDS, s)) for s in sk]
+        for j, sk in enumerate(enc["skips"])
+    ]
+    got_ids, got_tfs, got_dls, counts = decode_rows(
+        enc["doc_ids_enc"], skips, enc["tfs_enc"], enc["dls_enc"]
+    )
+    assert counts.tolist() == [len(i) for i, _, _ in lists]
+    only_ids = decode_rows(enc["doc_ids_enc"], skips)
+    assert only_ids[1] is None and np.array_equal(only_ids[0], got_ids)
+    at = np.concatenate([[0], np.cumsum(counts)])
+    for j, one in enumerate(ones):
+        want = decode_postings(one["doc_ids_enc"], one["tfs_enc"], one["dls_enc"], one["skips"])
+        s, e = at[j], at[j + 1]
+        for got, w in zip((got_ids[s:e], got_tfs[s:e], got_dls[s:e]), want):
+            assert np.array_equal(got, w), j
+        order = np.argsort(lists[j][0])
+        assert np.array_equal(want[0], lists[j][0][order])
+
+
+@given(_posting_batches())
+@settings(max_examples=40, deadline=None)
+def test_expunge_batch_equals_per_row_reencode(batch):
+    """The expunge kernel rewrites a whole batch of posting rows at once:
+    every surviving row equals a batch-of-one re-encode of its live postings
+    under the new avgdl, and a row that loses every posting to the drop set
+    disappears."""
+    import pandas as pd
+
+    from engine.index import POSTINGS_SCHEMA
+    from engine.mutate import _expunge_pdf
+
+    bs, lists, seed = batch
+    rng = np.random.default_rng(seed)
+    rows, drop = [], [lists[0][0]]  # row 0 loses every posting
+    for j, (ids, tfs, dls) in enumerate(lists):
+        e = encode_postings(ids, tfs, dls, 40.0, bs)
+        rows.append((j, j % 3, 0, 1, 0, e["df"], e["cf"], e["doc_ids_enc"],
+                     e["tfs_enc"], e["dls_enc"], e["skips"], e["block_max"]))
+        drop.append(ids[rng.random(len(ids)) < 0.3])
+    drop = np.unique(np.concatenate(drop))
+    pdf = pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
+    out = _expunge_pdf(pdf, drop, 33.25, bs)
+
+    want = {}
+    for j, (ids, tfs, dls) in enumerate(lists):
+        live = ~np.isin(ids, drop)
+        if live.any():
+            want[j] = encode_postings(ids[live], tfs[live], dls[live], 33.25, bs)
+    assert 0 not in want and out["tid"].tolist() == sorted(want)
+    for r in out.itertuples(index=False):
+        w = want[r.tid]
+        assert (r.bucket, r.shard, r.seg_id, r.part) == (r.tid % 3, 0, 1, 0)
+        assert (r.doc_ids_enc, r.tfs_enc, r.dls_enc) == (
+            w["doc_ids_enc"], w["tfs_enc"], w["dls_enc"])
+        assert list(r.skips) == w["skips"]
+        assert (float(r.block_max), r.df, r.cf) == (w["block_max"], w["df"], w["cf"])

@@ -276,9 +276,12 @@ def test_minhash_vectorized_batch_matches_per_doc_reference(spark):
         "delta epsilon zeta eta theta iota",  # shares boundary tokens with prev
         ("tok " * 500).strip(),               # long, heavy token repetition
     ]
+    # one partition → one Arrow batch, so adjacent docs share a batch and
+    # the boundary-window case is really exercised
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
+    ).coalesce(1)
+    assert df.rdd.getNumPartitions() == 1
     got = {
         r["id"]: list(r["mh"])
         for r in minhash_signatures(df, k=k, n=n).collect()

@@ -309,3 +309,51 @@ def test_expunge_million_row_tombstone_set(spark, index, docs, tmp_path):
         np.testing.assert_allclose(
             [s for _, s in a], [s for _, s in b], rtol=1e-9
         )
+
+
+@pytest.mark.parametrize("chunk", [None, 7])
+def test_merge_stream_matches_per_term_reference(monkeypatch, chunk):
+    """The batched merge kernel (no Spark): terms spread over two segments
+    with overlapping doc ids and two Arrow batches that split a run. Each
+    output row must equal a batch-of-one encode of the reference merge —
+    highest segment wins per doc, drop_ids vanish, lists range-split into
+    parts of max_postings_per_row — also when the batch is cut into chunks
+    of a few postings (chunk=7)."""
+    import pandas as pd
+
+    import engine.index
+    from engine.codec import encode_postings
+    from engine.index import POSTINGS_SCHEMA
+    from engine.merge import _merge_stream_fn
+
+    if chunk is not None:
+        monkeypatch.setattr(engine.index, "DECODE_CHUNK_POSTINGS", chunk)
+    rng = np.random.default_rng(5)
+    bs, maxp, avgdl = 4, 9, 21.0
+    drop = np.array([3, 17, 40], dtype=np.int64)
+    rows, want = [], []
+    for tid in range(6):
+        merged = {}
+        for seg in (0, 1):
+            ids = np.sort(rng.choice(60, size=int(rng.integers(1, 25)), replace=False))
+            tfs, dls = rng.integers(1, 9, len(ids)), rng.integers(5, 50, len(ids))
+            e = encode_postings(ids, tfs, dls, 30.0, bs)
+            rows.append((tid, 1, 0, seg, 0, e["df"], e["cf"], e["doc_ids_enc"],
+                         e["tfs_enc"], e["dls_enc"], e["skips"], e["block_max"]))
+            merged.update(zip(ids.tolist(), zip(tfs.tolist(), dls.tolist())))
+        live = sorted(d for d in merged if d not in set(drop.tolist()))
+        for p in range(0, len(live), maxp):
+            ids = np.array(live[p:p + maxp])
+            tfs = np.array([merged[d][0] for d in ids])
+            dls = np.array([merged[d][1] for d in ids])
+            want.append((tid, p // maxp, encode_postings(ids, tfs, dls, avgdl, bs)))
+    pdf = pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
+    fn = _merge_stream_fn(avgdl, bs, maxp, drop_bc=type("B", (), {"value": drop}))
+    out = pd.concat(list(fn(iter([pdf.iloc[:5], pdf.iloc[5:]]))), ignore_index=True)
+    assert [(r.tid, r.part) for r in out.itertuples()] == [(t, p) for t, p, _ in want]
+    for r, (_, _, w) in zip(out.itertuples(), want):
+        assert (r.bucket, r.shard, r.seg_id) == (1, 0, 0)
+        assert (r.doc_ids_enc, r.tfs_enc, r.dls_enc) == (
+            w["doc_ids_enc"], w["tfs_enc"], w["dls_enc"])
+        assert list(r.skips) == w["skips"]
+        assert (float(r.block_max), r.df, r.cf) == (w["block_max"], w["df"], w["cf"])
