@@ -117,8 +117,9 @@ def exploded_tf(base: DataFrame) -> DataFrame:
 def corpus_stats(doc_stats_df: DataFrame) -> tuple[int, float]:
     """C4: N (docCount), avgdl — tiny driver collect, broadcast implicitly
     as literals in downstream expressions (Lucene CollectionStatistics
-    [public])."""
+    [public]). An empty corpus gives (0, 0.0)."""
     row = doc_stats_df.agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl")
     ).collect()[0]
-    return int(row["n"]), float(row["avgdl"])
+    n = int(row["n"])
+    return n, (float(row["avgdl"]) if n else 0.0)

@@ -24,12 +24,18 @@ Layout (mirrors the ES/Lucene shard model [public]):
 The encode UDF is a streaming `mapInPandas` kernel over the sorted shuffle
 output; each Arrow batch of term runs is one batched codec call
 (engine/codec.py encode_lists).
+
+Every writer of an index — this build, streaming compaction and the
+expunge / update-by-query rewrites — publishes it through `publish_index`,
+and every reader opens its tables with the declared schemas below
+(`read_index_table`).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from dataclasses import dataclass
 
 import numpy as np
@@ -40,7 +46,7 @@ from pyspark.sql import types as T
 
 from . import BLOCK_SIZE
 from .codec import _restart_gaps, _varint_encode_offsets, decode_rows, encode_lists
-from .corpus import corpus_base, corpus_stats, exploded_tf, term_stats
+from .corpus import corpus_base, exploded_tf, term_stats
 
 SKIP_STRUCT = T.StructType(
     [
@@ -77,6 +83,35 @@ POSTINGS_SCHEMA = T.StructType(
 
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 _GROUP_COLS = ["bucket", "shard", "seg_id", "part", "tid"]
+
+TERM_DICT_SCHEMA = T.StructType(
+    [
+        T.StructField("term", T.StringType()),
+        T.StructField("tid", T.LongType()),
+        T.StructField("df", T.LongType()),
+        T.StructField("cf", T.LongType()),
+        T.StructField("bucket", T.IntegerType()),
+    ]
+)
+DOC_STATS_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("dl", T.IntegerType())]
+)
+TOMBSTONE_SCHEMA = T.StructType([T.StructField("doc_id", T.LongType())])
+
+INDEX_SCHEMAS = {
+    "postings": POSTINGS_SCHEMA,
+    "term_dict": TERM_DICT_SCHEMA,
+    "doc_stats": DOC_STATS_SCHEMA,
+    "tombstones": TOMBSTONE_SCHEMA,
+}
+
+
+def read_index_table(spark: SparkSession, root: str, name: str) -> DataFrame:
+    """An index table read with its declared schema: no footer inference,
+    and a table with no data files (an index whose every doc was deleted
+    and expunged) reads as 0 rows instead of failing. Bucket partition
+    pruning on postings is unchanged."""
+    return spark.read.schema(INDEX_SCHEMAS[name]).parquet(os.path.join(root, name))
 
 
 def term_id(term_col):
@@ -453,10 +488,84 @@ class IndexManifest:
     def to_json(self) -> str:
         return json.dumps(self.__dict__, indent=2)
 
+    def save(self) -> None:
+        """Write <root>/manifest.json atomically (tmp + os.replace): the
+        commit point of a published index."""
+        path = os.path.join(self.root, "manifest.json")
+        with open(path + ".tmp", "w") as f:
+            f.write(self.to_json())
+        os.replace(path + ".tmp", path)
+
     @staticmethod
     def load(root: str) -> "IndexManifest":
         with open(os.path.join(root, "manifest.json")) as f:
             return IndexManifest(**json.load(f))
+
+
+def _swap_in(root: str, name: str) -> None:
+    """Replace <root>/<name> with the staged <root>/<name>.tmp."""
+    final, tmp = os.path.join(root, name), os.path.join(root, name + ".tmp")
+    old = os.path.join(root, name + ".old")
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    if os.path.isdir(final):
+        os.rename(final, old)
+    os.rename(tmp, final)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def publish_index(
+    manifest: IndexManifest,
+    postings: DataFrame,
+    doc_stats: DataFrame,
+    term_stats: DataFrame | None = None,
+    terms: DataFrame | None = None,
+) -> IndexManifest:
+    """The one index writer (build_index, streaming compaction, expunge and
+    update-by-query all publish through it): postings, term_dict and
+    doc_stats under manifest.root, then manifest.json as the commit point.
+
+    Each table is written to <name>.tmp and swapped in per table; other
+    entries of the root (tombstones/, update_mapping/, _dead_snapshots/)
+    stay put. term_stats (term, df, cf) is the build's own cached
+    statistics. Writers that rewrote postings pass `terms` (a `term`
+    column, one row per term) instead: df/cf are then re-aggregated per
+    tid from the postings just written, and terms whose last posting died
+    drop out of the join. Either way the dictionary goes through
+    build_term_dict and its collision check. The narrow metadata tables
+    are sized to ~2M docs per output file (one file at fixture scale, still
+    parallel at web scale) instead of one KB-sized file per partition."""
+    from .io import write_postings_shards
+
+    spark, root = postings.sparkSession, manifest.root
+    os.makedirs(root, exist_ok=True)
+    n_files = max(1, manifest.n_docs // 2_000_000)
+    staged = os.path.join(root, "postings.tmp")
+    write_postings_shards(postings, staged)
+    reaggregated = term_stats is None
+    if reaggregated:
+        # cached: the collision check and the write both read it
+        term_stats = (
+            spark.read.schema(POSTINGS_SCHEMA).parquet(staged)
+            .groupBy("tid")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+            .join(terms.select("term", term_id(F.col("term")).alias("tid")), "tid")
+            .select("term", "df", "cf")
+            .cache()
+        )
+    tables = {"term_dict": build_term_dict(term_stats, manifest.n_buckets), "doc_stats": doc_stats}
+    for name, df in tables.items():
+        cols = [F.col(f.name).cast(f.dataType) for f in INDEX_SCHEMAS[name].fields]
+        df.select(*cols).coalesce(n_files).write.mode("overwrite").parquet(
+            os.path.join(root, name + ".tmp")
+        )
+    if reaggregated:
+        term_stats.unpersist()
+    for name in ("postings", *tables):
+        _swap_in(root, name)
+    manifest.save()
+    return manifest
 
 
 def build_index(
@@ -534,19 +643,6 @@ def build_index(
         base = stage_base().cache()
         cached = [base]
 
-    import time as _time
-
-    _prof = os.environ.get("ENGINE_PROFILE") == "1"
-    _laps: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-
-    def _lap(name: str) -> None:
-        nonlocal _t0
-        if _prof:
-            now = _time.perf_counter()
-            _laps[name] = round(now - _t0, 2)
-            _t0 = now
-
     ds = base.select("doc_id", "dl")
     # ONE agg pass: n_docs + exact avgdl (Lucene-style) + actual doc_id
     # bounds (dense 0..n−1 for refine output, but not assumed — bounds feed
@@ -559,7 +655,6 @@ def build_index(
     avgdl = float(_st["avgdl"]) if n_docs else 0.0
     doc_mn = int(_st["mn"]) if n_docs else 0
     doc_mx = int(_st["mx"]) if n_docs else -1
-    _lap("base+stats")
     if quantize_norms:
         # lossy per-doc norms (codec.quantize_norm, JVM-side twin): keep the
         # top 4 significant bits of dl; postings + doc_stats see the same
@@ -589,7 +684,6 @@ def build_index(
     ts = term_stats(tf_dl.select("term", "doc_id", "tf")).cache()
     cached.append(ts)
     hot_terms = detect_hot_terms(ts, hot_df) if hot_df is not None else []
-    _lap("hot_terms")
 
     def stage_segments():
         if n_segments <= 1:
@@ -648,42 +742,22 @@ def build_index(
         else stage_merged()
     )
 
-    from .io import write_postings_shards
-
-    os.makedirs(out_root, exist_ok=True)
-    # A3 segment sink: partition by bucket, tid-sorted within files so the
-    # per-term posting fetch is a pruned scan + pushdown range
-    write_postings_shards(merged, os.path.join(out_root, "postings"))
-    _lap("encode+merge+write")
-    # Output file sizing: these are narrow metadata tables (a few dozen
-    # bytes/row); writing them from every corpus partition yields a spray of
-    # KB-sized files plus per-task committer overhead. Target ~2M rows per
-    # output file — one file at fixture scale, still parallel at web scale.
-    n_meta_files = max(1, n_docs // 2_000_000)
-    build_term_dict(ts, n_buckets).coalesce(n_meta_files).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(out_root, "term_dict"))
-    _lap("term_dict")
-    ds.coalesce(n_meta_files).write.mode("overwrite").parquet(
-        os.path.join(out_root, "doc_stats")
+    manifest = publish_index(
+        IndexManifest(
+            root=out_root,
+            n_docs=n_docs,
+            avgdl=avgdl,
+            n_buckets=n_buckets,
+            docs_per_shard=docs_per_shard,
+            n_segments=n_segments,
+            block_size=block_size,
+            quantize_norms=quantize_norms,
+            analyzer=analyzer,
+        ),
+        merged,
+        ds,
+        term_stats=ts,
     )
-    _lap("doc_stats_sink")
-    if _prof:
-        print("ENGINE_PROFILE " + json.dumps(_laps), file=__import__("sys").stderr)
     for c in cached:
         c.unpersist()
-
-    manifest = IndexManifest(
-        root=out_root,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        n_buckets=n_buckets,
-        docs_per_shard=docs_per_shard,
-        n_segments=n_segments,
-        block_size=block_size,
-        quantize_norms=quantize_norms,
-        analyzer=analyzer,
-    )
-    with open(os.path.join(out_root, "manifest.json"), "w") as f:
-        f.write(manifest.to_json())
     return manifest

@@ -89,17 +89,6 @@ def job_build(args: argparse.Namespace) -> dict:
         .agg(_F.count("*"))
         .collect()
     )
-    _prof = os.environ.get("ENGINE_PROFILE") == "1"
-    _laps: dict[str, float] = {}
-    _t = time.perf_counter()
-
-    def _lap(name: str) -> None:
-        nonlocal _t
-        if _prof:
-            now = time.perf_counter()
-            _laps[name] = round(now - _t, 2)
-            _t = now
-
     t0 = time.perf_counter()
     # the input shape is fixed by the contract (BASELINE.json:15) — pass it
     # explicitly so the scan skips footer-sampling schema inference (a
@@ -108,9 +97,7 @@ def job_build(args: argparse.Namespace) -> dict:
         "url string, warc_ts timestamp, html binary, text string, lang string"
     )
     pages = spark.read.schema(pages_schema).parquet(args.pages)
-    _lap("read_plan")
     docs = refine_pages(pages, lang=args.lang)
-    _lap("refine_plan")
     ckpt = (
         CheckpointManager(
             spark,
@@ -135,10 +122,7 @@ def job_build(args: argparse.Namespace) -> dict:
         n_salts=args.salts,
         checkpoint=ckpt,
     )
-    _lap("build_index")
     wall = time.perf_counter() - t0
-    if _prof:
-        print("JOB_PROFILE " + json.dumps(_laps), file=sys.stderr)
     out = {
         "job": "build",
         "n_docs": manifest.n_docs,

@@ -22,8 +22,7 @@ fresh internal doc id. The Spark-first re-expression:
   sizes partition pruning also bounds expunge task memory at 10^12-doc
   scale. Block-max metadata is recomputed with the post-delete avgdl (a
   smaller avgdl RAISES per-posting impacts, so stale maxima would
-  under-bound and break WAND's pruning soundness). term_dict df/cf and
-  doc_stats/manifest stats are rebuilt distributed;
+  under-bound and break WAND's pruning soundness);
 * `update_by_query` tombstones the matched docs and reindexes their
   transformed text as a NEW segment under fresh doc_ids in fresh shards;
   the old postings go through the same (bucket, shard) expunge cogroup
@@ -35,10 +34,17 @@ fresh internal doc id. The Spark-first re-expression:
 Every posting rewrite here (expunge, and the match scan of
 delete/update-by-query) runs the batched codec (engine/codec.py
 encode_lists / decode_rows) over a whole batch of posting rows per call.
+Neither writer lays out files itself: the rewritten postings, the surviving
+doc_stats and the term strings go to index.publish_index — the writer
+build_index and streaming compaction use — which re-aggregates df/cf from
+the postings it just wrote (terms whose last posting died drop out),
+checks the dictionary for tid collisions, swaps each table in and writes
+the manifest last.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import shutil
 
@@ -48,11 +54,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import decode_rows, encode_lists
-from .index import POSTINGS_SCHEMA, IndexManifest, postings_frame, term_id, weight_chunks
+from .corpus import corpus_stats
+from .index import (
+    _POSTINGS_COLS,
+    POSTINGS_SCHEMA,
+    IndexManifest,
+    postings_frame,
+    publish_index,
+    read_index_table,
+    weight_chunks,
+)
 from .merge import live_mask
 from .searcher import LoadedIndex
-
-_POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 
 
 # ---------------------------------------------------------------------------
@@ -132,8 +145,9 @@ def write_tombstones(root: str, doc_ids: DataFrame) -> None:
 
 
 def load_tombstones(spark: SparkSession, root: str) -> DataFrame | None:
-    p = tombstone_path(root)
-    return spark.read.parquet(p).distinct() if os.path.isdir(p) else None
+    if not os.path.isdir(tombstone_path(root)):
+        return None
+    return read_index_table(spark, root, "tombstones").distinct()
 
 
 def delete_by_query(index: LoadedIndex, query: str, mode: str = "or") -> int:
@@ -237,54 +251,6 @@ def expunge_postings(
     )
 
 
-def _corpus_totals(ds: DataFrame) -> tuple[int, float]:
-    r = ds.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-    ).collect()[0]
-    n = int(r["n"])
-    return n, (float(r["s"]) / n if n else 0.0)
-
-
-def _swap_in(root: str, name: str) -> None:
-    """Atomically replace <root>/<name> with <root>/<name>.tmp."""
-    final, tmp = os.path.join(root, name), os.path.join(root, name + ".tmp")
-    old = os.path.join(root, name + ".old")
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    if os.path.isdir(final):
-        os.rename(final, old)
-    os.rename(tmp, final)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-
-
-def _rewrite_term_dict(
-    spark: SparkSession, root: str, str_map: DataFrame, n_buckets: int
-) -> None:
-    """Rebuild term_dict df/cf by aggregating the (already written) new
-    postings per tid, joined back to the term-string map; terms whose last
-    posting died drop out via the inner join."""
-    stats = (
-        spark.read.parquet(os.path.join(root, "postings.tmp"))
-        .groupBy("tid")
-        .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-    )
-    (
-        stats.join(str_map, "tid")
-        .select(
-            "term", "tid", "df", "cf",
-            F.pmod(F.col("tid"), F.lit(n_buckets)).cast("int").alias("bucket"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(root, "term_dict.tmp"))
-    )
-
-
-def _write_manifest(m: IndexManifest) -> None:
-    with open(os.path.join(m.root, "manifest.json"), "w") as f:
-        f.write(m.to_json())
-
-
 def expunge_deletes(spark: SparkSession, root: str) -> IndexManifest:
     """Physically drop tombstoned docs from the postings and refresh every
     corpus statistic (ES _forcemerge?only_expunge_deletes [public]). After
@@ -297,33 +263,17 @@ def expunge_deletes(spark: SparkSession, root: str) -> IndexManifest:
         shutil.rmtree(tombstone_path(root))
         return manifest
 
-    ds_new = spark.read.parquet(os.path.join(root, "doc_stats")).join(
-        tomb, "doc_id", "left_anti"
+    ds = read_index_table(spark, root, "doc_stats").join(tomb, "doc_id", "left_anti")
+    n_docs, avgdl = corpus_stats(ds)
+    postings = expunge_postings(
+        read_index_table(spark, root, "postings"), tomb, avgdl, manifest.block_size,
+        manifest.n_buckets, manifest.docs_per_shard,
     )
-    ds_new.write.mode("overwrite").parquet(os.path.join(root, "doc_stats.tmp"))
-    n_docs, avgdl = _corpus_totals(
-        spark.read.parquet(os.path.join(root, "doc_stats.tmp"))
+    manifest = publish_index(
+        dataclasses.replace(manifest, root=root, n_docs=n_docs, avgdl=avgdl),
+        postings, ds, terms=read_index_table(spark, root, "term_dict"),
     )
-
-    from .io import write_postings_shards
-
-    old_postings = spark.read.parquet(os.path.join(root, "postings"))
-    write_postings_shards(
-        expunge_postings(
-            old_postings, tomb, avgdl, manifest.block_size,
-            manifest.n_buckets, manifest.docs_per_shard,
-        ),
-        os.path.join(root, "postings.tmp"),
-    )
-    str_map = spark.read.parquet(os.path.join(root, "term_dict")).select("term", "tid")
-    _rewrite_term_dict(spark, root, str_map, manifest.n_buckets)
-
-    for name in ("postings", "term_dict", "doc_stats"):
-        _swap_in(root, name)
     shutil.rmtree(tombstone_path(root))
-    manifest.n_docs = n_docs
-    manifest.avgdl = avgdl
-    _write_manifest(manifest)
     return manifest
 
 
@@ -359,7 +309,6 @@ def update_by_query(
     """
     from .corpus import corpus_base, exploded_tf
     from .index import encode_segment
-    from .io import write_postings_shards
     from .merge import merge_postings
     from .refine import assign_doc_ids
 
@@ -407,11 +356,8 @@ def update_by_query(
         ).limit(0)
 
     # fresh ids in fresh shards — the "new segment" of the ES model
-    max_id = int(
-        spark.read.parquet(os.path.join(root, "doc_stats"))
-        .agg(F.max("doc_id"))
-        .collect()[0][0]
-    )
+    old_ds = read_index_table(spark, root, "doc_stats")
+    max_id = int(old_ds.agg(F.max("doc_id")).collect()[0][0])
     offset = ((max_id // manifest.docs_per_shard) + 1) * manifest.docs_per_shard
     new_docs = assign_doc_ids(
         transform(matched).select(F.col(key_col).alias("key"), "text"),
@@ -419,18 +365,11 @@ def update_by_query(
     ).withColumn("doc_id", F.col("doc_id") + F.lit(offset))
 
     base = corpus_base(new_docs.select("doc_id", "text")).cache()
-    ds_delta = base.select("doc_id", "dl")
-
     # post-update global stats: survivors + the reindexed docs
-    ds_keep = spark.read.parquet(os.path.join(root, "doc_stats")).join(
-        all_dead, "doc_id", "left_anti"
+    ds = old_ds.join(all_dead, "doc_id", "left_anti").unionByName(
+        base.select("doc_id", "dl")
     )
-    ds_keep.unionByName(ds_delta).write.mode("overwrite").parquet(
-        os.path.join(root, "doc_stats.tmp")
-    )
-    n_docs, avgdl = _corpus_totals(
-        spark.read.parquet(os.path.join(root, "doc_stats.tmp"))
-    )
+    n_docs, avgdl = corpus_stats(ds)
 
     tf_delta = exploded_tf(base)
     delta = encode_segment(
@@ -446,9 +385,8 @@ def update_by_query(
     # then the ordinary segment merge folds in the reindexed delta. The
     # expunge already re-encodes under the post-update avgdl, so the merge
     # needs no drop list at all.
-    old_postings = spark.read.parquet(os.path.join(root, "postings"))
     old_live = expunge_postings(
-        old_postings.select(*_POSTINGS_COLS), all_dead, avgdl,
+        read_index_table(spark, root, "postings"), all_dead, avgdl,
         manifest.block_size, manifest.n_buckets, manifest.docs_per_shard,
     )
     merged = merge_postings(
@@ -456,26 +394,20 @@ def update_by_query(
         avgdl,
         block_size=manifest.block_size,
     )
-    write_postings_shards(merged, os.path.join(root, "postings.tmp"))
-
     # term strings: old dictionary ∪ terms the transform introduced
-    old_td = spark.read.parquet(os.path.join(root, "term_dict"))
-    delta_strs = tf_delta.select(
-        "term", term_id(F.col("term")).alias("tid")
-    ).distinct()
-    str_map = old_td.select("term", "tid").unionByName(delta_strs).distinct()
-    _rewrite_term_dict(spark, root, str_map, manifest.n_buckets)
-
-    for name in ("postings", "term_dict", "doc_stats"):
-        _swap_in(root, name)
+    terms = (
+        read_index_table(spark, root, "term_dict").select("term")
+        .unionByName(tf_delta.select("term"))
+        .distinct()
+    )
+    manifest = publish_index(
+        dataclasses.replace(manifest, root=root, n_docs=n_docs, avgdl=avgdl, n_segments=1),
+        merged, ds, terms=terms,
+    )
     if os.path.isdir(tombstone_path(root)):
         shutil.rmtree(tombstone_path(root))
     base.unpersist()
     dead.unpersist()
-    manifest.n_docs = n_docs
-    manifest.avgdl = avgdl
-    manifest.n_segments = 1
-    _write_manifest(manifest)
 
     updated = (
         docs.join(all_dead, "doc_id", "left_anti")

@@ -494,7 +494,7 @@ _CACHE_REV = "v3"
 def _publish_dir(root: str, build_fn: Callable[[str], None]) -> None:
     """Atomic on-disk cache publish (VERDICT r04 "What's wrong" #1): build
     into a fresh `<root>.tmp-<uuid>` and rename-swap into place, mirroring
-    mutate._swap_in. The final directory therefore only ever exists
+    index._swap_in. The final directory therefore only ever exists
     COMPLETE — a concurrent reader can never observe a half-written cache
     (the reproduced FILE_NOT_EXIST race), and a second builder racing this
     one simply loses the rename and adopts the winner's output."""

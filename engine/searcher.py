@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .codec import decode_postings
-from .index import IndexManifest
+from .index import IndexManifest, read_index_table
 from .search import ParsedQuery, parse_query
 from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk, wand_tree_topk
 
@@ -194,14 +194,14 @@ class LoadedIndex:
         self.spark = spark
         self.root = root
         self.manifest = IndexManifest.load(root)
-        self.postings = spark.read.parquet(os.path.join(root, "postings"))
-        self.term_dict = spark.read.parquet(os.path.join(root, "term_dict"))
-        self.doc_stats = spark.read.parquet(os.path.join(root, "doc_stats"))
+        self.postings = read_index_table(spark, root, "postings")
+        self.term_dict = read_index_table(spark, root, "term_dict")
+        self.doc_stats = read_index_table(spark, root, "doc_stats")
         self._td_cache: dict[str, tuple[int, int]] = {}
         # delete-by-query marks (engine.mutate): applied to every search
         # until expunge_deletes folds them into the postings (ES semantics)
-        tomb = os.path.join(root, "tombstones")
-        self.tombstones = spark.read.parquet(tomb) if os.path.isdir(tomb) else None
+        tomb = os.path.isdir(os.path.join(root, "tombstones"))
+        self.tombstones = read_index_table(spark, root, "tombstones") if tomb else None
 
     def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
         """D2 term-dict seek → {term: (df, bucket, tid)} (tiny collect)."""

@@ -96,12 +96,15 @@ class IncrementalIndexer:
 
     Layout under `root`:
       postings_delta/   one parquet append per micro-batch (seg_id = batch)
-      doc_stats/        appended per batch
+      doc_stats_delta/  appended per batch
+      term_stats/       per-batch term strings (the postings carry tids)
+      url_map/, tombstones/   the cross-batch upsert state (_fold_upsert)
       state.json        {next_doc_id, n_docs, sum_dl, batches: [...]}
 
     `compact(spark)` merges all delta segments into a queryable index at
-    `root/compacted` via the same segment-merge job the batch build uses
-    (C7) — mirroring Lucene's NRT flush-then-merge lifecycle [public].
+    `root/compacted` via the segment-merge job (C7) and publishes it with
+    the same writer build_index uses (index.publish_index) — mirroring
+    Lucene's NRT flush-then-merge lifecycle [public].
 
     avgdl drift: postings bake impact block maxima computed with the avgdl
     of their batch; compact() re-encodes with the global avgdl so scores are
@@ -264,7 +267,7 @@ class IncrementalIndexer:
             os.path.join(self.root, "postings_delta", f"batch={int(batch_id)}")
         )
         ds.write.mode("overwrite").parquet(
-            os.path.join(self.root, "doc_stats", f"batch={int(batch_id)}")
+            os.path.join(self.root, "doc_stats_delta", f"batch={int(batch_id)}")
         )
         # per-batch term stats: postings carry only numeric tids, so the
         # string→tid dictionary is accumulated here and folded at compact()
@@ -290,78 +293,47 @@ class IncrementalIndexer:
 
     # -- compaction ----------------------------------------------------------
     def compact(self, spark: SparkSession) -> str:
-        """Merge all delta segments → queryable index at root/compacted
-        (manifest + term_dict + doc_stats, same layout as build_index).
+        """Merge all delta segments → queryable index at root/compacted,
+        published by the same writer as build_index (index.publish_index).
 
         Docs superseded by a cross-batch re-crawl (see _fold_upsert) are
         expunged here — the Lucene merge-drops-deleted-docs analogue
         [public: Lucene NRT]: global stats (n_docs, avgdl) come from the
         LIVE doc set, the dead postings are dropped distributed via the same
         (bucket, shard) cogroup delete_by_query's expunge uses, and df/cf
-        are re-derived from the merged live postings — so the compacted
-        index is value-identical to a batch build over the latest crawl of
-        every url."""
-        from .index import IndexManifest, build_term_dict
+        are re-derived from the merged live postings (a plain sum of the
+        per-batch term stats would still count superseded docs) — so the
+        compacted index is value-identical to a batch build over the latest
+        crawl of every url."""
+        from .corpus import corpus_stats
+        from .index import _POSTINGS_COLS, TOMBSTONE_SCHEMA, IndexManifest, publish_index
         from .merge import merge_postings
+        from .mutate import expunge_postings
 
         st = self._load_state()
-        out = os.path.join(self.root, "compacted")
         tomb_paths = [
             os.path.join(self.root, "tombstones", f"batch={b}")
             for b in st["batches"]
         ]
         tomb_paths = [p for p in tomb_paths if os.path.isdir(p)]
-        tomb = spark.read.parquet(*tomb_paths).distinct() if tomb_paths else None
-
-        ds = spark.read.parquet(os.path.join(self.root, "doc_stats")).select(
+        tomb = (
+            spark.read.schema(TOMBSTONE_SCHEMA).parquet(*tomb_paths).distinct()
+            if tomb_paths else None
+        )
+        ds = spark.read.parquet(os.path.join(self.root, "doc_stats_delta")).select(
             "doc_id", "dl"  # drop the batch partition-discovery col
         )
         if tomb is not None:
             ds = ds.join(tomb, "doc_id", "left_anti")
-        r = ds.agg(
-            F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-        ).collect()[0]
-        n_docs = int(r["n"])
-        avgdl = float(r["s"]) / max(1, n_docs)
-
+        n_docs, avgdl = corpus_stats(ds)
         raw = spark.read.parquet(os.path.join(self.root, "postings_delta"))
         if tomb is not None:
-            from .mutate import _POSTINGS_COLS, expunge_postings
-
             raw = expunge_postings(
                 raw.select(*_POSTINGS_COLS), tomb, avgdl,
                 self.block_size, self.n_buckets, self.docs_per_shard,
             )
-        merged = merge_postings(raw, avgdl, block_size=self.block_size)
-        from .io import write_postings_shards
-
-        # the ONE postings sink (A3 layout contract) — keep batch build and
-        # streaming compaction on the same code path
-        write_postings_shards(merged, os.path.join(out, "postings"))
-        # df/cf from the merged LIVE postings (a plain sum of the per-batch
-        # stats would still count superseded docs); term strings come from
-        # the accumulated per-batch term_stats dictionary
-        from .index import term_id
-
-        str_map = (
-            spark.read.parquet(os.path.join(self.root, "term_stats"))
-            .select("term")
-            .distinct()
-            .withColumn("tid", term_id(F.col("term")))
-        )
-        ts = (
-            spark.read.parquet(os.path.join(out, "postings"))
-            .groupBy("tid")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            .join(str_map, "tid")
-            .select("term", "df", "cf")
-        )
-        build_term_dict(ts, self.n_buckets).write.mode("overwrite").parquet(
-            os.path.join(out, "term_dict")
-        )
-        ds.write.mode("overwrite").parquet(os.path.join(out, "doc_stats"))
         manifest = IndexManifest(
-            root=out,
+            root=os.path.join(self.root, "compacted"),
             n_docs=n_docs,
             avgdl=avgdl,
             n_buckets=self.n_buckets,
@@ -369,9 +341,13 @@ class IncrementalIndexer:
             n_segments=len(st["batches"]),
             block_size=self.block_size,
         )
-        with open(os.path.join(out, "manifest.json"), "w") as f:
-            f.write(manifest.to_json())
-        return out
+        # term strings come from the accumulated per-batch term_stats
+        terms = spark.read.parquet(os.path.join(self.root, "term_stats")).select("term")
+        publish_index(
+            manifest, merge_postings(raw, avgdl, block_size=self.block_size), ds,
+            terms=terms.distinct(),
+        )
+        return manifest.root
 
 
 def streaming_eql_sequence(

@@ -1,11 +1,19 @@
-"""Byte-identity golden for the posting write path.
+"""Byte-identity golden for the index write path.
 
 Runs every kernel that writes posting rows — the index build (raw-pair and
 map-side-partial encoders, bulk and decode/re-encode segment merge), a
 part-splitting merge with a drop set, streaming compaction with a cross-batch
-re-crawl, and delete_by_query + expunge_deletes — over small seeded corpora,
-and records a sha256 (first 64 bits) per (tid, shard, part) of the row's
-(doc_ids_enc, tfs_enc, dls_enc, skips, block_max, df, cf).
+re-crawl, delete_by_query + expunge_deletes, and delete_by_query +
+update_by_query — over small seeded corpora, and records a sha256 (first 64
+bits) per (tid, shard, part) of the row's (doc_ids_enc, tfs_enc, dls_enc,
+skips, block_max, df, cf).
+
+Every case that publishes an index also gets a `<case>.tables` entry: a
+sha256 of the sorted term_dict rows (term, tid, df, cf, bucket), one of the
+sorted doc_stats rows (doc_id, dl), and the manifest fields other than
+`root`, with avgdl as its repr (so the float's bits are pinned). The update
+runs on the build_index index, so its entries are `build_index.update_by_query`
+and `build_index.update_by_query.tables`.
 
 Write the golden with `python tests/gen_postings_digest.py` and commit
 tests/golden/postings_digest.json; tests/test_postings_digest.py asserts it.
@@ -51,6 +59,27 @@ def postings_digest(postings) -> dict[str, str]:
     return dict(sorted(out.items()))
 
 
+def _rows_digest(rows) -> str:
+    return hashlib.sha256(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest()[:16]
+
+
+def table_digests(spark, root: str) -> dict[str, str]:
+    """Digests of a published index's term_dict and doc_stats rows, and its
+    manifest fields (root excluded, avgdl as repr)."""
+    from engine.index import IndexManifest
+
+    def rows(name, cols):
+        return spark.read.parquet(os.path.join(root, name)).select(*cols).collect()
+
+    m = IndexManifest.load(root).__dict__
+    fields = {k: (repr(v) if k == "avgdl" else v) for k, v in m.items() if k != "root"}
+    return {
+        "term_dict": _rows_digest(rows("term_dict", ["term", "tid", "df", "cf", "bucket"])),
+        "doc_stats": _rows_digest(rows("doc_stats", ["doc_id", "dl"])),
+        "manifest": json.dumps(fields, sort_keys=True),
+    }
+
+
 def _recrawl_batches(seed: int = 7) -> tuple[pd.DataFrame, pd.DataFrame]:
     """Two page batches; the second re-crawls 12 urls of the first with
     newer text (another page's), which compact() must supersede."""
@@ -67,6 +96,8 @@ def _recrawl_batches(seed: int = 7) -> tuple[pd.DataFrame, pd.DataFrame]:
 
 
 def digests(spark, work: str) -> dict[str, dict[str, str]]:
+    from pyspark.sql import functions as F
+
     from engine import mutate
     from engine.index import IndexManifest, build_index
     from engine.merge import merge_postings
@@ -85,6 +116,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
     bulk = os.path.join(work, "bulk")
     m = build_index(spark, docs, bulk, n_buckets=4, docs_per_shard=128, block_size=16)
     out["build_index"] = postings_digest(read(bulk))
+    out["build_index.tables"] = table_digests(spark, bulk)
 
     # map-side partial encoder + decode/re-encode merge of 2 segments with
     # hot-term salting
@@ -94,6 +126,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         hot_df=40, n_salts=3, block_size=8, bulk_merge=False, partial_encode=True,
     )
     out["build_index_merge"] = postings_digest(read(merged))
+    out["build_index_merge.tables"] = table_digests(spark, merged)
 
     # merge that splits long lists into parts and drops every 7th doc
     drop = list(range(0, m.n_docs, 7))
@@ -101,6 +134,17 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         merge_postings(read(bulk), m.avgdl, block_size=16,
                        max_postings_per_row=40, drop_ids=drop)
     )
+
+    # delete_by_query, then update_by_query on the same index: the update
+    # folds the prior tombstones in, reindexes every 5th doc under fresh ids
+    # (a new shard) and adds one new term
+    assert mutate.delete_by_query(LoadedIndex(spark, bulk), "w020") > 0
+    mutate.update_by_query(
+        spark, bulk, docs, F.col("doc_id") % 5 == 0,
+        lambda d: d.withColumn("text", F.concat("text", F.lit(" zzupdated"))),
+    )
+    out["build_index.update_by_query"] = postings_digest(read(bulk))
+    out["build_index.update_by_query.tables"] = table_digests(spark, bulk)
     docs.unpersist()
 
     # streaming: 2 micro-batches with a re-crawl, then compact()
@@ -110,6 +154,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         inc.process_batch(spark.createDataFrame(b, PAGES_SCHEMA), i)
     compacted = inc.compact(spark)
     out["compact"] = postings_digest(read(compacted))
+    out["compact.tables"] = table_digests(spark, compacted)
 
     # delete_by_query + expunge_deletes on the compacted index
     n = mutate.delete_by_query(LoadedIndex(spark, compacted), "w010")
@@ -117,6 +162,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
     mutate.expunge_deletes(spark, compacted)
     assert IndexManifest.load(compacted).n_docs > 0
     out["expunge"] = postings_digest(read(compacted))
+    out["expunge.tables"] = table_digests(spark, compacted)
     return out
 
 

@@ -6,6 +6,7 @@ merge); expunge == from-scratch build over survivors; update_by_query ==
 from-scratch build over the transformed corpus (keys compared, ids differ).
 """
 
+import os
 import shutil
 
 import numpy as np
@@ -13,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from engine import mutate
-from engine.index import build_index
+from engine.index import IndexManifest, build_index
 from engine.io import read_fixture
 from engine.searcher import LoadedIndex
 
@@ -47,6 +48,19 @@ def index(spark, docs, tmp_path):
 
 def _hits(df):
     return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
+
+
+def assert_published_only(root):
+    """The index writer's commit protocol: no staged (*.tmp) or displaced
+    (*.old) table and no manifest.json.tmp is left in the root, and the
+    metadata tables have at most n_meta_files (~2M docs per file) data
+    files each."""
+    left = [e for e in os.listdir(root) if e.endswith((".tmp", ".old"))]
+    assert not left, left
+    n_meta_files = max(1, IndexManifest.load(root).n_docs // 2_000_000)
+    for table in ("term_dict", "doc_stats"):
+        files = [f for f in os.listdir(os.path.join(root, table)) if f.endswith(".parquet")]
+        assert 1 <= len(files) <= n_meta_files, (table, files)
 
 
 def test_match_doc_ids(spark, index, docs):
@@ -107,6 +121,43 @@ def test_expunge_equals_fresh_build(spark, index, docs, tmp_path):
     got = {r["term"]: (r["df"], r["cf"]) for r in expunged.term_dict.collect()}
     want = {r["term"]: (r["df"], r["cf"]) for r in fresh.term_dict.collect()}
     assert got == want
+
+
+def test_writers_leave_only_published_tables(spark, index, docs):
+    """build_index, expunge_deletes and update_by_query all publish through
+    the one writer: per-table staging is swapped in and cleaned up, and the
+    metadata tables are coalesced (compaction: tests/test_streaming.py)."""
+    assert_published_only(index.root)
+    assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
+    mutate.expunge_deletes(spark, index.root)
+    assert_published_only(index.root)
+    predicate = F.col("doc_id") % 7 == 0
+
+    def transform(matched):
+        return matched.withColumn("text", F.concat(F.col("text"), F.lit(" zzwriter")))
+
+    mutate.update_by_query(spark, index.root, docs, predicate, transform)
+    assert_published_only(index.root)
+    assert _hits(LoadedIndex(spark, index.root).search("zzwriter", k=3))
+
+
+def test_expunge_every_doc_deleted(spark, tmp_path):
+    """An index whose every doc is deleted expunges to an empty index that
+    still opens and answers searches with no rows."""
+    docs = spark.createDataFrame(
+        [(0, "common alpha"), (1, "common beta"), (2, "common gamma")], "doc_id long, text string"
+    )
+    idx = _build(spark, docs, str(tmp_path / "all_dead"))
+    assert mutate.delete_by_query(idx, "common") == 3
+    m = mutate.expunge_deletes(spark, idx.root)
+    saved = IndexManifest.load(idx.root)
+    assert (m.n_docs, m.avgdl) == (saved.n_docs, saved.avgdl) == (0, 0.0)
+    empty = LoadedIndex(spark, idx.root)
+    assert empty.tombstones is None
+    assert empty.postings.count() == empty.term_dict.count() == empty.doc_stats.count() == 0
+    for q in ("common", "alpha beta"):
+        assert _hits(empty.search(q, k=10)) == []
+    assert empty.search_many({"q": "common"}, k=10).count() == 0
 
 
 def test_update_by_query_equals_fresh_build_on_transformed(spark, docs, tmp_path):

@@ -19,6 +19,7 @@ from engine.streaming import (
     stream_pages,
     windowed_counts,
 )
+from tests.test_mutate import assert_published_only
 
 
 def _write_pages_files(pdf, path, n_files):
@@ -158,6 +159,7 @@ def test_incremental_index_matches_batch_build(spark, pages_dir, tmp_path):
     st = idx._load_state()
     assert len(st["batches"]) == 3, st
     compacted = idx.compact(spark)
+    assert_published_only(compacted)
     inc = LoadedIndex(spark, compacted)
 
     batch_root = str(tmp_path / "batch")
@@ -169,8 +171,6 @@ def test_incremental_index_matches_batch_build(spark, pages_dir, tmp_path):
     assert inc.manifest.n_docs == bat.manifest.n_docs
     assert abs(inc.manifest.avgdl - bat.manifest.avgdl) < 1e-9
 
-    # map each path's doc_id → url for comparison
-    inc_docs = spark.read.parquet(os.path.join(root, "doc_stats"))
     for query in ["table scan", "merge join order", "the"]:
         a = inc.search(query, k=10).collect()
         b = bat.search(query, k=10).collect()
