@@ -498,8 +498,11 @@ class IndexManifest:
 
     @staticmethod
     def load(root: str) -> "IndexManifest":
+        """The manifest under `root`, rooted where it was read from: an
+        index built in a staging directory and renamed into place keeps
+        the staging path in its saved `root`."""
         with open(os.path.join(root, "manifest.json")) as f:
-            return IndexManifest(**json.load(f))
+            return IndexManifest(**{**json.load(f), "root": root})
 
 
 def _swap_in(root: str, name: str) -> None:
@@ -513,6 +516,10 @@ def _swap_in(root: str, name: str) -> None:
     os.rename(tmp, final)
     if os.path.isdir(old):
         shutil.rmtree(old)
+
+
+# docs per output file of the narrow metadata tables (term_dict, doc_stats)
+META_FILE_DOCS = 2_000_000
 
 
 def publish_index(
@@ -535,12 +542,17 @@ def publish_index(
     drop out of the join. Either way the dictionary goes through
     build_term_dict and its collision check. The narrow metadata tables
     are sized to ~2M docs per output file (one file at fixture scale, still
-    parallel at web scale) instead of one KB-sized file per partition."""
+    parallel at web scale) instead of one KB-sized file per partition.
+
+    term_dict is range-partitioned by term and sorted within each file, so
+    file and row-group term ranges do not overlap and the driver-side seek
+    (LoadedIndex._lookup, a filtered pyarrow read) prunes to the row groups
+    whose footer min/max term range holds a wanted term."""
     from .io import write_postings_shards
 
     spark, root = postings.sparkSession, manifest.root
     os.makedirs(root, exist_ok=True)
-    n_files = max(1, manifest.n_docs // 2_000_000)
+    n_files = max(1, manifest.n_docs // META_FILE_DOCS)
     staged = os.path.join(root, "postings.tmp")
     write_postings_shards(postings, staged)
     reaggregated = term_stats is None
@@ -557,7 +569,12 @@ def publish_index(
     tables = {"term_dict": build_term_dict(term_stats, manifest.n_buckets), "doc_stats": doc_stats}
     for name, df in tables.items():
         cols = [F.col(f.name).cast(f.dataType) for f in INDEX_SCHEMAS[name].fields]
-        df.select(*cols).coalesce(n_files).write.mode("overwrite").parquet(
+        df = df.select(*cols)
+        if name == "term_dict":
+            df = df.repartitionByRange(n_files, "term").sortWithinPartitions("term")
+        else:
+            df = df.coalesce(n_files)
+        df.write.mode("overwrite").parquet(
             os.path.join(root, name + ".tmp")
         )
     if reaggregated:

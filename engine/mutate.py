@@ -58,6 +58,7 @@ from .corpus import corpus_stats
 from .index import (
     _POSTINGS_COLS,
     POSTINGS_SCHEMA,
+    TOMBSTONE_SCHEMA,
     IndexManifest,
     postings_frame,
     publish_index,
@@ -123,9 +124,9 @@ def match_doc_ids(index: LoadedIndex, query: str, mode: str = "or") -> DataFrame
     (q,), found = index._parse([query])
     spec = index._flat_spec("", q, found, 0, mode)
     if spec is None:
-        return index.spark.createDataFrame([], "doc_id long")
+        return index.spark.createDataFrame([], TOMBSTONE_SCHEMA)
     fn = _shard_match_fn(list(spec.pos.values()), list(spec.neg.values()), mode)
-    return index._shard_frame([spec], fn, "doc_id long")
+    return index._shard_frame([spec], fn, TOMBSTONE_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

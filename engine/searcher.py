@@ -2,9 +2,12 @@
 
 Mirrors the ES query-then-fetch search lifecycle [public]:
   analyze query (same analyzer as indexing)
-   → term-dict lookup (tiny driver collect: global df / bucket per term)
-   → partition-pruned posting fetch (`bucket IN (...) AND term IN (...)`
-     reaches the Parquet scan as partition pruning + predicate pushdown)
+   → term-dict seek on the driver, no Spark job: one filtered pyarrow read
+     of term_dict that skips row groups by their footer min/max term
+     (global df / bucket / tid per term)
+   → partition-pruned posting fetch (one SQL-text `bucket IN (...) AND
+     tid IN (...)` predicate reaches the Parquet scan as partition pruning
+     + predicate pushdown)
    → per-shard block-max WAND top-k inside a grouped Arrow UDF
    → coordinating merge: global TakeOrderedAndProject(k, score DESC, doc ASC)
 
@@ -28,16 +31,22 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .codec import decode_postings
-from .index import IndexManifest, read_index_table
+from .index import TOMBSTONE_SCHEMA, IndexManifest, read_index_table
 from .search import ParsedQuery, parse_query
 from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk, wand_tree_topk
 
-TOPK_SCHEMA = "doc_id long, score double"
-BATCH_TOPK_SCHEMA = "qid string, doc_id long, score double"
+# StructTypes, not DDL strings: a DDL string is parsed in the JVM on every call
+TOPK_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
+)
+BATCH_TOPK_SCHEMA = T.StructType([T.StructField("qid", T.StringType()), *TOPK_SCHEMA.fields])
+# the posting columns the per-shard bodies read (bucket only prunes)
+_SCAN_COLS = ["bucket", "shard", "tid", "part", "doc_ids_enc", "tfs_enc", "dls_enc", "skips"]
 
 
 def _pin_shard_parallelism(df):
@@ -197,18 +206,43 @@ class LoadedIndex:
         self.postings = read_index_table(spark, root, "postings")
         self.term_dict = read_index_table(spark, root, "term_dict")
         self.doc_stats = read_index_table(spark, root, "doc_stats")
-        self._td_cache: dict[str, tuple[int, int]] = {}
+        # not a module-level import: every Python worker running a shard UDF
+        # imports this module, and none of them reads term_dict
+        import pyarrow.dataset as ds
+
+        # the driver-side terms index: a pyarrow dataset over the term_dict
+        # files, whose scans prune row groups by their footer min/max term
+        self._td_files = ds.dataset(os.path.join(root, "term_dict"), format="parquet")
+        self._td_cache: dict[str, tuple[int, int, int]] = {}
+        # planned once, reused by every query: the pruned posting scan and
+        # the coordinator's sort order (each DataFrame/Column call is a py4j
+        # round trip)
+        self._scan = self.postings.select(*_SCAN_COLS)
+        self._order = (F.col("score").desc(), F.col("doc_id").asc())
         # delete-by-query marks (engine.mutate): applied to every search
         # until expunge_deletes folds them into the postings (ES semantics)
         tomb = os.path.isdir(os.path.join(root, "tombstones"))
         self.tombstones = read_index_table(spark, root, "tombstones") if tomb else None
 
     def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
-        """D2 term-dict seek → {term: (df, bucket, tid)} (tiny collect)."""
+        """D2 term-dict seek → {term: (df, bucket, tid)}, on the driver with
+        no Spark job. Cache misses are one filtered pyarrow read: the range
+        bounds let the scan skip every row group whose [min, max] term
+        statistics miss [min(missing), max(missing)] (pyarrow prunes on
+        comparisons, not on `isin`), so a single-term miss reads one row
+        group of the sorted term_dict publish_index writes, and an index
+        with any other layout is still answered exactly."""
         missing = [t for t in terms if t not in self._td_cache]
         if missing:
-            for r in self.term_dict.filter(F.col("term").isin(missing)).collect():
-                self._td_cache[r["term"]] = (int(r["df"]), int(r["bucket"]), int(r["tid"]))
+            import pyarrow.dataset as ds
+
+            term = ds.field("term")
+            hits = self._td_files.to_table(
+                columns=["term", "df", "bucket", "tid"],
+                filter=term.isin(missing) & (term >= min(missing)) & (term <= max(missing)),
+            )
+            cols = (hits[c].to_pylist() for c in ("term", "df", "bucket", "tid"))
+            self._td_cache.update((t, (df, b, tid)) for t, df, b, tid in zip(*cols))
         return {t: self._td_cache[t] for t in terms if t in self._td_cache}
 
     def idf(self, df: int) -> float:
@@ -238,11 +272,14 @@ class LoadedIndex:
             {t: self.idf(found[t][0]) for t in pos}, k, mode, after, min_match, algo,
         )
 
-    def _shard_frame(self, specs: list[_Spec], core, schema: str, dead=None) -> DataFrame:
+    def _shard_frame(
+        self, specs: list[_Spec], core, schema: T.StructType, dead=None
+    ) -> DataFrame:
         """The one per-shard exchange: scan the posting rows of every term the
         specs name (D3: bucket is the file-partition column → partition
         pruning; tid is a numeric Parquet pushdown predicate over tid-sorted
-        files), pin the shard exchange, and run core(shard's rows, sorted
+        files; both in one SQL-text predicate, one py4j call however many
+        terms), pin the shard exchange, and run core(shard's rows, sorted
         dead ids or None) once per shard. Without a dead set (DataFrame of
         doc_id) this is a plain grouped map. With one, the dead ids ride the
         same shard key through a cogroup — per-shard live-docs arrive WITH the
@@ -250,19 +287,18 @@ class LoadedIndex:
         distributed analog of Lucene's per-segment live-docs [public])."""
         terms = {t: tid for s in specs for t, tid in (*s.pos.items(), *s.neg.items())}
         # every spec term came through _lookup, so its bucket is cached
-        buckets = sorted({self._td_cache[t][1] for t in terms})
-        rows = self.postings.filter(
-            F.col("bucket").isin(buckets) & F.col("tid").isin(sorted(set(terms.values())))
-        )
+        buckets = ", ".join(map(str, sorted({self._td_cache[t][1] for t in terms})))
+        tids = ", ".join(f"{t}L" for t in sorted(set(terms.values())))
+        rows = self._scan.filter(f"bucket IN ({buckets}) AND tid IN ({tids})")
         grouped = _pin_shard_parallelism(rows).groupBy("shard")
         if dead is None:
             def fn(pdf: pd.DataFrame) -> pd.DataFrame:
                 return core(pdf, None)
 
             return grouped.applyInPandas(fn, schema)
-        tomb = dead.select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            (F.col("doc_id") / F.lit(self.manifest.docs_per_shard)).cast("int").alias("shard"),
+        tomb = dead.selectExpr(
+            "CAST(doc_id AS BIGINT) AS doc_id",
+            f"CAST(doc_id / {self.manifest.docs_per_shard} AS INT) AS shard",
         )
 
         def cofn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
@@ -285,8 +321,17 @@ class LoadedIndex:
             dead = ex if dead is None else dead.unionByName(ex).distinct()
         core = _shard_topk_core(specs, self.manifest.avgdl, round_to)
         local = self._shard_frame(specs, core, BATCH_TOPK_SCHEMA, dead)
-        score = F.round(F.col("score"), round_to) if round_to is not None else F.col("score")
-        return local.select("qid", "doc_id", score.alias("score"))
+        score = f"round(score, {round_to}) AS score" if round_to is not None else "score"
+        return local.selectExpr("qid", "doc_id", score)
+
+    def _topk(self, spec: _Spec, round_to: int | None, exclude: DataFrame | None) -> DataFrame:
+        """One spec → its global top-k, ordered (score desc, doc_id asc)."""
+        return (
+            self._execute([spec], round_to, exclude)
+            .drop("qid")
+            .orderBy(*self._order)
+            .limit(spec.k)
+        )
 
     def search(
         self,
@@ -324,12 +369,7 @@ class LoadedIndex:
         spec = self._flat_spec("", q, found, k, mode, after, min_should_match, algo)
         if spec is None:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        return (
-            self._execute([spec], round_to, exclude)
-            .select("doc_id", "score")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+        return self._topk(spec, round_to, exclude)
 
     def search_tree(
         self,
@@ -359,13 +399,7 @@ class LoadedIndex:
         # per term, context-free in eval_tree)
         neg = {t: found[t][2] for t in neg_t if t in found and t not in pos}
         idfs = {t: self.idf(found[t][0]) for t in pos}
-        spec = _Spec("", pos, neg, idfs, k, "tree", after, tree=tree)
-        return (
-            self._execute([spec], round_to, exclude)
-            .select("doc_id", "score")
-            .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-        )
+        return self._topk(_Spec("", pos, neg, idfs, k, "tree", after, tree=tree), round_to, exclude)
 
     def search_many(
         self,
@@ -381,7 +415,12 @@ class LoadedIndex:
         job per query): the bucket/tid predicates are the union over all
         queries, each shard computes every query's local top-k in-loop, and
         a single per-qid window finishes the coordinating merge. Per-query
-        Spark overhead amortizes to ~zero."""
+        Spark overhead amortizes to ~zero.
+
+        The merge input is at most len(specs) × n_shards × k rows, and the
+        driver collects the result anyway: one exchange to a single
+        partition serves both the window and the final sort, which then
+        need no hash or range exchange of their own."""
         items = list(queries.items()) if isinstance(queries, dict) else list(queries)
         qs, found = self._parse([text for _, text in items])
         specs = [
@@ -390,13 +429,15 @@ class LoadedIndex:
         ]
         if not specs:
             return self.spark.createDataFrame([], BATCH_TOPK_SCHEMA)
-        w = Window.partitionBy("qid").orderBy(F.col("score").desc(), F.col("doc_id").asc())
         return (
             self._execute(specs, round_to)
-            .withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") <= k)
+            .repartition(1)
+            .selectExpr(
+                "*", "row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS _r"
+            )
+            .filter(f"_r <= {k}")
             .drop("_r")
-            .orderBy("qid", F.col("score").desc(), F.col("doc_id").asc())
+            .orderBy("qid", *self._order)
         )
 
     def more_like_this(
@@ -434,7 +475,7 @@ class LoadedIndex:
         terms = cand[:max_query_terms]
         if not terms:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
-        ex = self.spark.createDataFrame([(int(doc_id),)], "doc_id long")
+        ex = self.spark.createDataFrame([(int(doc_id),)], TOMBSTONE_SCHEMA)
         return self.search(" ".join(terms), k=k, mode="or", exclude=ex)
 
     def rescore(

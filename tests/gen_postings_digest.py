@@ -95,7 +95,9 @@ def _recrawl_batches(seed: int = 7) -> tuple[pd.DataFrame, pd.DataFrame]:
     return b0, pd.concat([b1, recrawl], ignore_index=True)
 
 
-def digests(spark, work: str) -> dict[str, dict[str, str]]:
+def digests(spark, work: str, on_publish=None) -> dict[str, dict[str, str]]:
+    """Every case's digests; on_publish(case, root), when given, is called
+    on each published index before a later case rewrites it."""
     from pyspark.sql import functions as F
 
     from engine import mutate
@@ -110,13 +112,19 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         return spark.read.parquet(os.path.join(root, "postings"))
 
     out = {}
+
+    def tables(case: str, root: str) -> None:
+        if on_publish is not None:
+            on_publish(case, root)
+        out[f"{case}.tables"] = table_digests(spark, root)
+
     docs = refine_pages(pages_df(spark, 400, seed=31)).select("doc_id", "text").cache()
 
     # raw-pair encoder + bulk merge, multi-block lists, several shards
     bulk = os.path.join(work, "bulk")
     m = build_index(spark, docs, bulk, n_buckets=4, docs_per_shard=128, block_size=16)
     out["build_index"] = postings_digest(read(bulk))
-    out["build_index.tables"] = table_digests(spark, bulk)
+    tables("build_index", bulk)
 
     # map-side partial encoder + decode/re-encode merge of 2 segments with
     # hot-term salting
@@ -126,7 +134,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         hot_df=40, n_salts=3, block_size=8, bulk_merge=False, partial_encode=True,
     )
     out["build_index_merge"] = postings_digest(read(merged))
-    out["build_index_merge.tables"] = table_digests(spark, merged)
+    tables("build_index_merge", merged)
 
     # merge that splits long lists into parts and drops every 7th doc
     drop = list(range(0, m.n_docs, 7))
@@ -144,7 +152,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         lambda d: d.withColumn("text", F.concat("text", F.lit(" zzupdated"))),
     )
     out["build_index.update_by_query"] = postings_digest(read(bulk))
-    out["build_index.update_by_query.tables"] = table_digests(spark, bulk)
+    tables("build_index.update_by_query", bulk)
     docs.unpersist()
 
     # streaming: 2 micro-batches with a re-crawl, then compact()
@@ -154,7 +162,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
         inc.process_batch(spark.createDataFrame(b, PAGES_SCHEMA), i)
     compacted = inc.compact(spark)
     out["compact"] = postings_digest(read(compacted))
-    out["compact.tables"] = table_digests(spark, compacted)
+    tables("compact", compacted)
 
     # delete_by_query + expunge_deletes on the compacted index
     n = mutate.delete_by_query(LoadedIndex(spark, compacted), "w010")
@@ -162,7 +170,7 @@ def digests(spark, work: str) -> dict[str, dict[str, str]]:
     mutate.expunge_deletes(spark, compacted)
     assert IndexManifest.load(compacted).n_docs > 0
     out["expunge"] = postings_digest(read(compacted))
-    out["expunge.tables"] = table_digests(spark, compacted)
+    tables("expunge", compacted)
     return out
 
 
