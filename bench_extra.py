@@ -50,9 +50,7 @@ def main() -> None:
     for name in args:
         secs = []
         for r in range(reps):
-            registry._CORPUS_CACHE.clear()
-            registry._INDEX_CACHE.clear()
-            registry._FR_CORPUS_CACHE.clear()
+            registry._SHARED.clear()  # every shared frame kind starts cold
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"{name} rep{r}")
             t0 = time.perf_counter()

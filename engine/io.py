@@ -36,27 +36,22 @@ def read_table(spark: SparkSession, path_or_name: str) -> DataFrame:
 # scan-attached codegen/Arrow stage then runs on 1 of N cores. One exchange
 # of a few MB buys full parallelism; at production input sizes (>= many row
 # groups) the gate never fires and plans are byte-identical to before.
-_REBALANCE_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REBALANCE_MAX_BYTES", str(256 << 20))
-)
+_REBALANCE_MAX_BYTES = 256 << 20
 # Lower gate: leave sub-2MB files alone. Rebalancing changes the order in
 # which float partial aggregates combine, which can flip a round(x, 4) at a
 # .00005 boundary — the correctness scale factors (sf0.001/sf0.01/sf0.1,
 # all files < 2 MB) must scan EXACTLY as before so Spark-vs-DuckDB parity
-# is bit-stable; at bench scale only throughput matters.
-_REBALANCE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_REBALANCE_MIN_BYTES", str(2 << 20))
-)
+# is bit-stable; at bench scale only throughput matters. A constant, so the
+# parity gate cannot be bypassed from the environment.
+_REBALANCE_MIN_BYTES = 2 << 20
 _REBALANCE_ROW_BYTES = 64 << 10  # ~64 KB of file per partition
 # Only tables whose downstream work is CPU-heavy PER ROW (text analysis
 # UDFs, shingle explodes, vector math) gain from the rebalance exchange.
 # For pure columnar scan+aggregate tables (lineitem/orders/events) the
 # round-robin exchange of the full payload costs more than the extra
 # parallelism buys — measured: agg_date_histogram 0.5->1.8s when events was
-# rebalanced. Env-tunable (comma-separated) for other deployments.
-_REBALANCE_TABLES = frozenset(
-    os.environ.get("SPARK_GRAFT_REBALANCE_TABLES", "documents,embeddings").split(",")
-)
+# rebalanced.
+_REBALANCE_TABLES = frozenset({"documents", "embeddings"})
 
 
 def read_fixture(
