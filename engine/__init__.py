@@ -10,7 +10,7 @@ and none appear in this package.
 
 Layout (SURVEY.md §7 M0):
   session.py     SparkSession factory with pinned configs (AQE, Arrow)
-  io.py          table read/write, format switch (Parquet locally / Iceberg prod)
+  io.py          fixture scan (size-gated rebalance) + postings shard sink
   pages.py       deterministic synthetic `pages` corpus generator
   tokenizer.py   pinned UAX#29-subset analyzer (NFKC + lowercase + word break)
   refine.py      html_strip / normalize / dedup / doc_id (vectorized pandas UDFs)
@@ -25,9 +25,9 @@ Layout (SURVEY.md §7 M0):
   aggs.py        ES-aggregation parity (terms/cardinality/stats/percentiles/…)
   textops.py     language-ID, quality score, token counting, fingerprinting
   dedup.py       exact / MinHash-LSH / SimHash / n-gram-Jaccard / embedding dedup
-  ann.py         cosine top-k similarity search (brute-force + LSH-bucketed)
+  ann.py         cosine top-k similarity search (brute-force, LSH, IVF, PQ)
   multimodal.py  opaque-binary media column plumbing (decode stubbed)
-  streaming.py   incremental refine / delta-segment ingest (Structured Streaming)
+  streaming.py   delta-segment ingest of page micro-batches (foreachBatch + compact)
 """
 
 __version__ = "0.1.0"

@@ -67,13 +67,6 @@ def percentiles_agg(df: DataFrame, col: str, probs: list[float], group_by: str) 
     return df.groupBy(group_by).agg(*aggs).orderBy(group_by)
 
 
-def percentiles_approx_agg(df: DataFrame, col: str, probs: list[float], accuracy: int = 10000) -> DataFrame:
-    """E4 approximate form (ES t-digest analog; pytest tolerance-tested)."""
-    return df.agg(
-        F.percentile_approx(col, probs, accuracy).alias("percentiles")
-    )
-
-
 def histogram_agg(df: DataFrame, col: str, interval: float) -> DataFrame:
     """E5 `histogram`: fixed-interval numeric buckets."""
     bucket = (F.floor(F.col(col) / F.lit(interval)) * F.lit(interval)).alias("bucket")

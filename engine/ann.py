@@ -7,8 +7,9 @@ top-k baseline + LSH-bucketed scale path.
   pinned hyperplanes → probe only the query's bucket (+ multiprobe neighbor
   buckets) — turns the scan into a bucket-pruned lookup; recall measured
   against brute force in tests;
-* batched IVF-style variant for query SETS: broadcast-join queries to bucket
-  cells so one pass scores all queries (no per-query job at scale).
+* IVF (coarse k-means quantizer, nprobe cluster filter), product
+  quantization (ADC table lookup) and binary-code Hamming rescore, plus
+  late-interaction MaxSim.
 """
 
 from __future__ import annotations
@@ -117,33 +118,6 @@ def lsh_topk(
     )
 
 
-def batch_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """Top-k for a SET of queries in one pass: broadcast the query side,
-    score the cross join JVM-side, per-query window top-k. At 100 TB the
-    broadcast keeps the big side shuffle-free."""
-    from pyspark.sql import Window
-
-    scored = emb.join(F.broadcast(queries)).select(
-        F.col(q_id_col),
-        F.col(id_col),
-        F.round(cosine_expr(F.col(vec_col), F.col(q_vec_col)), 4).alias("cosine"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(q_id_col, id_col, "cosine", "rank")
-    )
-
-
 # --- IVF (inverted-file) index: the coarse-quantizer scale path --------------
 
 
@@ -213,65 +187,6 @@ def ivf_topk(
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         assigned.filter(F.col("ivf_cluster").isin(probes))
-        .select(
-            F.col(id_col),
-            F.round(cosine_expr(F.col(vec_col), q), 4).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-        .limit(k)
-    )
-
-
-def write_ivf_index(
-    assigned: DataFrame, centroids: np.ndarray, out_root: str
-) -> None:
-    """Materialize the IVF index the way a 100 TB deployment stores it:
-    the assignment table written PARTITIONED BY ivf_cluster (so an nprobe
-    query's `ivf_cluster IN (...)` becomes Hive-style partition PRUNING —
-    non-probed clusters are never opened, not merely filtered), plus the
-    tiny centroid table as one parquet file."""
-    import os
-
-    import pandas as pd
-
-    assigned.write.mode("overwrite").partitionBy("ivf_cluster").parquet(
-        os.path.join(out_root, "vectors")
-    )
-    cent_pdf = pd.DataFrame(
-        {
-            "cluster": np.arange(len(centroids), dtype=np.int32),
-            "centroid": [c.tolist() for c in centroids],
-        }
-    )
-    spark = assigned.sparkSession
-    spark.createDataFrame(cent_pdf).coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(out_root, "centroids")
-    )
-
-
-def load_ivf_topk(
-    spark,
-    out_root: str,
-    query_vec: list[float],
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Query a written IVF index: centroid seek is a driver-side read of the
-    tiny centroid table; the vector scan prunes to the nprobe partitions."""
-    import os
-
-    cents = spark.read.parquet(os.path.join(out_root, "centroids")).collect()
-    cmat = np.zeros((len(cents), len(query_vec)))
-    for r in cents:
-        cmat[r["cluster"]] = np.asarray(r["centroid"], dtype=np.float64)
-    qn = _norm(query_vec)
-    probes = [int(j) for j in np.argsort(-(cmat @ qn))[:nprobe]]
-    vecs = spark.read.parquet(os.path.join(out_root, "vectors"))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    return (
-        vecs.filter(F.col("ivf_cluster").isin(probes))
         .select(
             F.col(id_col),
             F.round(cosine_expr(F.col(vec_col), q), 4).alias("cosine"),

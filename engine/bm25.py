@@ -41,17 +41,3 @@ def tf_norm_expr(
 def idf_np(df: np.ndarray | float, n_docs: float) -> np.ndarray:
     df = np.asarray(df, dtype=np.float64)
     return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-def score_np(
-    tf: np.ndarray,
-    dl: np.ndarray,
-    df: float,
-    n_docs: float,
-    avgdl: float,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    dl = dl.astype(np.float64)
-    return idf_np(df, n_docs) * tf / (tf + k1 * (1.0 - b + b * dl / avgdl))

@@ -29,14 +29,6 @@ def _us(c: Column) -> Column:
     return F.unix_micros(c.cast("timestamp"))
 
 
-def _key_window(key_col: str, ts_col: str, id_col: str) -> Window:
-    return (
-        Window.partitionBy(key_col)
-        .orderBy(F.col(ts_col).asc(), F.col(id_col).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-
-
 def _sequence_annotated(
     events: DataFrame,
     key_cols: list[str],

@@ -182,13 +182,6 @@ def complete_runs(batches, cols: list[str], keys: list[str], weight: str | None 
         yield from cut(leftover, np.array([0]))
 
 
-def sorted_run_starts(pdf: pd.DataFrame, key_cols: list[str]) -> np.ndarray:
-    """Indices where a new key run begins in a key-sorted frame (vectorized)."""
-    if not len(pdf):
-        return np.empty(0, dtype=np.int64)
-    return run_starts([pdf[c].to_numpy() for c in key_cols])
-
-
 # Map-side partial postings: the pre-shuffle wire format. One row per
 # (bucket, shard, seg_id, part, tid) run found inside one map-partition chunk
 # — doc_ids delta+varint-encoded (absolute restart at the run start), tf/dl

@@ -1,11 +1,14 @@
-"""Table IO: scans, sinks, format switch (SURVEY.md §2.A).
+"""Table IO: the fixture scan and the postings sink (SURVEY.md §2.A).
 
-BASELINE.json:15 mandates Iceberg tables; no Iceberg jars exist offline
-(SURVEY.md §0), so the storage layer is isolated here: local default is
-Parquet with the identical schema, and `TABLE_FORMAT='iceberg'` switches the
-production path (`spark.read.format('iceberg').load(name)`, writes via
-`writeTo(...)`; partition transform `bucket(term, N)` replaces the explicit
-`bucket` partition column). Every other module goes through these helpers.
+Two helpers: `read_fixture` scans a driver fixture table with a size-gated
+rebalance (the registry reads every fixture through it), and
+`write_postings_shards` lays the postings table out bucket-partitioned and
+tid-sorted (index.publish_index writes through it). Every other table is
+read and written as plain Parquet by the module that owns it.
+
+BASELINE.json:15 names Iceberg tables; no Iceberg jars exist offline
+(SURVEY.md §0), so every table is Parquet. An Iceberg layer belongs with the
+jars, in the readers and writers of every index table at once.
 """
 
 from __future__ import annotations
@@ -13,21 +16,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-TABLE_FORMAT = os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
-
-FIXTURE_TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def read_table(spark: SparkSession, path_or_name: str) -> DataFrame:
-    """A1/A2: corpus scan. Spark splits per file/row-group — the ES
-    scan/scroll equivalent is just a partitioned table scan."""
-    if TABLE_FORMAT == "iceberg":
-        return spark.read.format("iceberg").load(path_or_name)
-    return spark.read.parquet(path_or_name)
 
 
 # Files below this size get a round-robin rebalance after the scan. The
@@ -87,47 +75,13 @@ def read_fixture(
     return df.repartition(int(target))
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None):
-    """A5: bulk reindex equivalent — write refined docs/derived tables.
-
-    Iceberg branch (UNTESTABLE offline — no jars, SURVEY.md §0): the
-    documented writeTo() table API, createOrReplace for overwrite and
-    append otherwise; `path` is then a catalog table name."""
-    if TABLE_FORMAT == "iceberg":
-        wt = df.writeTo(path)
-        if partition_by:
-            wt = wt.partitionedBy(*[F.col(c) for c in partition_by])
-        if mode == "overwrite":
-            wt.using("iceberg").createOrReplace()
-        else:
-            wt.append()
-        return
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
 def write_postings_shards(postings: DataFrame, path: str, mode: str = "overwrite"):
     """A3: segment sink — shards partitioned by term-hash bucket and sorted by
     tid within partitions, so a query-time term lookup prunes to one bucket
     directory and Parquet min/max skips row groups on the numeric `tid`
     (BASELINE.json:6 "queryable index shards"; mirrors Lucene's term-sorted
-    dictionary [public]).
-
-    Iceberg branch (UNTESTABLE offline): the same layout through the
-    writeTo() API with the precomputed `bucket` column as the partition
-    spec — a production deployment would instead declare the transform
-    `bucket(tid, B)` on the table and drop the explicit column; both yield
-    bucket-pruned scans + tid-sorted files."""
+    dictionary [public])."""
     sorted_p = postings.repartition("bucket").sortWithinPartitions(
         "tid", "shard", "part"
     )
-    if TABLE_FORMAT == "iceberg":
-        wt = sorted_p.writeTo(path).partitionedBy(F.col("bucket"))
-        if mode == "overwrite":
-            wt.using("iceberg").createOrReplace()
-        else:
-            wt.append()
-        return
     sorted_p.write.mode(mode).partitionBy("bucket").parquet(path)

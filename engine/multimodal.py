@@ -16,7 +16,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -94,22 +93,6 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return media.mapInPandas(fn, FRAME_SCHEMA)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing — STUB transform (real: PIL thumbnail); keeps
-    the payload opaque and rewrites the typed metadata."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            mask = out["kind"] == "image"
-            out.loc[mask, "width"] = width
-            out.loc[mask, "height"] = height
-            # real impl would re-encode payload; stub keeps bytes
-            yield out
-
-    return media.mapInPandas(fn, MEDIA_SCHEMA)
 
 
 def synthetic_media(spark, n: int = 64, seed: int = 5) -> DataFrame:

@@ -122,67 +122,3 @@ def pack_documents(
             .alias("pack_last"),
         )
     )
-
-
-def write_training_shards(
-    docs: DataFrame,
-    packed: DataFrame,
-    path: str,
-    packs_per_shard: int = 4096,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Export the packed corpus as training shards: parquet partitioned by
-    `shard` (= pack_first // packs_per_shard, contiguous pack ranges), rows
-    sorted by doc_id within each shard so a loader streams the token stream
-    in order with zero shuffling at read time [public: WebDataset/Megatron
-    shard layout conventions].
-
-    Every row carries the packing span columns (tok_start, pack_first,
-    pack_last) next to the text, so a per-shard reader reconstructs exact
-    sequence boundaries — including docs straddling into the NEXT shard's
-    first pack — without any global state. One column-pruned join, one
-    partitioned write; shard count scales as total_tokens/(seq_len ×
-    packs_per_shard), keeping output files O(100 MB) at any corpus size.
-
-    Returns the per-shard manifest (shard, n_docs, n_tokens, first/last
-    pack) — tiny, suitable for a driver-side training-job planner."""
-    from .io import write_table
-
-    shard = (F.col("pack_first") / packs_per_shard).cast("long")
-    joined = packed.join(docs, "doc_id").withColumn("shard", shard)
-    write_table(
-        joined.repartition("shard").sortWithinPartitions("doc_id"),
-        path,
-        mode=mode,
-        partition_by=["shard"],
-    )
-    # manifest needs only packed-side columns, but must agree with the
-    # WRITTEN rows (the write's inner join drops packed ids absent from
-    # docs and multiplies duplicated ones) — so the manifest replays the
-    # same INNER join against the id column only: a column-pruned scan,
-    # not the full-payload join the write already paid for
-    return (
-        packed.join(docs.select("doc_id"), "doc_id")
-        .withColumn("shard", shard)
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.min("pack_first").alias("first_pack"),
-            F.max("pack_last").alias("last_pack"),
-        )
-        .orderBy("shard")
-    )
-
-
-def packing_stats(packed: DataFrame, seq_len: int) -> DataFrame:
-    """One-row summary of a pack_documents frame: total tokens, number of
-    full sequences produced, and how many docs straddle a boundary (the
-    attention-mask fragmentation a packing-aware loader cares about)."""
-    return packed.agg(
-        F.sum("n_tokens").alias("total_tokens"),
-        F.ceil(F.sum("n_tokens") / seq_len).cast("long").alias("n_sequences"),
-        F.sum(
-            (F.col("pack_last") != F.col("pack_first")).cast("long")
-        ).alias("n_straddling"),
-    )

@@ -117,8 +117,3 @@ def pages_df(spark, n_pages: int, seed: int = 42, partitions: int = 8):
     )
     pdf = generate_pages(n_pages, seed)
     return spark.createDataFrame(pdf, schema=schema).repartition(partitions)
-
-
-def write_pages(spark, path: str, n_pages: int, seed: int = 42, partitions: int = 8) -> str:
-    pages_df(spark, n_pages, seed, partitions).write.mode("overwrite").parquet(path)
-    return path

@@ -113,7 +113,17 @@ class _Op:
 
 class _Parser:
     """Precedence climbing: OR < AND; whitespace juxtaposition inserts the
-    default operator between adjacent operands."""
+    default operator between adjacent operands.
+
+    The grammar differences live in class attributes (and atom()), so
+    _QSParser reuses this core: the OR / AND operator token kinds, the
+    token kinds that start an operand (juxtaposition), and the label
+    prefixed to parse errors."""
+
+    _OR_KIND = "pipe"
+    _AND_KIND = "plus"
+    _ATOM_STARTS = ("phrase", "lparen", "minus", "word")
+    _LABEL = ""
 
     def __init__(self, tokens: list[tuple[str, str]], default_operator: str):
         if default_operator not in ("or", "and"):
@@ -133,19 +143,17 @@ class _Parser:
     def parse(self):
         node = self.or_expr()
         if self.peek()[0] is not None:
-            raise ValueError(f"unexpected token {self.peek()!r}")
+            raise ValueError(f"{self._LABEL}unexpected token {self.peek()!r}")
         return node
 
     def or_expr(self):
         ops = [self.and_expr()]
         while True:
             kind, _ = self.peek()
-            if kind == "pipe":
+            if kind == self._OR_KIND:
                 self.next()
                 ops.append(self.and_expr())
-            elif self.default == "or" and kind in (
-                "phrase", "lparen", "minus", "word",
-            ):
+            elif self.default == "or" and kind in self._ATOM_STARTS:
                 ops.append(self.and_expr())  # juxtaposition = default OR
             else:
                 break
@@ -155,12 +163,10 @@ class _Parser:
         ops = [self.atom()]
         while True:
             kind, _ = self.peek()
-            if kind == "plus":
+            if kind == self._AND_KIND:
                 self.next()
                 ops.append(self.atom())
-            elif self.default == "and" and kind in (
-                "phrase", "lparen", "minus", "word",
-            ):
+            elif self.default == "and" and kind in self._ATOM_STARTS:
                 ops.append(self.atom())  # juxtaposition = default AND
             else:
                 break
@@ -436,61 +442,17 @@ def _lex_qs(q: str) -> list[tuple[str, str]]:
     return _lex(q, token_re=_QS_TOKEN_RE, label="query_string")
 
 
-class _QSParser:
-    """Precedence climbing: OR < AND; NOT/-/! and + are clause prefixes.
-    Juxtaposition (bare whitespace between clauses) applies the default
-    operator at its own precedence level, exactly like the simple parser."""
+class _QSParser(_Parser):
+    """The simple parser's precedence climbing (OR < AND, juxtaposition =
+    default operator at its own level) over the query_string tokens:
+    AND/&& and OR/|| are the operators; NOT/-/! and + are clause prefixes."""
 
+    _OR_KIND = "orop"
+    _AND_KIND = "andop"
     _ATOM_STARTS = (
         "phrase", "fieldphrase", "lparen", "minus", "notop", "plus", "word"
     )
-
-    def __init__(self, tokens: list[tuple[str, str]], default_operator: str):
-        if default_operator not in ("or", "and"):
-            raise ValueError(f"default_operator must be or/and: {default_operator}")
-        self.toks = tokens
-        self.pos = 0
-        self.default = default_operator
-
-    def peek(self):
-        return self.toks[self.pos] if self.pos < len(self.toks) else (None, None)
-
-    def next(self):
-        t = self.peek()
-        self.pos += 1
-        return t
-
-    def parse(self):
-        node = self.or_expr()
-        if self.peek()[0] is not None:
-            raise ValueError(f"query_string: unexpected token {self.peek()!r}")
-        return node
-
-    def or_expr(self):
-        ops = [self.and_expr()]
-        while True:
-            kind, _ = self.peek()
-            if kind == "orop":
-                self.next()
-                ops.append(self.and_expr())
-            elif self.default == "or" and kind in self._ATOM_STARTS:
-                ops.append(self.and_expr())
-            else:
-                break
-        return ops[0] if len(ops) == 1 else _Op("or", tuple(ops))
-
-    def and_expr(self):
-        ops = [self.atom()]
-        while True:
-            kind, _ = self.peek()
-            if kind == "andop":
-                self.next()
-                ops.append(self.atom())
-            elif self.default == "and" and kind in self._ATOM_STARTS:
-                ops.append(self.atom())
-            else:
-                break
-        return ops[0] if len(ops) == 1 else _Op("and", tuple(ops))
+    _LABEL = "query_string: "
 
     def atom(self):
         kind, text = self.next()

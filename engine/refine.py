@@ -281,16 +281,3 @@ def refine_pages(
     return docs.withColumn("text", html_strip_udf(F.col("html"))).select(
         "doc_id", "url", "warc_ts", "lang", "text"
     )
-
-
-def refine_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """B7: per-partition doc/byte counters for the checkpoint manifest."""
-    return (
-        df.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.length(F.col(text_col))).alias("n_bytes"),
-        )
-        .withColumnRenamed("_pid", "partition_id")
-    )

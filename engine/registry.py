@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from . import BM25_B, BM25_K1
 from .corpus import corpus_stats, term_stats, tf_table, tokens, with_tokens
 from .io import read_fixture
+from .packaging import _REPO_ROOT
 from .search import exact_search
 
 # ---------------------------------------------------------------------------
@@ -484,6 +485,10 @@ def _dir_tag(sf_dir: str) -> str:
 # the tag changes with it, so stale caches from older formats are simply
 # never looked at again (and can be swept by hand).
 _CACHE_REV = "v3"
+# The published on-disk caches (index_cache/, update_cache/) live in the
+# data/ dir of the checkout the engine is imported from, so two checkouts on
+# one host never share, or with fresh=True delete, each other's caches.
+_DISK_CACHE = os.path.join(_REPO_ROOT, "data")
 
 
 def _publish_dir(root: str, build_fn: Callable[[str], None]) -> None:
@@ -521,7 +526,7 @@ def _indexed(spark: SparkSession, sf_dir: str, fresh: bool = False):
         from .searcher import LoadedIndex
 
         root = os.path.join(
-            "/root/repo/data/index_cache", f"{_dir_tag(sf_dir)}-{_CACHE_REV}"
+            _DISK_CACHE, "index_cache", f"{_dir_tag(sf_dir)}-{_CACHE_REV}"
         )
         if fresh and os.path.exists(root):
             import shutil
@@ -621,7 +626,7 @@ def _q_update_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .searcher import LoadedIndex
 
         root = os.path.join(
-            "/root/repo/data/update_cache", f"{_dir_tag(sf_dir)}-{_CACHE_REV}"
+            _DISK_CACHE, "update_cache", f"{_dir_tag(sf_dir)}-{_CACHE_REV}"
         )
 
         def _build(out: str) -> None:

@@ -191,43 +191,3 @@ def temperature_sample(
         stratified_sample(docs, strata_col, rates, denom, hash_expr, id_col),
         rates,
     )
-
-
-def write_shuffled_shards(
-    docs: DataFrame,
-    path: str,
-    n_shards: int = 8,
-    key_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Materialize the training_shuffle order: parquet partitioned by
-    `shard`, rows sorted by (shuffle_key, id) within each shard. The global
-    training order is shard 0's rows in order, then shard 1's, … — a total
-    order achieved with ONE repartition and per-partition sorts, never a
-    single-partition global window; a loader streams shards independently
-    (or round-robins them for approximate-global order). Returns the
-    per-shard manifest (shard, n_docs, min/max key) — |shards| rows."""
-    from .io import write_table
-
-    shuffled = training_shuffle(docs, key_col=key_col, n_shards=n_shards)
-    write_table(
-        shuffled.repartition("shard").sortWithinPartitions(
-            "shuffle_key", key_col
-        ),
-        path,
-        mode=mode,
-        partition_by=["shard"],
-    )
-    # manifest pass re-derives shard/shuffle_key from the id column alone —
-    # an explicitly column-pruned second scan (reads one column), not a
-    # second pass over the full rows the write just shipped
-    return (
-        shuffled.select("shard", "shuffle_key")
-        .groupBy("shard")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("shuffle_key").alias("min_key"),
-            F.max("shuffle_key").alias("max_key"),
-        )
-        .orderBy("shard")
-    )

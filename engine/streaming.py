@@ -1,21 +1,13 @@
-"""Structured-Streaming parity (SURVEY.md §2.J — the reference's "real-time
-refinement" loop, re-expressed as Spark streams).
+"""Structured-Streaming ingest (SURVEY.md §2.J — the reference's "real-time
+refinement" loop, re-expressed as a Spark stream sink).
 
-* `stream_pages`        — continuous ingest of new page files (A-source).
-* `refined_stream`      — the same vectorized refine stage (B1-B3) applied to
-                          a stream; per-row semantics identical to batch
-                          because the UDFs are shared.
-* `windowed_counts`     — tumbling/sliding windowed aggregation with a
-                          watermark for late pages (ES date_histogram-refresh
-                          analogue).
-* `sessionized`         — `session_window` aggregation (events parity).
-* `IncrementalIndexer`  — `foreachBatch`: each micro-batch becomes one delta
-                          segment (engine.index.encode_segment with
-                          seg_id=batch_id) appended to the postings dir; a
-                          `compact()` run merges delta segments into the
-                          queryable index (Lucene NRT flush+merge analogue
-                          [public: Lucene NRT]). Batch doc_ids continue from
-                          a persisted offset so ids stay dense and stable.
+`IncrementalIndexer` is a `foreachBatch` sink over a stream of contract
+pages (url, warc_ts, html, text, lang): each micro-batch is refined (url
+dedup, optional lang filter, html strip, cross-batch latest-wins upsert) and
+becomes one delta segment (engine.index.encode_segment with seg_id=batch_id)
+appended under its root; `compact()` merges the delta segments into the
+queryable index (Lucene NRT flush+merge analogue [public: Lucene NRT]).
+Batch doc_ids continue from a persisted offset so ids stay dense and stable.
 
 Deterministic in tests via `trigger(availableNow=True)` + file sources.
 """
@@ -27,68 +19,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def stream_pages(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """readStream over a directory of page parquet files (new files → new
-    micro-batches; the continuous-ingest source of §2.J)."""
-    reader = spark.readStream.schema(PAGES_SCHEMA).format("parquet")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(path)
-
-
-def refined_stream(pages: DataFrame, lang: str | None = None) -> DataFrame:
-    """Streaming refine: html_strip + lang filter. Dedup/doc_id assignment are
-    per-batch concerns (stateless stream otherwise) — see IncrementalIndexer."""
-    from .refine import html_strip_udf
-
-    df = pages
-    if lang is not None:
-        df = df.filter(F.col("lang") == lang)
-    return df.withColumn("text", html_strip_udf(F.col("html"))).drop("html")
-
-
-def windowed_counts(
-    pages: DataFrame,
-    window: str = "10 minutes",
-    slide: str | None = None,
-    watermark: str = "1 hour",
-    ts_col: str = "warc_ts",
-) -> DataFrame:
-    """Watermarked tumbling/sliding counts per language — the streaming form
-    of E6 date_histogram. Late pages inside the watermark update their
-    window; later ones are dropped (ES refresh-interval analogue)."""
-    w = (
-        F.window(ts_col, window, slide)
-        if slide is not None
-        else F.window(ts_col, window)
-    )
-    return (
-        pages.withWatermark(ts_col, watermark)
-        .groupBy(w.alias("win"), "lang")
-        .agg(F.count("*").alias("n_pages"))
-        .select("win.start", "win.end", "lang", "n_pages")
-    )
-
-
-def sessionized(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-) -> DataFrame:
-    """session_window aggregation: one row per (key, session) with event
-    count and session bounds."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(ts_col, gap).alias("sess"), key_col)
-        .agg(F.count("*").alias("n_events"))
-        .select(key_col, "sess.start", "sess.end", "n_events")
-    )
 
 
 class IncrementalIndexer:
@@ -231,10 +161,7 @@ class IncrementalIndexer:
         df = dedup_latest(batch_df)
         if self.lang is not None:
             df = df.filter(F.col("lang") == self.lang)
-        # accept raw page batches (html present -> extract) AND already-
-        # refined streams (refined_stream dropped html; text is final)
-        if "html" in df.columns:
-            df = df.withColumn("text", html_strip_udf(F.col("html"))).drop("html")
+        df = df.withColumn("text", html_strip_udf(F.col("html"))).drop("html")
         df = self._fold_upsert(df, batch_id, st["batches"])
         docs = assign_doc_ids(df).withColumn(
             "doc_id", F.col("doc_id") + F.lit(int(st["next_doc_id"]))
@@ -348,133 +275,3 @@ class IncrementalIndexer:
             terms=terms.distinct(),
         )
         return manifest.root
-
-
-def streaming_eql_sequence(
-    events: DataFrame,
-    key_col: str,
-    ts_col: str,
-    step1,
-    step2,
-    maxspan_seconds: int,
-    id_col: str = "event_id",
-):
-    """Streaming 2-step EQL sequence (the live analog of eql.eql_sequence)
-    via `applyInPandasWithState` [public: Spark arbitrary stateful
-    processing]: per-key state holds ONE running register — the latest
-    step-1 (ts, id) — exactly the batch implementation's window register,
-    carried across micro-batches instead of across window rows. Each batch
-    is processed in (ts, id) order; a step-2 event emits when a live
-    register exists within maxspan. Same non-consuming greedy semantics as
-    the batch form; events arriving out of order ACROSS micro-batches
-    follow live-stream semantics (a step-1 seen after its step-2 cannot
-    match retroactively) — streamed == batch whenever the stream replays in
-    event order, pinned by tests/test_streaming_eql.py.
-
-    Scale shape: state is O(1) per key (one struct), the stream shuffles
-    once on the key — the streaming twin of the batch plan's single
-    key-partitioned window."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    flagged = events.withColumn("_is1", step1).withColumn("_is2", step2)
-    flagged = flagged.filter(F.col("_is1") | F.col("_is2")).select(
-        key_col, id_col, ts_col, "_is1", "_is2"
-    )
-    out_schema = (
-        f"{key_col} long, {id_col} long, {ts_col} timestamp, "
-        "gap_seconds long"
-    )
-    state_schema = "l1_us long, l1_id long"
-    span_us = maxspan_seconds * 1_000_000
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.exists:
-            l1_us, l1_id = state.get
-            if l1_us == -1:  # the no-register sentinel round-trips as None
-                l1_us, l1_id = None, None
-        else:
-            l1_us, l1_id = None, None
-        out = []
-        # Arrow may split one key's micro-batch rows across several chunks
-        # in arbitrary order (ADVICE r04): a per-chunk sort would let a
-        # step-1 in a later chunk miss its step-2 in an earlier one.
-        # Concatenate the whole micro-batch for this key and sort ONCE —
-        # safe because state is per-key and a single key's batch slice fits
-        # in memory (the same bound the batch window already assumes).
-        chunks = list(pdf_iter)
-        pdf = (
-            pd.concat(chunks, ignore_index=True) if chunks
-            else pd.DataFrame(columns=[key_col, id_col, ts_col, "_is1", "_is2"])
-        ).sort_values([ts_col, id_col])
-        # normalize to epoch MICROS regardless of the pandas datetime
-        # resolution Arrow hands over (ns in older pandas, us in 2.x)
-        ts_us = pdf[ts_col].astype("datetime64[us]").astype("int64")
-        for i in range(len(pdf)):
-            t = int(ts_us.iloc[i])
-            eid = int(pdf[id_col].iloc[i])
-            if bool(pdf["_is2"].iloc[i]) and l1_us is not None:
-                gap = t - l1_us
-                if 0 <= gap <= span_us:
-                    out.append(
-                        (key[0], eid, pdf[ts_col].iloc[i],
-                         gap // 1_000_000)
-                    )
-            # register update AFTER the match test: a row that is both
-            # step-1 and step-2 matches against the PREVIOUS register
-            # (the batch window is UNBOUNDED PRECEDING .. 1 PRECEDING)
-            if bool(pdf["_is1"].iloc[i]):
-                if l1_us is None or (t, eid) > (l1_us, l1_id):
-                    l1_us, l1_id = t, eid
-        state.update((l1_us if l1_us is not None else -1,
-                      l1_id if l1_id is not None else -1))
-        cols = [key_col, id_col, ts_col, "gap_seconds"]
-        yield pd.DataFrame(out, columns=cols)
-
-    return flagged.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def percolate_stream(
-    pages: DataFrame,
-    queries: list[tuple[str, str]],
-    out_path: str,
-    checkpoint_path: str,
-):
-    """J8: streaming percolator — the ES alerting pattern (`percolate` on an
-    ingest pipeline): every micro-batch of incoming pages is refined with the
-    SAME analyzer as the index path and matched against the standing query
-    set; (query_id, url) match rows append to a parquet alert sink.
-
-    foreachBatch + the batch percolator keeps one code path for both modes
-    (the broadcast query side and map-side-combined match aggregation are
-    identical). Exactly-once: each batch OVERWRITES its own
-    `batch_id=<n>` partition directory (idempotent replay — a batch
-    re-run after a crash-before-checkpoint rewrites the same path instead
-    of appending duplicates, the same discipline as IncrementalIndexer's
-    idempotent segment names). At scale this is the canonical
-    streaming-join-against-tiny-static shape — no state store needed
-    because percolation is per-document."""
-    import os
-
-    from .percolate import percolate
-    from .refine import html_strip_udf
-    from .tokenizer import term_counts_udf
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        docs = batch_df.withColumn("text", html_strip_udf(F.col("html")))
-        toks = docs.select(
-            F.col("url"),
-            F.explode(term_counts_udf(F.col("text"))["terms"]).alias("term"),
-        ).distinct()
-        hits = percolate(toks, queries, id_col="url")
-        hits.write.mode("overwrite").parquet(
-            os.path.join(out_path, f"batch_id={batch_id}")
-        )
-
-    return (
-        pages.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-    )

@@ -129,22 +129,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("fingerprint", F.md5(norm))
 
 
-@F.pandas_udf(T.LongType())
-def rolling_hash_udf(s: pd.Series) -> pd.Series:
-    """64-bit polynomial rolling hash over tokens (Rabin-Karp style) —
-    order-sensitive content fingerprint, vectorized per batch."""
-
-    def rh(text: str) -> int:
-        h = np.uint64(1469598103934665603)
-        for tok in (text or "").split():
-            for ch in tok:
-                h = np.uint64(h * np.uint64(1099511628211)) ^ np.uint64(ord(ch))
-            h = np.uint64(h * np.uint64(31))
-        return int(h & np.uint64(0x7FFFFFFFFFFFFFFF))
-
-    return s.map(rh)
-
-
 def pii_redact(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Training-data PII scrub [public practice: C4/Dolma-style pipeline
     cleaning]: redact email addresses and phone-like digit groups, reporting

@@ -364,12 +364,6 @@ def tokenize_udf(s: pd.Series) -> pd.Series:
     return toks.map(lambda ts: [t for t in ts if len(t) <= MAX_TOKEN_LEN])
 
 
-@F.pandas_udf(T.StringType())
-def normalize_udf(s: pd.Series) -> pd.Series:
-    """Vectorized NFKC + lowercase (B2)."""
-    return s.str.normalize("NFKC").str.lower()
-
-
 _TC_SCHEMA = T.StructType(
     [
         T.StructField("terms", T.ArrayType(T.StringType())),

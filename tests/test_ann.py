@@ -1,10 +1,10 @@
-"""Similarity-search tests: brute-force correctness, LSH recall, batch mode."""
+"""Similarity-search tests: brute-force correctness, LSH, IVF and PQ recall."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from engine.ann import batch_topk, brute_force_topk, lsh_topk, with_lsh_bucket
+from engine.ann import brute_force_topk, lsh_topk, with_lsh_bucket
 from engine.io import read_fixture
 
 DIM = 64
@@ -64,22 +64,6 @@ def test_lsh_scans_fewer_rows(emb, vecs):
     assert planes_scanned.count() <= 10
 
 
-def test_batch_topk(spark, emb, vecs):
-    queries = spark.createDataFrame(
-        [(0, vecs[0].tolist()), (1, vecs[99].tolist())],
-        "q_id long, q_vec array<double>",
-    )
-    out = batch_topk(emb, queries, k=5).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["q_id"], []).append((r["vec_id"], r["cosine"]))
-    assert set(by_q) == {0, 1}
-    for qid, src in [(0, vecs[0]), (1, vecs[99])]:
-        want = _numpy_topk(vecs, src, 5)
-        got = sorted(by_q[qid], key=lambda kv: (-kv[1], kv[0]))
-        assert got == want
-
-
 def test_ivf_recall_against_brute_force(spark, emb, vecs):
     from engine.ann import assign_clusters, ivf_topk, train_centroids
 
@@ -113,33 +97,6 @@ def test_ivf_scans_fewer_rows(spark, emb, vecs):
     )).count()
     assert n_candidates < len(vecs)
     assert probed.count() == 10
-
-
-def test_ivf_written_index_partition_prunes(spark, emb, vecs, tmp_path_factory):
-    """The written IVF layout must turn nprobe selection into Hive-style
-    PARTITION PRUNING (PartitionFilters on ivf_cluster), and querying the
-    written index must return exactly what the in-memory path returns."""
-    from engine.ann import (
-        assign_clusters,
-        ivf_topk,
-        load_ivf_topk,
-        train_centroids,
-        write_ivf_index,
-    )
-
-    out = str(tmp_path_factory.mktemp("ivfidx"))
-    cast = emb.withColumn("embedding", F.col("embedding").cast("array<double>"))
-    cents = train_centroids(cast, n_clusters=8)
-    assigned = assign_clusters(cast, cents)
-    write_ivf_index(assigned, cents, out)
-
-    q = vecs[0].tolist()
-    from_disk = load_ivf_topk(spark, out, q, k=10, nprobe=2)
-    p = from_disk._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in p and "ivf_cluster" in p, p
-    mem = [tuple(r) for r in ivf_topk(assigned, cents, q, k=10, nprobe=2).collect()]
-    disk = [tuple(r) for r in from_disk.collect()]
-    assert mem == disk
 
 
 # --- product quantization (round 3) ------------------------------------------

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 from engine.multimodal import (
     FEATURE_SCHEMA,
     extract_features,
-    resize_images,
     sample_frames,
     synthetic_media,
 )
@@ -45,11 +44,3 @@ def test_frame_sampling(media):
         per[r["media_id"]] += 1
     for mid, n in per.items():
         assert n == -(-durs[mid] // 1000)
-
-
-def test_resize_metadata(media):
-    out = resize_images(media, 224, 224)
-    for r in out.filter("kind = 'image'").collect():
-        assert (r["width"], r["height"]) == (224, 224)
-    # non-images untouched
-    assert out.filter("kind != 'image' AND width = 224").count() == 0

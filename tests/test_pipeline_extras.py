@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from engine.decontam import decontaminate, ngram_overlap
 from engine.io import read_fixture
-from engine.pack import pack_documents, packing_stats
+from engine.pack import pack_documents
 from engine.sample import (
     portable_hash_expr,
     remix_rates,
@@ -55,20 +55,6 @@ def test_pack_bucket_scheme_invariance(spark, sf_dir):
     )
 
 
-def test_packing_stats(spark, sf_dir):
-    docs = read_fixture(spark, sf_dir, "documents")
-    packed = pack_documents(docs, seq_len=64)
-    s = packing_stats(packed, seq_len=64).collect()[0]
-    total = sum(r["n_tokens"] for r in packed.collect())
-    assert s["total_tokens"] == total
-    assert s["n_sequences"] == -(-total // 64)
-    # a straddler is exactly a doc whose span crosses a 64-boundary
-    n_straddle = sum(
-        1 for r in packed.collect() if r["pack_last"] != r["pack_first"]
-    )
-    assert s["n_straddling"] == n_straddle
-
-
 def test_pack_empty(spark):
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert pack_documents(empty, seq_len=64).count() == 0
@@ -78,32 +64,6 @@ def test_remix_rates_no_target_stratum_present():
     from engine.sample import remix_rates
 
     assert remix_rates({"en": 100}, {"xx": 1.0}) == {"xx": 0}
-
-
-def test_write_training_shards_roundtrip(spark, sf_dir, tmp_path):
-    from engine.pack import write_training_shards
-
-    docs = read_fixture(spark, sf_dir, "documents")
-    packed = pack_documents(docs, seq_len=64)
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(
-        docs, packed, out, packs_per_shard=8
-    ).collect()
-    assert len(manifest) > 1  # small packs_per_shard → multiple shards
-    back = spark.read.parquet(out)
-    # lossless: every doc present exactly once with its span columns
-    assert back.count() == docs.count()
-    assert {"doc_id", "text", "tok_start", "pack_first", "pack_last", "shard"} <= set(
-        back.columns
-    )
-    # shard = pack_first // packs_per_shard for every row
-    bad = back.filter(
-        F.col("shard") != (F.col("pack_first") / 8).cast("long")
-    ).count()
-    assert bad == 0
-    # manifest totals agree with the packed frame
-    total = sum(r["n_tokens"] for r in manifest)
-    assert total == sum(r["n_tokens"] for r in packed.collect())
 
 
 # --- decontamination -------------------------------------------------------
@@ -469,23 +429,6 @@ def test_chunk_windows_rejects_bad_overlap(spark):
         chunk_windows(docs, chunk_size=4, overlap=4)
 
 
-def test_write_shuffled_shards_roundtrip(spark, sf_dir, tmp_path):
-    from engine.sample import write_shuffled_shards
-
-    docs = read_fixture(spark, sf_dir, "documents")
-    out = str(tmp_path / "shuffled")
-    manifest = write_shuffled_shards(docs, out, n_shards=4)
-    m = {r.shard: r.n_docs for r in manifest.collect()}
-    assert sum(m.values()) == docs.count() and set(m) <= set(range(4))
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    # every row landed in the shard its shuffle_key dictates
-    bad = back.filter(
-        (F.col("shuffle_key") * 4 / F.lit(1 << 32)).cast("long") != F.col("shard")
-    ).count()
-    assert bad == 0
-
-
 def test_date_histogram_filled_emits_empty_buckets(spark):
     from engine.aggs import date_histogram_filled
 
@@ -528,19 +471,6 @@ def test_percentiles_bucket_fractional_labels(spark):
     assert out.columns == ["p2_5", "p25"]
 
 
-def test_pack_manifest_agrees_with_filtered_docs(spark, sf_dir, tmp_path):
-    from engine.pack import pack_documents, write_training_shards
-
-    docs = read_fixture(spark, sf_dir, "documents")
-    packed = pack_documents(docs, seq_len=64)
-    subset = docs.filter(F.col("doc_id") % 2 == 0)  # drop half AFTER packing
-    out = str(tmp_path / "shards_subset")
-    manifest = write_training_shards(subset, packed, out, packs_per_shard=8)
-    n_manifest = sum(r.n_docs for r in manifest.collect())
-    n_written = spark.read.parquet(out).count()
-    assert n_manifest == n_written == subset.count()
-
-
 def test_temperature_rates_null_only_and_zero_target():
     from engine.sample import temperature_rates
 
@@ -548,16 +478,3 @@ def test_temperature_rates_null_only_and_zero_target():
     r = temperature_rates({"a": 100, None: 50}, alpha=0.5, target_total=0)
     assert r == {"a": 0}
     assert temperature_rates({None: 50}, alpha=0.5, target_total=10) == {}
-
-
-def test_pack_manifest_counts_duplicated_docs_like_the_write(spark, sf_dir, tmp_path):
-    from engine.pack import pack_documents, write_training_shards
-
-    docs = read_fixture(spark, sf_dir, "documents")
-    packed = pack_documents(docs, seq_len=64)
-    doubled = docs.unionByName(docs.limit(5))  # 5 duplicate doc_ids
-    out = str(tmp_path / "shards_dup")
-    manifest = write_training_shards(doubled, packed, out, packs_per_shard=8)
-    n_manifest = sum(r.n_docs for r in manifest.collect())
-    n_written = spark.read.parquet(out).count()
-    assert n_manifest == n_written == docs.count() + 5

@@ -9,7 +9,6 @@ from engine.refine import (
     dedup_latest,
     extract_text_series,
     html_strip_udf,
-    refine_metrics,
     refine_pages,
 )
 
@@ -65,10 +64,6 @@ def test_refine_pages_end_to_end(spark):
     docs = refine_pages(pages_df(spark, 150, seed=5))
     assert docs.columns == ["doc_id", "url", "warc_ts", "lang", "text"]
     assert docs.count() == docs.select("url").distinct().count()
-    m = refine_metrics(docs)
-    row = m.agg(F.sum("n_docs"), F.sum("n_bytes")).collect()[0]
-    assert row[0] == docs.count()
-    assert row[1] == docs.agg(F.sum(F.length("text"))).collect()[0][0]
 
 
 def test_refine_lang_filter_counts_match_kept_rows(spark):

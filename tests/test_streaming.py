@@ -1,6 +1,6 @@
-"""§2.J streaming parity: continuous ingest, watermarked windows, session
-windows, and the incremental (NRT-style) index whose compacted form must
-score identically to a from-scratch batch build over the same corpus."""
+"""§2.J streaming ingest: the incremental (NRT-style) index whose compacted
+form must score identically to a from-scratch batch build over the same
+corpus."""
 
 from __future__ import annotations
 
@@ -9,17 +9,12 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from engine.pages import generate_pages
-from engine.streaming import (
-    IncrementalIndexer,
-    refined_stream,
-    sessionized,
-    stream_pages,
-    windowed_counts,
-)
+from engine.streaming import IncrementalIndexer
 from tests.test_mutate import assert_published_only
+
+PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def _write_pages_files(pdf, path, n_files):
@@ -50,98 +45,6 @@ def pages_dir(tmp_path_factory):
     return base
 
 
-def test_stream_refine_matches_batch(spark, pages_dir, tmp_path):
-    """Per-row refine invariant holds on the streaming path."""
-    out = str(tmp_path / "refined")
-    q = (
-        refined_stream(stream_pages(spark, pages_dir))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    batch = spark.read.parquet(pages_dir)
-    assert got.count() == batch.count()
-    # text extracted on the stream == stored text (byte-identical invariant)
-    joined = got.alias("s").join(batch.alias("b"), ["url", "warc_ts"])
-    assert joined.filter(F.col("s.text") != F.col("b.text")).count() == 0
-
-
-def test_windowed_counts_with_watermark(spark, pages_dir, tmp_path):
-    q = (
-        windowed_counts(stream_pages(spark, pages_dir), window="30 minutes")
-        .writeStream.format("memory")
-        .queryName("wc")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("select * from wc").collect()
-    # append mode emits only watermark-closed windows; totals are bounded by
-    # the corpus and each row is a (window, lang) bucket with n >= 1
-    assert all(r["n_pages"] >= 1 for r in rows)
-    batch_total = spark.read.parquet(pages_dir).count()
-    assert sum(r["n_pages"] for r in rows) <= batch_total
-
-
-def test_session_windows(spark, tmp_path):
-    import pandas as pd
-
-    ev = pd.DataFrame(
-        {
-            "user_id": [1, 1, 1, 2, 2],
-            "ts": pd.to_datetime(
-                [
-                    "2024-01-01 10:00:00",
-                    "2024-01-01 10:10:00",  # same session (gap 30m)
-                    "2024-01-01 11:30:00",  # new session
-                    "2024-01-01 10:00:00",
-                    "2024-01-01 10:05:00",
-                ]
-            ),
-        }
-    )
-    # a much-later sentinel event in a SECOND micro-batch advances the
-    # watermark past every real session so append mode flushes them
-    sentinel = pd.DataFrame(
-        {"user_id": [99], "ts": pd.to_datetime(["2024-01-02 00:00:00"])}
-    )
-    src = str(tmp_path / "events")
-    os.makedirs(src)
-    for name, frame in [("ev-000.parquet", ev), ("ev-001.parquet", sentinel)]:
-        pq.write_table(
-            pa.Table.from_pandas(frame, preserve_index=False),
-            os.path.join(src, name),
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    q = (
-        sessionized(stream, gap="30 minutes")
-        .writeStream.format("memory")
-        .queryName("sess")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r["user_id"], r["n_events"])
-        for r in spark.sql("select * from sess").collect()
-    }
-    assert rows == {(1, 2), (1, 1), (2, 2)}
-
-
 def test_incremental_index_matches_batch_build(spark, pages_dir, tmp_path):
     """NRT path: 3 micro-batches → delta segments → compact == batch build.
 
@@ -154,7 +57,11 @@ def test_incremental_index_matches_batch_build(spark, pages_dir, tmp_path):
 
     root = str(tmp_path / "inc")
     idx = IncrementalIndexer(root, n_buckets=4, block_size=32)
-    q = idx.writer(stream_pages(spark, pages_dir, max_files_per_trigger=1)).start()
+    pages = (
+        spark.readStream.schema(PAGES_SCHEMA).format("parquet")
+        .option("maxFilesPerTrigger", "1").load(pages_dir)
+    )
+    q = idx.writer(pages).start()
     q.awaitTermination(240)
     st = idx._load_state()
     assert len(st["batches"]) == 3, st
@@ -182,7 +89,8 @@ def test_incremental_index_matches_batch_build(spark, pages_dir, tmp_path):
 def test_incremental_batch_replay_is_idempotent(spark, pages_dir, tmp_path):
     root = str(tmp_path / "inc2")
     idx = IncrementalIndexer(root, n_buckets=4, block_size=32)
-    q = idx.writer(stream_pages(spark, pages_dir)).start()
+    pages = spark.readStream.schema(PAGES_SCHEMA).format("parquet").load(pages_dir)
+    q = idx.writer(pages).start()
     q.awaitTermination(240)
     st1 = idx._load_state()
     # simulate a foreachBatch redelivery of the last batch
@@ -190,50 +98,6 @@ def test_incremental_batch_replay_is_idempotent(spark, pages_dir, tmp_path):
     idx.process_batch(batch, st1["batches"][-1])
     st2 = idx._load_state()
     assert st1 == st2
-
-
-def test_streaming_percolator_matches_batch(spark, pages_dir, tmp_path):
-    """J8: streamed percolation == batch percolation over the same corpus
-    (same analyzer, same standing queries); exactly-once parquet appends."""
-    from engine.percolate import percolate
-    from engine.refine import html_strip_udf
-    from engine.streaming import percolate_stream
-    from engine.tokenizer import term_counts_udf
-
-    queries = [("q_table", "table scan"), ("q_merge", "merge"), ("q_none", "zzznope")]
-    out = str(tmp_path / "alerts")
-    q = percolate_stream(
-        stream_pages(spark, pages_dir), queries, out, str(tmp_path / "pckpt")
-    ).start()
-    q.awaitTermination(120)
-
-    got = {
-        (r["query_id"], r["url"])
-        for r in spark.read.parquet(out).select("query_id", "url").collect()
-    }
-    batch_pages = spark.read.parquet(pages_dir)
-    docs = batch_pages.withColumn("text", html_strip_udf(F.col("html")))
-    toks = docs.select(
-        "url", F.explode(term_counts_udf(F.col("text"))["terms"]).alias("term")
-    ).distinct()
-    want = {
-        (r["query_id"], r["url"])
-        for r in percolate(toks, queries, id_col="url").collect()
-    }
-    assert got == want and want  # non-vacuous
-    assert not any(qid == "q_none" for qid, _ in got)
-
-
-def test_incremental_indexer_accepts_refined_stream(spark, pages_dir, tmp_path):
-    """The documented composition writer(refined_stream(...)) must work:
-    refined batches have no 'html' column (text already extracted)."""
-    from engine.streaming import IncrementalIndexer
-
-    idxr = IncrementalIndexer(str(tmp_path / "nrt_refined"), n_buckets=2)
-    q = idxr.writer(refined_stream(stream_pages(spark, pages_dir))).start()
-    q.awaitTermination(120)
-    st = idxr._load_state()
-    assert st["n_docs"] == spark.read.parquet(pages_dir).count()
 
 
 def test_cross_batch_recrawl_upsert_matches_batch(spark, tmp_path):
@@ -291,7 +155,11 @@ def test_cross_batch_recrawl_upsert_matches_batch(spark, tmp_path):
 
     root = str(tmp_path / "up_inc")
     idx = IncrementalIndexer(root, n_buckets=4, block_size=32)
-    q = idx.writer(stream_pages(spark, pages_path, max_files_per_trigger=1)).start()
+    pages = (
+        spark.readStream.schema(PAGES_SCHEMA).format("parquet")
+        .option("maxFilesPerTrigger", "1").load(pages_path)
+    )
+    q = idx.writer(pages).start()
     q.awaitTermination(240)
     assert len(idx._load_state()["batches"]) == 3
     inc = LoadedIndex(spark, idx.compact(spark))

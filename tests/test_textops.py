@@ -9,7 +9,6 @@ from engine.textops import (
     language_id,
     language_id_udf,
     quality_score,
-    rolling_hash_udf,
     with_fingerprint,
     with_quality_metrics,
     with_token_counts,
@@ -65,15 +64,6 @@ def test_fingerprint_normalization(spark):
     )
     fps = [r["fingerprint"] for r in with_fingerprint(df).collect()]
     assert fps[0] == fps[1] == fps[2]
-
-
-def test_rolling_hash_deterministic_and_order_sensitive(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "a b c"), (3, "c b a")], "doc_id long, text string"
-    )
-    out = {r["doc_id"]: r["h"] for r in df.select("doc_id", rolling_hash_udf("text").alias("h")).collect()}
-    assert out[1] == out[2]
-    assert out[1] != out[3]
 
 
 # --- round-3 batch 2: aggregation tail (boxplot / MAD / string_stats /
