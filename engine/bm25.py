@@ -1,4 +1,4 @@
-"""BM25 scoring (Lucene-8 formula) — SQL-expression and NumPy twins.
+"""BM25 scoring (Lucene-8 formula) — SQL-expression and scalar twins.
 
 Pinned semantics (SURVEY.md §7 risk 1):
   idf(t)     = ln(1 + (N - df + 0.5) / (df + 0.5))
@@ -15,7 +15,8 @@ codegen and makes it DuckDB-oracle-checkable (SURVEY.md D8).
 
 from __future__ import annotations
 
-import numpy as np
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -38,6 +39,6 @@ def tf_norm_expr(
     )
 
 
-def idf_np(df: np.ndarray | float, n_docs: float) -> np.ndarray:
-    df = np.asarray(df, dtype=np.float64)
-    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+def idf(df: int, n_docs: int) -> float:
+    """Scalar idf: the one every index search scores with."""
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))

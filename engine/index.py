@@ -131,8 +131,8 @@ def run_starts(key_arrays: list[np.ndarray]) -> np.ndarray:
 
 
 # Postings one batched decode/re-encode kernel holds decoded at once (~24 B
-# each plus sort temporaries): merge and expunge cut their Arrow batches into
-# chunks of about this many postings (weight_chunks over the df column).
+# each plus sort temporaries): the merge (engine/merge.py) cuts each group
+# into chunks of about this many postings (weight_chunks over the df column).
 DECODE_CHUNK_POSTINGS = 1 << 21
 
 
@@ -147,20 +147,11 @@ def weight_chunks(weights: np.ndarray, starts: np.ndarray) -> list[tuple[int, in
     return list(zip(cuts[:-1], cuts[1:]))
 
 
-def complete_runs(batches, cols: list[str], keys: list[str], weight: str | None = None):
+def complete_runs(batches, cols: list[str], keys: list[str]):
     """Stream `mapInPandas` batches sorted by `keys` as (column arrays, run
     starts) chunks that hold only COMPLETE key runs: a run spanning Arrow
-    batches is carried over to the next one. With `weight`, chunks are also
-    cut by weight_chunks over that column."""
+    batches is carried over to the next one."""
     leftover: dict[str, np.ndarray] | None = None
-
-    def cut(arrs, starts):
-        if weight is None:
-            yield arrs, starts
-            return
-        for lo, hi in weight_chunks(arrs[weight], starts):
-            sub = {c: a[lo:hi] for c, a in arrs.items()}
-            yield sub, starts[(starts >= lo) & (starts < hi)] - lo
 
     for pdf in batches:
         if not len(pdf):
@@ -177,9 +168,9 @@ def complete_runs(batches, cols: list[str], keys: list[str], weight: str | None 
         # .copy() releases the batch's base arrays (a view would pin every
         # emitted row's buffers until the next batch); copies pointers only
         leftover = {c: arrs[c][last:].copy() for c in cols}
-        yield from cut({c: a[:last] for c, a in arrs.items()}, starts[:-1])
+        yield {c: a[:last] for c, a in arrs.items()}, starts[:-1]
     if leftover is not None and len(leftover[keys[0]]):
-        yield from cut(leftover, np.array([0]))
+        yield leftover, np.array([0])
 
 
 # Map-side partial postings: the pre-shuffle wire format. One row per
@@ -303,9 +294,14 @@ def _partial_merge_fn(avgdl: float, block_size: int):
 
 def postings_frame(keys: dict[str, np.ndarray], enc: dict) -> pd.DataFrame:
     """POSTINGS_SCHEMA frame from per-row key columns and the matching
-    codec.encode_lists columns."""
+    codec.encode_lists columns. The list-valued columns are object dtype
+    even when empty (pandas types an empty list float64, which Arrow cannot
+    convert to binary or array<struct>)."""
     cols = dict(keys)
-    cols.update((c, enc[c]) for c in _POSTINGS_COLS if c not in keys)
+    cols.update(
+        (c, pd.Series(enc[c], dtype=object) if isinstance(enc[c], list) else enc[c])
+        for c in _POSTINGS_COLS if c not in keys
+    )
     return pd.DataFrame(cols, columns=_POSTINGS_COLS)
 
 
@@ -744,7 +740,7 @@ def build_index(
                 "part",
                 (F.col("seg_id") * F.lit(n_salts) + F.col("part")).cast("int"),
             ).withColumn("seg_id", F.lit(0).cast("int"))
-        return merge_postings(raw, avgdl, block_size=block_size)
+        return merge_postings(raw, avgdl, n_buckets, docs_per_shard, block_size=block_size)
 
     merged = (
         checkpoint.stage("merged", stage_merged, schema=POSTINGS_SCHEMA)

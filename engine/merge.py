@@ -1,18 +1,30 @@
 """Segment-merge job (SURVEY.md §2.C7; BASELINE.json:6 "a segment-merge job
-combines sorted postings into queryable index shards").
+combines sorted postings into queryable index shards") — the one code path
+that decodes and re-encodes stored postings.
 
-Input: postings rows from 1+ segments and 1+ salt parts per (shard, term).
-Output: one doc-ordered posting row per (shard, term) — or several `part`-
-chained rows when a merged list exceeds `max_postings_per_row` (range-split
-by doc_id so readers/WAND stream parts in order; bounds per-row memory for
-stop-word-class terms at 10^12-doc scale).
+Input: postings rows from 1+ segments and 1+ salt parts per (shard, term),
+plus an optional dead set (a DataFrame of doc_id). Output: one doc-ordered
+posting row per (shard, term) — or several `part`-chained rows when a merged
+list exceeds `max_postings_per_row` (range-split by doc_id so readers/WAND
+stream parts in order; bounds per-row memory for stop-word-class terms at
+10^12-doc scale).
 
 Duplicate doc_ids across segments (a re-indexed document) resolve to the
-highest seg_id — ES upsert semantics [public]. A streaming `mapInPandas`
-merger decodes, merges and re-encodes a whole Arrow batch of terms at a time
-with the batched codec (engine/codec.py encode_lists / decode_rows) — no
-per-term Python (mirrors Lucene segment merging [public: Lucene merge
-policy]).
+highest seg_id — ES upsert semantics [public] — and dead doc_ids are dropped
+in the same pass, as a Lucene merge drops the docs its live-docs bitset
+marks deleted [public: Lucene NRT, TieredMergePolicy]. Every rewriter of an
+index goes through here: the build's non-bulk merge (engine/index.py),
+streaming compaction with the superseded re-crawls as the dead set
+(engine/streaming.py), and expunge_deletes / update_by_query with the
+tombstones (engine/mutate.py).
+
+The dead set is never collected or broadcast: its ids are keyed by shard,
+replicated across the shard's B buckets, and meet the postings in one
+(bucket, shard) cogroup. Each group decodes, merges and re-encodes its rows
+with the batched codec (engine/codec.py decode_rows / encode_lists) in
+chunks of ~2M postings — no per-term Python. Group memory is one shard's
+1/B of postings plus that shard's dead ids, so the same knob (n_buckets)
+that sizes partition pruning also bounds merge memory.
 """
 
 from __future__ import annotations
@@ -20,10 +32,15 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from . import BLOCK_SIZE
 from .codec import decode_rows, encode_lists
-from .index import POSTINGS_SCHEMA, complete_runs, postings_frame
+from .index import POSTINGS_SCHEMA, TOMBSTONE_SCHEMA, postings_frame, run_starts, weight_chunks
+
+# the posting columns a merge reads (df sizes the decode chunks)
+_MERGE_COLS = ["bucket", "shard", "tid", "seg_id", "part", "df", "skips",
+               "doc_ids_enc", "tfs_enc", "dls_enc"]
 
 
 def live_mask(ids: np.ndarray, dead: np.ndarray) -> np.ndarray:
@@ -37,10 +54,11 @@ def live_mask(ids: np.ndarray, dead: np.ndarray) -> np.ndarray:
 
 def _merge_runs(
     arrs: dict[str, np.ndarray], starts: np.ndarray, avgdl: float,
-    block_size: int, max_postings_per_row: int, drop_ids=None,
+    block_size: int, max_postings_per_row: int, dead: np.ndarray,
 ) -> pd.DataFrame:
     """Merge every (bucket, shard, tid) run of a chunk of posting rows with
-    one batched decode and one batched encode (engine/codec.py)."""
+    one batched decode and one batched encode (engine/codec.py), dropping
+    the doc_ids in the sorted array `dead`."""
     n_rows = len(arrs["tid"])
     ids, tfs, dls, counts = decode_rows(
         arrs["doc_ids_enc"], arrs["skips"], arrs["tfs_enc"], arrs["dls_enc"]
@@ -56,10 +74,7 @@ def _merge_runs(
     ids, tfs, dls, run = ids[order], tfs[order], dls[order], run[order]
     keep = np.ones(len(ids), dtype=bool)
     keep[:-1] = (ids[:-1] != ids[1:]) | (run[:-1] != run[1:])
-    if drop_ids is not None:
-        # expunge deletes during the merge (Lucene merges drop docs the
-        # live-docs bitset marks dead [public]); drop_ids is sorted
-        keep &= live_mask(ids, drop_ids)
+    keep &= live_mask(ids, dead)
     ids, tfs, dls, run = ids[keep], tfs[keep], dls[keep], run[keep]
 
     # range-split each run into parts of ≤ max_postings_per_row postings:
@@ -80,63 +95,75 @@ def _merge_runs(
     return postings_frame(keys, enc)
 
 
-def _merge_stream_fn(
-    avgdl: float, block_size: int, max_postings_per_row: int, drop_bc=None
-):
-    """Streaming merger for `mapInPandas` over partitions sorted by
-    (bucket,shard,tid,seg_id,part). All rows of a (bucket,shard,tid) land in
-    the same partition (the shuffle key is a pure function of them), so each
-    run is a complete merge group; runs spanning Arrow batches are carried
-    over (index.complete_runs). No per-term Arrow dispatch and no per-term
-    codec call: each chunk of complete runs — cut at ~2M postings by the df
-    column, so decoded memory stays bounded — is ONE batched decode, one
-    lexsort over (run, doc_id, seg_id), and ONE batched encode."""
-    keys = ["bucket", "shard", "tid"]
-    cols = keys + ["seg_id", "df", "skips", "doc_ids_enc", "tfs_enc", "dls_enc"]
+def _merge_group_fn(avgdl: float, block_size: int, max_postings_per_row: int):
+    """Cogroup body for one (bucket, shard) key: left = that posting slice
+    (any segments, any parts), right = the shard's dead ids. Rows are sorted
+    by (tid, seg_id, part), so each tid is one run, and merged in chunks of
+    complete runs cut at ~2M postings by the df column (index.weight_chunks),
+    so decoded memory stays bounded. Every row re-encodes — even with no
+    local deletes — because avgdl is global and block-max impact bounds must
+    stay sound for WAND. A tid whose every posting died emits no row."""
 
-    def fn(batches):
-        drop_ids = drop_bc.value if drop_bc is not None else None
-        for arrs, starts in complete_runs(batches, cols, keys, weight="df"):
-            yield _merge_runs(
-                arrs, starts, avgdl, block_size, max_postings_per_row, drop_ids
+    def fn(rows: pd.DataFrame, dead: pd.DataFrame) -> pd.DataFrame:
+        order = np.lexsort(
+            (rows["part"].to_numpy(), rows["seg_id"].to_numpy(), rows["tid"].to_numpy())
+        )
+        arrs = {c: rows[c].to_numpy()[order] for c in _MERGE_COLS}
+        drop = np.sort(dead["doc_id"].to_numpy(dtype=np.int64))
+        starts = run_starts([arrs["tid"]])
+        frames = [
+            _merge_runs(
+                {c: a[lo:hi] for c, a in arrs.items()},
+                starts[(starts >= lo) & (starts < hi)] - lo,
+                avgdl, block_size, max_postings_per_row, drop,
             )
+            for lo, hi in weight_chunks(arrs["df"], starts)
+        ]
+        return pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
 
     return fn
+
+
+def _with_shard_bucket(dead: DataFrame, docs_per_shard: int, n_buckets: int) -> DataFrame:
+    """Key dead ids by shard and replicate across the shard's B buckets —
+    the distributed routing that replaces any driver-side collect/broadcast
+    of the dead set (B × an 8-byte id, small against the postings)."""
+    return dead.select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        (F.col("doc_id") / F.lit(docs_per_shard)).cast("int").alias("shard"),
+        F.explode(F.array(*[F.lit(b) for b in range(n_buckets)])).alias("bucket"),
+    )
 
 
 def merge_postings(
     postings: DataFrame,
     avgdl: float,
+    n_buckets: int,
+    docs_per_shard: int,
+    dead: DataFrame | None = None,
     block_size: int = BLOCK_SIZE,
     max_postings_per_row: int = 1 << 20,
-    drop_ids: np.ndarray | None = None,
 ) -> DataFrame:
-    """One shuffle on (bucket, shard, tid) → merged, doc-ordered postings.
-
-    repartition + sortWithinPartitions + mapInPandas: the term space of each
-    shard spreads over all reducers (hash of the full key), Spark's external
-    sort groups segment/salt rows of a term contiguously, and the streaming
-    merger emits one output row per term (range-split into `part`s when a
-    stop-word-class list exceeds max_postings_per_row).
-
-    drop_ids: doc_ids to expunge during the merge (delete-by-query
-    tombstones, engine.mutate). Shipped as a Spark broadcast of one sorted
-    int64 array — the Lucene analog holds exactly this (a live-docs set per
-    segment) in executor RAM; deletes are assumed << corpus size."""
-    # explicit N: decode/merge/encode cost is Python CPU per row — AQE's
-    # byte-based coalescing would undershoot parallelism (see encode_segment)
+    """Merged, doc-ordered postings without the `dead` doc_ids, encoded
+    under `avgdl`: one (bucket, shard) cogroup of the posting rows with the
+    dead set (a DataFrame of doc_id, routed by _with_shard_bucket; None is
+    an empty right side). n_buckets and docs_per_shard are the index's own
+    routing. Terms whose every posting died drop out."""
     spark = postings.sparkSession
+    if dead is None:
+        dead = spark.createDataFrame([], TOMBSTONE_SCHEMA)
+    # explicit N on both sides: merge cost is Python CPU per row — AQE's
+    # byte-based coalescing would undershoot parallelism (see
+    # encode_segment); the cogroup reuses this partitioning
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    drop_bc = None
-    if drop_ids is not None and len(drop_ids):
-        drop_bc = spark.sparkContext.broadcast(
-            np.sort(np.asarray(drop_ids, dtype=np.int64))
-        )
+    rows = postings.select(*_MERGE_COLS).repartition(n_parts, "bucket", "shard")
+    keyed = _with_shard_bucket(dead, docs_per_shard, n_buckets).repartition(
+        n_parts, "bucket", "shard"
+    )
     return (
-        postings.repartition(n_parts, "bucket", "shard", "tid")
-        .sortWithinPartitions("bucket", "shard", "tid", "seg_id", "part")
-        .mapInPandas(
-            _merge_stream_fn(avgdl, block_size, max_postings_per_row, drop_bc),
-            POSTINGS_SCHEMA,
+        rows.groupBy("bucket", "shard")
+        .cogroup(keyed.groupBy("bucket", "shard"))
+        .applyInPandas(
+            _merge_group_fn(avgdl, block_size, max_postings_per_row), POSTINGS_SCHEMA
         )
     )

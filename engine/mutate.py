@@ -11,35 +11,30 @@ fresh internal doc id. The Spark-first re-expression:
   appended by `delete_by_query`, routed per shard to the search UDF via a
   cogroup (engine/searcher.py — the delete set is never broadcast whole),
   folded away by `expunge_deletes`;
-* `expunge_deletes` routes tombstones to posting rows by a (bucket, shard)
-  COGROUP — the dead set is NEVER materialized on the driver (a
-  delete_by_query("lang:xx") over a trillion-doc corpus tombstones billions
-  of ids; any collect()/broadcast of that set is a driver OOM). Tombstones
-  replicate across the B buckets of their shard (B × an 8-byte id — small
-  against the postings themselves), and each cogroup task rewrites one
-  (bucket, shard) posting slice: decode → drop dead ids → re-encode. Group
-  memory is one shard's 1/B of postings, so the SAME knob (n_buckets) that
-  sizes partition pruning also bounds expunge task memory at 10^12-doc
-  scale. Block-max metadata is recomputed with the post-delete avgdl (a
-  smaller avgdl RAISES per-posting impacts, so stale maxima would
-  under-bound and break WAND's pruning soundness);
+* `expunge_deletes` is one segment merge (engine/merge.py merge_postings)
+  with the tombstones as its dead set: the merge routes dead ids to posting
+  rows by a (bucket, shard) COGROUP, so the dead set is NEVER materialized
+  on the driver (a delete_by_query("lang:xx") over a trillion-doc corpus
+  tombstones billions of ids; any collect()/broadcast of that set is a
+  driver OOM). Block-max metadata is recomputed with the post-delete avgdl
+  (a smaller avgdl RAISES per-posting impacts, so stale maxima would
+  under-bound and break WAND's pruning soundness), and the part rows of a
+  term are merged into one list on the way;
 * `update_by_query` tombstones the matched docs and reindexes their
   transformed text as a NEW segment under fresh doc_ids in fresh shards;
-  the old postings go through the same (bucket, shard) expunge cogroup
-  (`expunge_postings`, under the post-update avgdl), then the ordinary
-  segment merge folds in the new segment with no drop list — the result is
-  value-identical to a fresh build over the transformed corpus
+  one merge of the old postings with that segment, with the matched and
+  prior tombstones as the dead set, rewrites every posting once — the
+  result is value-identical to a fresh build over the transformed corpus
   (tests/test_mutate.py pins this equivalence).
 
-Every posting rewrite here (expunge, and the match scan of
-delete/update-by-query) runs the batched codec (engine/codec.py
-encode_lists / decode_rows) over a whole batch of posting rows per call.
-Neither writer lays out files itself: the rewritten postings, the surviving
-doc_stats and the term strings go to index.publish_index — the writer
-build_index and streaming compaction use — which re-aggregates df/cf from
-the postings it just wrote (terms whose last posting died drop out),
-checks the dictionary for tid collisions, swaps each table in and writes
-the manifest last.
+merge_postings is the only code that decodes and re-encodes stored
+postings; the match scan of delete/update-by-query only decodes doc ids
+(codec.decode_rows over a whole batch of posting rows per call). Neither
+writer lays out files itself: the merged postings, the surviving doc_stats
+and the term strings go to index.publish_index — the writer build_index and
+streaming compaction use — which re-aggregates df/cf from the postings it
+just wrote (terms whose last posting died drop out), checks the dictionary
+for tid collisions, swaps each table in and writes the manifest last.
 """
 
 from __future__ import annotations
@@ -53,19 +48,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .codec import decode_rows, encode_lists
+from .codec import decode_rows
 from .corpus import corpus_stats
-from .index import (
-    _POSTINGS_COLS,
-    POSTINGS_SCHEMA,
-    TOMBSTONE_SCHEMA,
-    IndexManifest,
-    postings_frame,
-    publish_index,
-    read_index_table,
-    weight_chunks,
-)
-from .merge import live_mask
+from .index import TOMBSTONE_SCHEMA, IndexManifest, publish_index, read_index_table
+from .merge import merge_postings
 from .searcher import LoadedIndex
 
 
@@ -172,86 +158,6 @@ def delete_by_query(index: LoadedIndex, query: str, mode: str = "or") -> int:
 # expunge
 
 
-def _expunge_pdf(
-    pdf: pd.DataFrame, drop: np.ndarray, avgdl: float, block_size: int
-) -> pd.DataFrame:
-    """Rewrite posting rows: decode → drop dead ids (sorted `drop`,
-    searchsorted membership) → re-encode with the post-delete avgdl. Rows
-    whose every posting died are dropped. Each row is one list of a batched
-    decode and encode (engine/codec.py) — chunks of ~2M postings by the df
-    column, not one codec call per row."""
-    keys = ["tid", "bucket", "shard", "seg_id", "part"]
-    cols = {
-        c: pdf[c].to_numpy()
-        for c in keys + ["df", "doc_ids_enc", "tfs_enc", "dls_enc", "skips"]
-    }
-    frames = []
-    for lo, hi in weight_chunks(cols["df"], np.arange(len(pdf))):
-        ids, tfs, dls, counts = decode_rows(
-            cols["doc_ids_enc"][lo:hi], cols["skips"][lo:hi],
-            cols["tfs_enc"][lo:hi], cols["dls_enc"][lo:hi],
-        )
-        row = np.repeat(np.arange(hi - lo), counts)
-        live = live_mask(ids, drop)
-        enc = encode_lists(
-            ids[live], tfs[live], dls[live], row[live], hi - lo, avgdl, block_size
-        )
-        frames.append(postings_frame({c: cols[c][lo:hi] for c in keys}, enc))
-    out = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
-    return out[out["df"] > 0]
-
-
-def _expunge_cogroup_fn(avgdl: float, block_size: int):
-    """Cogroup body for one (bucket, shard) key: left = that posting slice,
-    right = the shard's tombstoned ids (replicated to this bucket). Every
-    row re-encodes — even with zero local deletes — because avgdl changed
-    globally and block-max impact bounds must stay sound for WAND."""
-
-    def fn(postings_pdf: pd.DataFrame, tomb_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(postings_pdf):
-            return pd.DataFrame(
-                {c: pd.Series(dtype=postings_pdf[c].dtype) for c in _POSTINGS_COLS}
-            )
-        drop = np.sort(tomb_pdf["doc_id"].to_numpy().astype(np.int64))
-        return _expunge_pdf(postings_pdf, drop, avgdl, block_size)
-
-    return fn
-
-
-def _with_shard_bucket(
-    tomb: DataFrame, docs_per_shard: int, n_buckets: int
-) -> DataFrame:
-    """Key tombstones by shard and replicate across the shard's B buckets —
-    the distributed routing that replaces any driver-side collect/broadcast
-    of the dead set."""
-    return tomb.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        (F.col("doc_id") / F.lit(docs_per_shard)).cast("int").alias("shard"),
-        F.explode(F.array(*[F.lit(b) for b in range(n_buckets)])).alias("_b"),
-    ).withColumn("bucket", F.col("_b").cast("int")).drop("_b")
-
-
-def expunge_postings(
-    postings: DataFrame,
-    tomb: DataFrame,
-    avgdl: float,
-    block_size: int,
-    n_buckets: int,
-    docs_per_shard: int,
-) -> DataFrame:
-    """Distributed expunge: drop every tombstoned doc from the postings and
-    re-encode (skips + block-max) under the post-delete `avgdl`. One
-    (bucket, shard) cogroup — the dead set shuffles alongside the postings,
-    never through the driver; group memory is one shard's 1/B of postings
-    plus that shard's dead ids (≤ docs_per_shard longs by construction)."""
-    keyed = _with_shard_bucket(tomb, docs_per_shard, n_buckets)
-    return (
-        postings.groupBy("bucket", "shard")
-        .cogroup(keyed.groupBy("bucket", "shard"))
-        .applyInPandas(_expunge_cogroup_fn(avgdl, block_size), POSTINGS_SCHEMA)
-    )
-
-
 def expunge_deletes(spark: SparkSession, root: str) -> IndexManifest:
     """Physically drop tombstoned docs from the postings and refresh every
     corpus statistic (ES _forcemerge?only_expunge_deletes [public]). After
@@ -266,9 +172,9 @@ def expunge_deletes(spark: SparkSession, root: str) -> IndexManifest:
 
     ds = read_index_table(spark, root, "doc_stats").join(tomb, "doc_id", "left_anti")
     n_docs, avgdl = corpus_stats(ds)
-    postings = expunge_postings(
-        read_index_table(spark, root, "postings"), tomb, avgdl, manifest.block_size,
-        manifest.n_buckets, manifest.docs_per_shard,
+    postings = merge_postings(
+        read_index_table(spark, root, "postings"), avgdl, manifest.n_buckets,
+        manifest.docs_per_shard, dead=tomb, block_size=manifest.block_size,
     )
     manifest = publish_index(
         dataclasses.replace(manifest, root=root, n_docs=n_docs, avgdl=avgdl),
@@ -301,16 +207,15 @@ def update_by_query(
     filter selecting docs to update. transform: fn(DataFrame) -> DataFrame
     mapping the matched docs to their new `text` (key preserved).
 
-    The old postings are expunged distributed (dead ids routed per
-    (bucket, shard) cogroup, never through the driver), then one segment
-    merge folds in the reindexed delta — the result is value-identical to a
-    from-scratch build over the transformed corpus and needs no separate
-    expunge. Returns (manifest, mapping DataFrame(doc_id, key)) — search
-    hits join back to stable keys via it.
+    One segment merge folds the reindexed delta into the old postings and
+    drops the dead ids (routed per (bucket, shard) cogroup, never through
+    the driver) — the result is value-identical to a from-scratch build
+    over the transformed corpus and needs no separate expunge. Returns
+    (manifest, mapping DataFrame(doc_id, key)) — search hits join back to
+    stable keys via it.
     """
     from .corpus import corpus_base, exploded_tf
     from .index import encode_segment
-    from .merge import merge_postings
     from .refine import assign_doc_ids
 
     manifest = IndexManifest.load(root)
@@ -332,7 +237,7 @@ def update_by_query(
         # SNAPSHOT the prior tombstones (distributed parquet write, never a
         # driver collect — billions of tombstones must not transit the
         # driver): this pass deletes the tombstone dir below, and both the
-        # expunge and the returned mapping's lineage must survive that
+        # merge and the returned mapping's lineage must survive that
         # deletion.
         import uuid
 
@@ -341,7 +246,7 @@ def update_by_query(
         prior = spark.read.parquet(snap)
         matched = matched.join(prior, "doc_id", "left_anti")
     # cache the id set (distributed, spillable) — it feeds the stats
-    # rebuild, the expunge and the returned mapping; never collected
+    # rebuild, the merge and the returned mapping; never collected
     dead = matched.select("doc_id").cache()
     # fold any pre-existing delete_by_query tombstones into the same pass —
     # it clears the tombstone dir, so it must expunge them too
@@ -381,18 +286,12 @@ def update_by_query(
         seg_id=manifest.n_segments,
         block_size=manifest.block_size,
     )
-    # distributed expunge of the old postings (dead ids routed per
-    # (bucket, shard) cogroup — see expunge_postings; no driver-side set),
-    # then the ordinary segment merge folds in the reindexed delta. The
-    # expunge already re-encodes under the post-update avgdl, so the merge
-    # needs no drop list at all.
-    old_live = expunge_postings(
-        read_index_table(spark, root, "postings"), all_dead, avgdl,
-        manifest.block_size, manifest.n_buckets, manifest.docs_per_shard,
-    )
+    # one segment merge folds the reindexed delta into the old postings and
+    # drops every dead id on the way (routed per (bucket, shard) cogroup,
+    # never through the driver), re-encoding under the post-update avgdl
     merged = merge_postings(
-        old_live.unionByName(delta),
-        avgdl,
+        read_index_table(spark, root, "postings").unionByName(delta), avgdl,
+        manifest.n_buckets, manifest.docs_per_shard, dead=all_dead,
         block_size=manifest.block_size,
     )
     # term strings: old dictionary ∪ terms the transform introduced

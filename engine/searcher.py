@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import bm25
 from .codec import decode_postings
 from .index import TOMBSTONE_SCHEMA, IndexManifest, read_index_table
 from .search import ParsedQuery, parse_query
@@ -246,8 +247,7 @@ class LoadedIndex:
         return {t: self._td_cache[t] for t in terms if t in self._td_cache}
 
     def idf(self, df: int) -> float:
-        n = self.manifest.n_docs
-        return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
+        return bm25.idf(df, self.manifest.n_docs)
 
     def _parse(self, texts: list[str]) -> tuple[list[ParsedQuery], dict]:
         """Analyze query strings with the analyzer the index manifest pins

@@ -32,7 +32,8 @@ class IncrementalIndexer:
       state.json        {next_doc_id, n_docs, sum_dl, batches: [...]}
 
     `compact(spark)` merges all delta segments into a queryable index at
-    `root/compacted` via the segment-merge job (C7) and publishes it with
+    `root/compacted` via the segment-merge job (C7, engine/merge.py), which
+    drops the superseded re-crawls in the same pass, and publishes it with
     the same writer build_index uses (index.publish_index) — mirroring
     Lucene's NRT flush-then-merge lifecycle [public].
 
@@ -226,16 +227,16 @@ class IncrementalIndexer:
         Docs superseded by a cross-batch re-crawl (see _fold_upsert) are
         expunged here — the Lucene merge-drops-deleted-docs analogue
         [public: Lucene NRT]: global stats (n_docs, avgdl) come from the
-        LIVE doc set, the dead postings are dropped distributed via the same
-        (bucket, shard) cogroup delete_by_query's expunge uses, and df/cf
-        are re-derived from the merged live postings (a plain sum of the
-        per-batch term stats would still count superseded docs) — so the
-        compacted index is value-identical to a batch build over the latest
-        crawl of every url."""
+        LIVE doc set, and ONE segment merge (merge.merge_postings) takes the
+        upsert tombstones as its dead set, routed per (bucket, shard)
+        cogroup like every other expunge, so each posting is decoded and
+        re-encoded once. df/cf are re-derived from the merged live postings
+        (a plain sum of the per-batch term stats would still count
+        superseded docs) — so the compacted index is value-identical to a
+        batch build over the latest crawl of every url."""
         from .corpus import corpus_stats
-        from .index import _POSTINGS_COLS, TOMBSTONE_SCHEMA, IndexManifest, publish_index
+        from .index import TOMBSTONE_SCHEMA, IndexManifest, publish_index
         from .merge import merge_postings
-        from .mutate import expunge_postings
 
         st = self._load_state()
         tomb_paths = [
@@ -253,12 +254,10 @@ class IncrementalIndexer:
         if tomb is not None:
             ds = ds.join(tomb, "doc_id", "left_anti")
         n_docs, avgdl = corpus_stats(ds)
-        raw = spark.read.parquet(os.path.join(self.root, "postings_delta"))
-        if tomb is not None:
-            raw = expunge_postings(
-                raw.select(*_POSTINGS_COLS), tomb, avgdl,
-                self.block_size, self.n_buckets, self.docs_per_shard,
-            )
+        merged = merge_postings(
+            spark.read.parquet(os.path.join(self.root, "postings_delta")), avgdl,
+            self.n_buckets, self.docs_per_shard, dead=tomb, block_size=self.block_size,
+        )
         manifest = IndexManifest(
             root=os.path.join(self.root, "compacted"),
             n_docs=n_docs,
@@ -270,8 +269,5 @@ class IncrementalIndexer:
         )
         # term strings come from the accumulated per-batch term_stats
         terms = spark.read.parquet(os.path.join(self.root, "term_stats")).select("term")
-        publish_index(
-            manifest, merge_postings(raw, avgdl, block_size=self.block_size), ds,
-            terms=terms.distinct(),
-        )
+        publish_index(manifest, merged, ds, terms=terms.distinct())
         return manifest.root

@@ -137,10 +137,10 @@ def digests(spark, work: str, on_publish=None) -> dict[str, dict[str, str]]:
     tables("build_index_merge", merged)
 
     # merge that splits long lists into parts and drops every 7th doc
-    drop = list(range(0, m.n_docs, 7))
+    dead = spark.range(0, m.n_docs, 7).withColumnRenamed("id", "doc_id")
     out["merge_split_drop"] = postings_digest(
-        merge_postings(read(bulk), m.avgdl, block_size=16,
-                       max_postings_per_row=40, drop_ids=drop)
+        merge_postings(read(bulk), m.avgdl, m.n_buckets, m.docs_per_shard, dead=dead,
+                       block_size=16, max_postings_per_row=40)
     )
 
     # delete_by_query, then update_by_query on the same index: the update

@@ -239,14 +239,14 @@ def test_batch_encode_decode_equals_batch_of_one(batch):
 @given(_posting_batches())
 @settings(max_examples=40, deadline=None)
 def test_expunge_batch_equals_per_row_reencode(batch):
-    """The expunge kernel rewrites a whole batch of posting rows at once:
+    """The merge group body expunges a whole batch of posting rows at once:
     every surviving row equals a batch-of-one re-encode of its live postings
     under the new avgdl, and a row that loses every posting to the drop set
     disappears."""
     import pandas as pd
 
     from engine.index import POSTINGS_SCHEMA
-    from engine.mutate import _expunge_pdf
+    from engine.merge import _merge_group_fn
 
     bs, lists, seed = batch
     rng = np.random.default_rng(seed)
@@ -258,7 +258,7 @@ def test_expunge_batch_equals_per_row_reencode(batch):
         drop.append(ids[rng.random(len(ids)) < 0.3])
     drop = np.unique(np.concatenate(drop))
     pdf = pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
-    out = _expunge_pdf(pdf, drop, 33.25, bs)
+    out = _merge_group_fn(33.25, bs, 1 << 20)(pdf, pd.DataFrame({"doc_id": drop}))
 
     want = {}
     for j, (ids, tfs, dls) in enumerate(lists):
@@ -268,7 +268,8 @@ def test_expunge_batch_equals_per_row_reencode(batch):
     assert 0 not in want and out["tid"].tolist() == sorted(want)
     for r in out.itertuples(index=False):
         w = want[r.tid]
-        assert (r.bucket, r.shard, r.seg_id, r.part) == (r.tid % 3, 0, 1, 0)
+        # the merge writes one list per term into segment 0
+        assert (r.bucket, r.shard, r.seg_id, r.part) == (r.tid % 3, 0, 0, 0)
         assert (r.doc_ids_enc, r.tfs_enc, r.dls_enc) == (
             w["doc_ids_enc"], w["tfs_enc"], w["dls_enc"])
         assert list(r.skips) == w["skips"]

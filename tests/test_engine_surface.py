@@ -34,7 +34,6 @@ REFERENCE_ONLY = {
     "quantize_norm": "scalar Lucene norm quantizer pinned against the SmallFloat table",
     "encode_postings": "per-list posting encoder the batched encode_lists is checked against",
     "embedding_near_dups": "exact all-pairs cosine oracle embedding_near_dups_lsh recall is measured against",
-    "idf_np": "NumPy BM25 idf the WAND tests score their reference top-k with",
 }
 
 

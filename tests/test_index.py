@@ -145,7 +145,9 @@ def test_merge_dedup_latest_segment_wins(spark):
     )
     seg0 = encode_segment(old, avgdl=10.0, n_buckets=2, docs_per_shard=100, seg_id=0)
     seg1 = encode_segment(new, avgdl=10.0, n_buckets=2, docs_per_shard=100, seg_id=1)
-    merged = merge_postings(seg0.unionByName(seg1), avgdl=10.0).collect()
+    merged = merge_postings(
+        seg0.unionByName(seg1), avgdl=10.0, n_buckets=2, docs_per_shard=100
+    ).collect()
     assert len(merged) == 1
     r = merged[0]
     ids, tfs, dls = decode_postings(

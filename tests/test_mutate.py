@@ -33,10 +33,10 @@ def docs(spark, sf_dir):
     return read_fixture(spark, sf_dir, "documents").select("doc_id", "text")
 
 
-def _build(spark, docs, root):
+def _build(spark, docs, root, n_segments=1, hot_df=None):
     build_index(
-        spark, docs, root, n_buckets=4, docs_per_shard=128, n_segments=1,
-        hot_df=None, block_size=32,
+        spark, docs, root, n_buckets=4, docs_per_shard=128, n_segments=n_segments,
+        hot_df=hot_df, block_size=32,
     )
     return LoadedIndex(spark, root)
 
@@ -102,11 +102,28 @@ def test_tombstoned_search_keeps_predelete_stats(spark, index, docs):
         assert wand == exh, q
 
 
-def test_expunge_equals_fresh_build(spark, index, docs, tmp_path):
+def _parts_per_term(index):
+    """Most posting rows any (shard, tid) of the index holds."""
+    return index.postings.groupBy("shard", "tid").count().agg(F.max("count")).first()[0]
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [
+        pytest.param({}, id="one_segment"),
+        # bulk-merged segments with salted hot terms: several part rows per
+        # tid, which the expunge merges into one list
+        pytest.param({"n_segments": 2, "hot_df": 10}, id="two_segments_hot_parts"),
+    ],
+)
+def test_expunge_equals_fresh_build(spark, docs, tmp_path, layout):
+    index = _build(spark, docs, str(tmp_path / "idx"), **layout)
+    assert (_parts_per_term(index) > 1) == bool(layout)
     mutate.delete_by_query(index, DELETE_Q, mode="and")
     dead = {r["doc_id"] for r in index.tombstones.collect()}
     m = mutate.expunge_deletes(spark, index.root)
     expunged = LoadedIndex(spark, index.root)
+    assert _parts_per_term(expunged) == 1
     survivors = docs.filter(~F.col("doc_id").isin(list(dead)))
     fresh = _build(spark, survivors, str(tmp_path / "fresh"))
     assert expunged.tombstones is None
@@ -197,8 +214,8 @@ def test_update_by_query_equals_fresh_build_on_transformed(spark, docs, tmp_path
 
 
 def test_merge_drop_ids_unit(spark):
-    """drop_ids path of merge_postings: tombstoned ids vanish, others keep
-    their (tf, dl)."""
+    """The dead set of merge_postings (a DataFrame of doc_id): tombstoned
+    ids vanish, others keep their (tf, dl)."""
     import pandas as pd
 
     from engine.codec import decode_postings, encode_postings
@@ -216,7 +233,10 @@ def test_merge_drop_ids_unit(spark):
     pdf = pd.DataFrame([row], columns=[f.name for f in POSTINGS_SCHEMA.fields])
     postings = spark.createDataFrame(pdf, POSTINGS_SCHEMA)
     drop = np.array([0, 13, 49], dtype=np.int64)
-    out = merge_postings(postings, avgdl=40.0, block_size=8, drop_ids=drop).collect()
+    dead = spark.createDataFrame([(int(d),) for d in drop], "doc_id long")
+    out = merge_postings(
+        postings, avgdl=40.0, n_buckets=1, docs_per_shard=1 << 20, dead=dead, block_size=8
+    ).collect()
     assert len(out) == 1
     r = out[0]
     got_ids, got_tfs, _ = decode_postings(
@@ -364,18 +384,18 @@ def test_expunge_million_row_tombstone_set(spark, index, docs, tmp_path):
 
 @pytest.mark.parametrize("chunk", [None, 7])
 def test_merge_stream_matches_per_term_reference(monkeypatch, chunk):
-    """The batched merge kernel (no Spark): terms spread over two segments
-    with overlapping doc ids and two Arrow batches that split a run. Each
-    output row must equal a batch-of-one encode of the reference merge —
-    highest segment wins per doc, drop_ids vanish, lists range-split into
-    parts of max_postings_per_row — also when the batch is cut into chunks
+    """The merge group body (no Spark): terms spread over two segments with
+    overlapping doc ids, the group's rows and dead ids in arbitrary order.
+    Each output row must equal a batch-of-one encode of the reference merge
+    — highest segment wins per doc, dead ids vanish, lists range-split into
+    parts of max_postings_per_row — also when the group is cut into chunks
     of a few postings (chunk=7)."""
     import pandas as pd
 
     import engine.index
     from engine.codec import encode_postings
     from engine.index import POSTINGS_SCHEMA
-    from engine.merge import _merge_stream_fn
+    from engine.merge import _merge_group_fn
 
     if chunk is not None:
         monkeypatch.setattr(engine.index, "DECODE_CHUNK_POSTINGS", chunk)
@@ -399,8 +419,9 @@ def test_merge_stream_matches_per_term_reference(monkeypatch, chunk):
             dls = np.array([merged[d][1] for d in ids])
             want.append((tid, p // maxp, encode_postings(ids, tfs, dls, avgdl, bs)))
     pdf = pd.DataFrame(rows, columns=[f.name for f in POSTINGS_SCHEMA.fields])
-    fn = _merge_stream_fn(avgdl, bs, maxp, drop_bc=type("B", (), {"value": drop}))
-    out = pd.concat(list(fn(iter([pdf.iloc[:5], pdf.iloc[5:]]))), ignore_index=True)
+    shuffled = pdf.sample(frac=1, random_state=3)
+    assert not shuffled.index.is_monotonic_increasing
+    out = _merge_group_fn(avgdl, bs, maxp)(shuffled, pd.DataFrame({"doc_id": drop[::-1]}))
     assert [(r.tid, r.part) for r in out.itertuples()] == [(t, p) for t, p, _ in want]
     for r, (_, _, w) in zip(out.itertuples(), want):
         assert (r.bucket, r.shard, r.seg_id) == (1, 0, 0)
@@ -408,3 +429,64 @@ def test_merge_stream_matches_per_term_reference(monkeypatch, chunk):
             w["doc_ids_enc"], w["tfs_enc"], w["dls_enc"])
         assert list(r.skips) == w["skips"]
         assert (float(r.block_max), r.df, r.cf) == (w["block_max"], w["df"], w["cf"])
+
+
+def _python_stages_over_postings(df) -> int:
+    """Python-UDF nodes of df's physical plan whose input reads a postings
+    table (postings/ or a streaming postings_delta/). A cached input is an
+    in-memory scan with no children, so its plan is not walked."""
+
+    def walk(node) -> tuple[int, bool]:
+        kids = node.children()
+        n, reads = 0, False
+        for i in range(kids.size()):
+            kn, kr = walk(kids.apply(i))
+            n, reads = n + kn, reads or kr
+        name = node.getClass().getSimpleName()
+        if name == "FileSourceScanExec":
+            paths = node.relation().location().rootPaths().mkString(",")
+            reads = reads or any(
+                os.path.basename(p.rstrip("/")).startswith("postings")
+                for p in paths.split(",")
+            )
+        if reads and any(k in name for k in ("Python", "InPandas", "InArrow")):
+            n += 1
+        return n, reads
+
+    return walk(df._jdf.queryExecution().sparkPlan())[0]
+
+
+def test_rewriters_transcode_postings_once(spark, docs, tmp_path, monkeypatch):
+    """compact(), expunge_deletes and update_by_query each hand
+    publish_index a postings frame with exactly ONE Python-UDF stage over
+    postings: the merge that drops the dead set, with no separate expunge
+    pass in front of it."""
+    import engine.index
+    from engine.streaming import IncrementalIndexer
+    from tests.gen_postings_digest import PAGES_SCHEMA, _recrawl_batches
+
+    index = _build(spark, docs, str(tmp_path / "idx"))
+    inc = IncrementalIndexer(str(tmp_path / "stream"), n_buckets=4, block_size=16)
+    for i, b in enumerate(_recrawl_batches()):
+        inc.process_batch(spark.createDataFrame(b, PAGES_SCHEMA), i)
+    # the re-crawls left upsert tombstones: compaction has a dead set
+    assert os.path.isdir(os.path.join(inc.root, "tombstones"))
+
+    real = engine.index.publish_index
+    stages = []
+
+    def capture(manifest, postings, *args, **kwargs):
+        stages.append(_python_stages_over_postings(postings))
+        return real(manifest, postings, *args, **kwargs)
+
+    monkeypatch.setattr(engine.index, "publish_index", capture)
+    monkeypatch.setattr(mutate, "publish_index", capture)
+    inc.compact(spark)
+    assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
+    mutate.expunge_deletes(spark, index.root)
+    assert mutate.delete_by_query(LoadedIndex(spark, index.root), "table") > 0
+    mutate.update_by_query(
+        spark, index.root, docs, F.col("doc_id") % 5 == 0,
+        lambda d: d.withColumn("text", F.concat("text", F.lit(" zzonce"))),
+    )
+    assert stages == [1, 1, 1], stages

@@ -3,7 +3,7 @@
 import numpy as np
 import pytest
 
-from engine.bm25 import idf_np
+from engine import bm25
 from engine.codec import encode_postings
 from engine.wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk
 
@@ -21,7 +21,7 @@ def make_corpus(rng, n_docs=400, n_terms=8, density=0.3, block_size=16):
         tfs = rng.integers(1, 20, size=len(ids))
         dl = dls[ids]
         df = len(ids)
-        idf = float(idf_np(df, n_docs))
+        idf = bm25.idf(df, n_docs)
         enc = encode_postings(ids, tfs, dl, avgdl, block_size=block_size)
         lists.append((ids, tfs, dl, idf))
         encs.append(enc)
