@@ -5,8 +5,8 @@ Pinned semantics (SURVEY.md §7 risk 1):
   score(t,d) = idf(t) * tf / (tf + k1 * (1 - b + b * dl/avgdl))
   k1 = 1.2, b = 0.75 (BASELINE.json:6), no (k1+1) factor
   [public: Lucene BM25Similarity; LUCENE-8563 dropped (k1+1) in Lucene 8 —
-  rank-preserving], exact doc length (no 1-byte norm quantization; a
-  `quantize_norms` emulation flag is future work, documented).
+  rank-preserving], exact doc length by default (build_index's
+  `quantize_norms` flag emulates Lucene's lossy 1-byte norms).
 Tie-break: score DESC, doc_id ASC (BASELINE.json:14 rank-identity).
 
 The SQL form keeps the entire exact-scoring path inside Catalyst whole-stage

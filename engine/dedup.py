@@ -621,10 +621,16 @@ def connected_components(
     are dense and tiny (diameter ~2-3), so this converges in a handful of
     shuffle joins even at web scale; convergence is detected by the (sum of
     labels) fixpoint, one cheap agg per round. The edge table is cached once
-    and reused every round."""
+    and reused every round. No fixpoint within `max_iter` rounds raises:
+    unconverged labels would split clusters silently."""
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    # plus a self-loop per node, so each round reads the previous labels
+    # ONCE (own label and neighbours' in one join): reading them twice
+    # doubled the plan tree every round, and a 10-round chain ran the
+    # driver out of heap printing it
     edges = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        sym.unionByName(sym.select("a", F.col("a").alias("b")))
         .distinct()
         .cache()
     )
@@ -635,12 +641,8 @@ def connected_components(
     _lblsum = F.sum(F.xxhash64("lbl").cast("decimal(38,0)"))  # no int64 overflow under ANSI
     prev_sum = labels.agg(_lblsum).collect()[0][0]
     for _ in range(max_iter):
-        nbr = edges.join(
-            labels.select(F.col("a").alias("b"), "lbl"), "b"
-        ).select("a", "lbl")
         new = (
-            labels.select("a", "lbl")
-            .unionByName(nbr)
+            edges.join(labels.select(F.col("a").alias("b"), "lbl"), "b")
             .groupBy("a")
             .agg(F.min("lbl").alias("lbl"))
             .cache()
@@ -651,6 +653,12 @@ def connected_components(
         if cur_sum == prev_sum:  # labels monotone non-increasing → fixpoint
             break
         prev_sum = cur_sum
+    else:
+        labels.unpersist()
+        edges.unpersist()
+        raise RuntimeError(
+            f"connected_components: labels did not converge in {max_iter} rounds"
+        )
     edges.unpersist()
     return labels.select(
         F.col("a").alias("doc_id"), F.col("lbl").alias("canonical_id")

@@ -25,8 +25,9 @@ The encode UDF is a streaming `mapInPandas` kernel over the sorted shuffle
 output; each Arrow batch of term runs is one batched codec call
 (engine/codec.py encode_lists).
 
-Every writer of an index — this build, streaming compaction and the
-expunge / update-by-query rewrites — publishes it through `publish_index`,
+Every writer of an index — this build (streaming compaction included: it
+is a build_index over the stored source docs) and the expunge /
+update-by-query rewrites — publishes it through `publish_index`,
 and every reader opens its tables with the declared schemas below
 (`read_index_table`).
 """
@@ -341,7 +342,6 @@ def encode_segment(
     n_buckets: int = 8,
     docs_per_shard: int = 1 << 20,
     seg_id: int = 0,
-    hot_df: int | None = None,
     n_salts: int = 4,
     hot_terms: list[str] | None = None,
     block_size: int = BLOCK_SIZE,
@@ -350,60 +350,40 @@ def encode_segment(
 ) -> DataFrame:
     """Encode one segment's postings from tf rows (term, doc_id, tf, dl).
 
-    hot_terms: the explicit hot-term list (build_index precomputes it from
-    cached term stats). When the caller has no list but sets hot_df, the
-    list is derived here from tf_dl (one extra distinct-count aggregate) —
-    the threshold contract the parameter name promises.
-
     The repartition below IS the salted repartition-by-term shuffle: one
     Exchange on (bucket,shard,seg_id,part). Non-hot terms route by term hash
-    (whole list on one reducer); hot terms are salted so no single reducer
-    gets the full "the" list (C5 salting). Each reducer then sort-streams
-    its runs through one mapInPandas encoder — Spark's external shuffle sort
-    does the grouping, so memory stays bounded and there is no per-term
-    Arrow dispatch.
+    (whole list on one reducer); hot terms (build_index precomputes the list
+    from cached term stats) are salted so no single reducer gets the full
+    "the" list (C5 salting). Each reducer then sort-streams its runs through
+    one mapInPandas encoder — Spark's external shuffle sort does the
+    grouping, so memory stays bounded and there is no per-term Arrow
+    dispatch.
 
-    doc_bounds=(lo, hi): when the segment's doc_id range is known, hot-term
-    salts are CONTIGUOUS DOC RANGES (salt = (doc_id−lo)·S/(hi−lo+1)) instead
-    of doc-id hashes. Load balance is identical for dense doc ids (B6
-    guarantees density), but every salt part then covers a disjoint doc
-    range — which makes the segment merge a pure concatenation (the Lucene
-    bulk-merge analog, see build_index) instead of a decode/re-encode of
-    every posting. Without bounds the hash salt is used (streaming deltas,
-    arbitrary caller ids)."""
-    if hot_terms is None and hot_df is not None:
-        hot_terms = [
-            r["term"]
-            for r in tf_dl.groupBy("term")
-            .agg(F.count_distinct("doc_id").alias("df"))
-            .filter(F.col("df") > hot_df)
-            .select("term")
-            .collect()
-        ]
+    doc_bounds=(lo, hi), the segment's doc_id range, is required with
+    hot_terms: hot-term salts are CONTIGUOUS DOC RANGES (salt =
+    (doc_id−lo)·S/(hi−lo+1)). Load balance is that of a hash salt for dense
+    doc ids (B6 guarantees density), but every salt part covers a disjoint
+    doc range — which makes the segment merge a pure concatenation (the
+    Lucene bulk-merge analog, see build_index) instead of a decode/re-encode
+    of every posting."""
     df = (
         tf_dl.withColumn("tid", term_id(F.col("term")))
         .withColumn("bucket", F.pmod(F.col("tid"), F.lit(n_buckets)).cast("int"))
         .withColumn("shard", (F.col("doc_id") / F.lit(docs_per_shard)).cast("int"))
         .withColumn("seg_id", F.lit(seg_id).cast("int"))
     )
-    term_part = F.pmod(F.xxhash64("tid", F.lit(1)), F.lit(n_salts)).cast("int")
+    part = F.pmod(F.xxhash64("tid", F.lit(1)), F.lit(n_salts)).cast("int")
     if hot_terms:
-        hot = F.col("term").isin(list(hot_terms))
-        if doc_bounds is not None and doc_bounds[1] >= doc_bounds[0]:
-            lo, hi = doc_bounds
-            span = hi - lo + 1
-            salt = F.greatest(
-                F.lit(0),
-                F.least(
-                    F.lit(n_salts - 1),
-                    F.floor((F.col("doc_id") - F.lit(lo)) * F.lit(n_salts) / F.lit(span)),
-                ),
-            ).cast("int")
-        else:
-            salt = F.pmod(F.xxhash64("doc_id"), F.lit(n_salts)).cast("int")
-        df = df.withColumn("part", F.when(hot, salt).otherwise(term_part))
-    else:
-        df = df.withColumn("part", term_part)
+        lo, hi = doc_bounds
+        salt = F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(n_salts - 1),
+                F.floor((F.col("doc_id") - F.lit(lo)) * F.lit(n_salts) / F.lit(hi - lo + 1)),
+            ),
+        ).cast("int")
+        part = F.when(F.col("term").isin(list(hot_terms)), salt).otherwise(part)
+    df = df.withColumn("part", part)
     # EXPLICIT partition count: AQE sizes post-shuffle partitions by shuffle
     # BYTES and would coalesce this exchange to a handful of tasks — but the
     # cost behind each row is Python-side encode CPU, so parallelism must
@@ -616,8 +596,8 @@ def build_index(
     part order. This is the Lucene bulk-merge analog [public: Lucene merge
     of segments with no deletions copies postings wholesale]. The general
     decode/merge/encode job (engine/merge.py) remains the engine for inputs
-    that CAN overlap: streaming compaction, reindex upserts, tombstone
-    expunges (engine/streaming.py, engine/mutate.py) — set bulk_merge=False
+    that CAN overlap: reindex upserts and tombstone expunges
+    (engine/mutate.py) — set bulk_merge=False
     to route this build through it (equivalence is pinned by
     tests/test_index.py::test_segment_invariance on both paths).
     """
@@ -694,7 +674,7 @@ def build_index(
     def stage_segments():
         if n_segments <= 1:
             return encode_segment(
-                tf_dl, avgdl, n_buckets, docs_per_shard, 0, hot_df, n_salts,
+                tf_dl, avgdl, n_buckets, docs_per_shard, 0, n_salts,
                 hot_terms, block_size, doc_bounds=(doc_mn, doc_mx),
                 partial_encode=partial_encode,
             )
@@ -713,7 +693,7 @@ def build_index(
             seg_tf = exploded_tf(base.filter(seg_col == s))
             parts.append(
                 encode_segment(
-                    seg_tf, avgdl, n_buckets, docs_per_shard, s, hot_df, n_salts,
+                    seg_tf, avgdl, n_buckets, docs_per_shard, s, n_salts,
                     hot_terms, block_size,
                     doc_bounds=(
                         doc_mn + s * seg_size,

@@ -12,11 +12,11 @@ stream parts in order; bounds per-row memory for stop-word-class terms at
 Duplicate doc_ids across segments (a re-indexed document) resolve to the
 highest seg_id — ES upsert semantics [public] — and dead doc_ids are dropped
 in the same pass, as a Lucene merge drops the docs its live-docs bitset
-marks deleted [public: Lucene NRT, TieredMergePolicy]. Every rewriter of an
-index goes through here: the build's non-bulk merge (engine/index.py),
-streaming compaction with the superseded re-crawls as the dead set
-(engine/streaming.py), and expunge_deletes / update_by_query with the
-tombstones (engine/mutate.py).
+marks deleted [public: Lucene NRT, TieredMergePolicy]. Every rewriter of
+stored postings goes through here: the build's non-bulk merge
+(engine/index.py) and expunge_deletes / update_by_query with the tombstones
+(engine/mutate.py). Streaming compaction stores no postings between
+compactions, so it is a plain build_index (engine/streaming.py).
 
 The dead set is never collected or broadcast: its ids are keyed by shard,
 replicated across the shard's B buckets, and meet the postings in one

@@ -223,6 +223,17 @@ def test_connected_components_string_ids_chain(spark):
     }, got
 
 
+def test_connected_components_raises_when_unconverged(spark):
+    """A 10-node chain needs ~9 label rounds: two rounds must raise rather
+    than return split clusters; enough rounds give one cluster."""
+    from engine.dedup import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(9)], "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        connected_components(pairs, max_iter=2)
+    assert {r["canonical_id"] for r in connected_components(pairs).collect()} == {0}
+
+
 def test_simhash_banding_guarantees_recall(spark, corpus):
     """Pigeonhole banding must be sized to max_hamming: every pair within
     the threshold appears, verified against the brute-force O(n^2) oracle

@@ -432,9 +432,9 @@ def test_merge_stream_matches_per_term_reference(monkeypatch, chunk):
 
 
 def _python_stages_over_postings(df) -> int:
-    """Python-UDF nodes of df's physical plan whose input reads a postings
-    table (postings/ or a streaming postings_delta/). A cached input is an
-    in-memory scan with no children, so its plan is not walked."""
+    """Python-UDF nodes of df's physical plan whose input reads a stored
+    postings table. A cached input is an in-memory scan with no children,
+    so its plan is not walked."""
 
     def walk(node) -> tuple[int, bool]:
         kids = node.children()
@@ -457,10 +457,11 @@ def _python_stages_over_postings(df) -> int:
 
 
 def test_rewriters_transcode_postings_once(spark, docs, tmp_path, monkeypatch):
-    """compact(), expunge_deletes and update_by_query each hand
-    publish_index a postings frame with exactly ONE Python-UDF stage over
-    postings: the merge that drops the dead set, with no separate expunge
-    pass in front of it."""
+    """expunge_deletes and update_by_query each hand publish_index a
+    postings frame with exactly ONE Python-UDF stage over stored postings:
+    the merge that drops the dead set, with no separate expunge pass in
+    front of it. compact() reads no stored postings at all: it builds the
+    index from the stored source docs."""
     import engine.index
     from engine.streaming import IncrementalIndexer
     from tests.gen_postings_digest import PAGES_SCHEMA, _recrawl_batches
@@ -489,4 +490,4 @@ def test_rewriters_transcode_postings_once(spark, docs, tmp_path, monkeypatch):
         spark, index.root, docs, F.col("doc_id") % 5 == 0,
         lambda d: d.withColumn("text", F.concat("text", F.lit(" zzonce"))),
     )
-    assert stages == [1, 1, 1], stages
+    assert stages == [0, 1, 1], stages

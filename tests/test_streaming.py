@@ -181,3 +181,57 @@ def test_cross_batch_recrawl_upsert_matches_batch(spark, tmp_path):
         a = [r["score"] for r in inc.search(query, k=10).collect()]
         b = [r["score"] for r in bat.search(query, k=10).collect()]
         assert a == b, (query, a, b)
+
+
+def test_replay_after_crash_before_commit_matches_clean_run(spark, tmp_path):
+    """A crash after process_batch wrote source/batch=1 but before it
+    committed state.json: the replayed batch must not read that uncommitted
+    table as a prior batch (every row would lose to itself), so the
+    compacted index equals a clean run's."""
+    import shutil
+
+    from engine.searcher import LoadedIndex
+    from tests.gen_postings_digest import _recrawl_batches
+
+    b0, b1 = (spark.createDataFrame(b, PAGES_SCHEMA) for b in _recrawl_batches())
+
+    def run(name: str, crash: bool) -> LoadedIndex:
+        idx = IncrementalIndexer(str(tmp_path / name), n_buckets=4, block_size=32)
+        idx.process_batch(b0, 0)
+        if crash:
+            saved = str(tmp_path / "state-before-batch-1.json")
+            shutil.copy(idx._state_path, saved)
+            idx.process_batch(b1, 1)
+            shutil.copy(saved, idx._state_path)
+            assert os.path.isdir(os.path.join(idx.root, "source", "batch=1"))
+        idx.process_batch(b1, 1)
+        return LoadedIndex(spark, idx.compact(spark))
+
+    clean, replayed = run("clean", crash=False), run("replayed", crash=True)
+    assert clean.manifest.n_docs == 150  # every url once, its latest crawl
+    assert replayed.manifest.n_docs == clean.manifest.n_docs
+    for query in ["w014 join", "fast table", "the"]:
+        a = [tuple(r) for r in replayed.search(query, k=20).collect()]
+        b = [tuple(r) for r in clean.search(query, k=20).collect()]
+        assert a == b and a, (query, a, b)
+
+
+def test_compact_refuses_root_of_older_layout(spark, tmp_path):
+    """A committed batch without stored source docs (a batch written by the
+    older per-batch postings layout, postings_delta/) fails compact() and
+    later batches loudly; neither indexes the batches that do have source."""
+    from tests.gen_postings_digest import _recrawl_batches
+
+    b0, b1 = (spark.createDataFrame(b, PAGES_SCHEMA) for b in _recrawl_batches())
+    idx = IncrementalIndexer(str(tmp_path / "mixed"), n_buckets=4, block_size=32)
+    idx.process_batch(b0, 0)
+    os.makedirs(os.path.join(idx.root, "postings_delta", "batch=1"))
+    st = idx._load_state()
+    st["batches"].append(1)
+    idx._save_state(st)
+    with pytest.raises(RuntimeError, match="batch=1"):
+        idx.compact(spark)
+    assert not os.path.exists(os.path.join(idx.root, "compacted"))
+    with pytest.raises(RuntimeError, match="batch=1"):
+        idx.process_batch(b1, 2)
+    assert idx._load_state() == st
