@@ -9,9 +9,11 @@ Layout (mirrors the ES/Lucene shard model [public]):
 * the doc space is split into **shards** (shard = doc_id // docs_per_shard) —
   query-time WAND runs per shard over all query terms, like an ES shard
   search; shards parallelize scoring at 10^12-doc scale;
-* within a shard, postings are keyed by **bucket = pmod(xxhash64(term), B)**
-  — the file-partition column, so a term lookup prunes to one bucket
-  directory per shard (Catalyst partition pruning, SURVEY.md D3);
+* the shard is the file-partition column: `postings/shard=<s>/` is one
+  file of one row group sorted by (tid, part) (engine/io.py), so a shard's
+  search runs inside one scan task and a query's terms reach the Parquet
+  scan as a pushed `tid IN (...)` (SURVEY.md D3); **bucket =
+  pmod(xxhash64(term), B)** is a data column that keys the segment merge;
 * a build over multiple input chunks produces **segments** (seg_id); the
   merge job (engine/merge.py) combines segments into one posting row per
   (shard, term) — Lucene's segment merge [public];
@@ -108,11 +110,13 @@ INDEX_SCHEMAS = {
 
 
 def read_index_table(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """An index table read with its declared schema: no footer inference,
-    and a table with no data files (an index whose every doc was deleted
-    and expunged) reads as 0 rows instead of failing. Bucket partition
-    pruning on postings is unchanged."""
-    return spark.read.schema(INDEX_SCHEMAS[name]).parquet(os.path.join(root, name))
+    """An index table read with its declared schema and columns: no footer
+    inference, a `shard=<s>/` directory column only where the schema
+    declares it (postings, not tombstones), and a table with no data files
+    (an index whose every doc was deleted and expunged) reads as 0 rows
+    instead of failing."""
+    schema = INDEX_SCHEMAS[name]
+    return spark.read.schema(schema).parquet(os.path.join(root, name)).select(*schema.names)
 
 
 def term_id(term_col):
@@ -504,7 +508,9 @@ def publish_index(
 
     Each table is written to <name>.tmp and swapped in per table; other
     entries of the root (tombstones/, update_mapping/, _dead_snapshots/)
-    stay put. term_stats (term, df, cf) is the build's own cached
+    stay put. The staged postings pass io.check_shard_layout before any
+    swap, so a shard too large for one row group fails the publish rather
+    than leave an index no reader opens. term_stats (term, df, cf) is the build's own cached
     statistics. Writers that rewrote postings pass `terms` (a `term`
     column, one row per term) instead: df/cf are then re-aggregated per
     tid from the postings just written, and terms whose last posting died
@@ -517,13 +523,18 @@ def publish_index(
     file and row-group term ranges do not overlap and the driver-side seek
     (LoadedIndex._lookup, a filtered pyarrow read) prunes to the row groups
     whose footer min/max term range holds a wanted term."""
-    from .io import write_postings_shards
+    from .io import check_shard_layout, write_postings_shards
 
     spark, root = postings.sparkSession, manifest.root
     os.makedirs(root, exist_ok=True)
     n_files = max(1, manifest.n_docs // META_FILE_DOCS)
     staged = os.path.join(root, "postings.tmp")
     write_postings_shards(postings, staged)
+    try:
+        check_shard_layout(staged)  # a shard over the row-group ceiling
+    except ValueError:
+        shutil.rmtree(staged)
+        raise
     reaggregated = term_stats is None
     if reaggregated:
         # cached: the collision check and the write both read it

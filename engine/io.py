@@ -1,10 +1,11 @@
 """Table IO: the fixture scan and the postings sink (SURVEY.md §2.A).
 
-Two helpers: `read_fixture` scans a driver fixture table with a size-gated
-rebalance (the registry reads every fixture through it), and
-`write_postings_shards` lays the postings table out bucket-partitioned and
-tid-sorted (index.publish_index writes through it). Every other table is
-read and written as plain Parquet by the module that owns it.
+Helpers: `read_fixture` scans a driver fixture table with a size-gated
+rebalance (the registry reads every fixture through it);
+`write_postings_shards` lays postings out one single-row-group file per
+shard (index.publish_index writes through it) and `check_shard_layout`
+is the writer's and the reader's check of that layout. Every other table is read and written
+as plain Parquet by the module that owns it.
 
 BASELINE.json:15 names Iceberg tables; no Iceberg jars exist offline
 (SURVEY.md §0), so every table is Parquet. An Iceberg layer belongs with the
@@ -13,6 +14,7 @@ jars, in the readers and writers of every index table at once.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -75,13 +77,42 @@ def read_fixture(
     return df.repartition(int(target))
 
 
+# A shard's row-group ceiling. Parquet sizes a row group compressed and
+# holds it in memory while writing. On Zipf text (s = 1.07, 50k words) of
+# 1,000 tokens (~500 distinct terms) per doc a one-shard build took 948
+# bytes per doc at 4,000 docs and 775 at 16,000, so the default 2^20 docs
+# per shard reach ~0.8 GB; pages up to ~1,300 tokens fit (scaled linearly).
+SHARD_ROW_GROUP_BYTES = 1 << 30
+
+
 def write_postings_shards(postings: DataFrame, path: str, mode: str = "overwrite"):
-    """A3: segment sink — shards partitioned by term-hash bucket and sorted by
-    tid within partitions, so a query-time term lookup prunes to one bucket
-    directory and Parquet min/max skips row groups on the numeric `tid`
-    (BASELINE.json:6 "queryable index shards"; mirrors Lucene's term-sorted
-    dictionary [public])."""
-    sorted_p = postings.repartition("bucket").sortWithinPartitions(
-        "tid", "shard", "part"
+    """A3: segment sink — `postings/shard=<s>/` is ONE Parquet file of ONE
+    row group (up to SHARD_ROW_GROUP_BYTES) sorted by (tid, part), `bucket`
+    a data column: an ES shard / Lucene segment [public] per file. A Parquet
+    split reads a row group only when the group's midpoint falls inside it,
+    so a shard is never cut across scan tasks and the searcher scores it in
+    the scan stage. The cost: row-group min/max no longer prunes `tid`
+    inside a shard; at web scale that pruning is left to Parquet page
+    indexes."""
+    (
+        postings.repartition("shard").sortWithinPartitions("shard", "tid", "part")
+        .write.mode(mode)
+        .option("parquet.block.size", SHARD_ROW_GROUP_BYTES)
+        .option("maxRecordsPerFile", 0)
+        .partitionBy("shard")
+        .parquet(path)
     )
-    sorted_p.write.mode(mode).partitionBy("bucket").parquet(path)
+
+
+def check_shard_layout(table: str, one_file: bool = True) -> None:
+    """Raise unless every data entry of `table` (an index's postings/ or
+    tombstones/ dir) is a `shard=<s>/` dir and, with one_file (postings),
+    holds one Parquet file of one row group: the writer refuses to publish,
+    and a reader to open, any other layout rather than answer wrongly."""
+    import pyarrow.parquet as pq
+
+    for sub in glob.glob(os.path.join(table, "[!_]*")):
+        files = glob.glob(os.path.join(sub, "[!_]*"))
+        ok = not one_file or (len(files) == 1 and pq.ParquetFile(files[0]).num_row_groups == 1)
+        if not (os.path.basename(sub).startswith("shard=") and os.path.isdir(sub) and ok):
+            raise ValueError(f"{sub}: not in the layout of io.write_postings_shards")

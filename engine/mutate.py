@@ -7,10 +7,10 @@ per-segment live-docs bitset; searches skip dead docs immediately; a later
 segment merge drops them physically. An update is delete + reindex under a
 fresh internal doc id. The Spark-first re-expression:
 
-* tombstones are a parquet table of doc_ids under `<index>/tombstones` —
-  appended by `delete_by_query`, routed per shard to the search UDF via a
-  cogroup (engine/searcher.py — the delete set is never broadcast whole),
-  folded away by `expunge_deletes`;
+* tombstones are per-shard delete marks (Lucene's live docs, inverted):
+  `<index>/tombstones/shard=<s>/`, appended by `delete_by_query`, read by
+  each search's scoring task for its own shard (engine/searcher.py — the
+  dead set never goes through the driver), folded away by `expunge_deletes`;
 * `expunge_deletes` is one segment merge (engine/merge.py merge_postings)
   with the tombstones as its dead set: the merge routes dead ids to posting
   rows by a (bucket, shard) COGROUP, so the dead set is NEVER materialized
@@ -77,23 +77,16 @@ def _shard_match_fn(tids: list[int], neg_tids: list[int], mode: str):
         def ids_of(t: int) -> np.ndarray | None:
             return ids_all[owner == t] if t in have else None
 
-        per_term = [ids_of(t) for t in tids]
-        present = [p for p in per_term if p is not None]
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        if mode == "and":
-            if len(present) < len(tids) or not present:
-                return empty
+        present = [p for p in map(ids_of, tids) if p is not None]
+        if not present or (mode == "and" and len(present) < len(tids)):
+            ids = np.empty(0, np.int64)
+        elif mode == "and":
             ids = present[0]
             for p in present[1:]:
                 ids = np.intersect1d(ids, p, assume_unique=True)
         else:
-            if not present:
-                return empty
             ids = np.unique(np.concatenate(present))
-        for t in neg_tids:
-            if not len(ids):
-                break
-            n_ids = ids_of(t)
+        for n_ids in [ids_of(t) for t in neg_tids] + [not_ids]:
             if n_ids is not None:
                 ids = np.setdiff1d(ids, n_ids, assume_unique=True)
         return pd.DataFrame({"doc_id": ids})
@@ -102,11 +95,10 @@ def _shard_match_fn(tids: list[int], neg_tids: list[int], mode: str):
 
 
 def match_doc_ids(index: LoadedIndex, query: str, mode: str = "or") -> DataFrame:
-    """All doc_ids matching `query` → DataFrame(doc_id). Planned like a
-    ranked search (the manifest's analyzer, one term-dict seek) and scanned
-    by the searcher's per-shard exchange (bucket partition pruning + tid
-    pushdown); per shard the UDF unions/intersects decoded id lists.
-    Tombstones are not applied: delete_by_query anti-joins them itself."""
+    """All live doc_ids matching `query` → DataFrame(doc_id). Planned like
+    a ranked search (the manifest's analyzer, one term-dict seek) and run
+    by the searcher's per-shard pass, which hands each shard its live docs;
+    per shard the UDF unions/intersects decoded id lists."""
     (q,), found = index._parse([query])
     spec = index._flat_spec("", q, found, 0, mode)
     if spec is None:
@@ -124,11 +116,12 @@ def tombstone_path(root: str) -> str:
 
 
 def write_tombstones(root: str, doc_ids: DataFrame) -> None:
-    """Append delete marks. Append-mode parquet: each delete_by_query is one
-    additional file set; readers union and distinct."""
-    doc_ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct().write.mode(
-        "append"
-    ).parquet(tombstone_path(root))
+    """Append delete marks to `tombstones/shard=<s>/`, one file per shard
+    and call. Readers union and distinct."""
+    shard = (F.col("doc_id") / IndexManifest.load(root).docs_per_shard).cast("int")
+    doc_ids.select(F.col("doc_id").cast("long").alias("doc_id"), shard.alias("shard")).repartition(
+        "shard"
+    ).write.mode("append").partitionBy("shard").parquet(tombstone_path(root))
 
 
 def load_tombstones(spark: SparkSession, root: str) -> DataFrame | None:
@@ -138,18 +131,13 @@ def load_tombstones(spark: SparkSession, root: str) -> DataFrame | None:
 
 
 def delete_by_query(index: LoadedIndex, query: str, mode: str = "or") -> int:
-    """ES _delete_by_query [public]: mark every match deleted; searches on
-    this (re-loaded) index skip them immediately; expunge_deletes folds them
-    into the postings. Returns the number of newly tombstoned docs."""
-    matched = match_doc_ids(index, query, mode)
-    before = load_tombstones(index.spark, index.root)
-    if before is not None:
-        matched = matched.join(before, "doc_id", "left_anti")
-    matched = matched.cache()
+    """ES _delete_by_query [public]: mark every live match deleted; every
+    search's scoring task skips them from then on; expunge_deletes folds
+    them into the postings. Returns the number of newly tombstoned docs."""
+    matched = match_doc_ids(index, query, mode).cache()
     n = matched.count()
     if n:
         write_tombstones(index.root, matched)
-        index.tombstones = load_tombstones(index.spark, index.root)
     matched.unpersist()
     return n
 

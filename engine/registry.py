@@ -484,7 +484,7 @@ def _dir_tag(sf_dir: str) -> str:
 # Bump when the on-disk index layout (or the build config below) changes:
 # the tag changes with it, so stale caches from older formats are simply
 # never looked at again (and can be swept by hand).
-_CACHE_REV = "v3"
+_CACHE_REV = "v4"
 # The published on-disk caches (index_cache/, update_cache/) live in the
 # data/ dir of the checkout the engine is imported from, so two checkouts on
 # one host never share, or with fresh=True delete, each other's caches.
@@ -588,10 +588,11 @@ for _name, _q, _k, _mode, _terms, _neg in _BM25_SET:
 
 def _q_delete_by_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ES _delete_by_query then search [public]: docs matching BOTH
-    'customer' and 'order' are marked deleted (the delete set rides the
-    cogrouped per-shard exclude path — no broadcast, no index mutation for
-    this read-only contract query) and a ranked query skips them while
-    scores keep full-corpus stats (ES pre-merge semantics)."""
+    'customer' and 'order' are marked deleted (the matched ids are the
+    search's `exclude` input, collected on the driver and split per shard
+    — no index mutation for this read-only contract query) and a ranked
+    query skips them while scores keep full-corpus stats (ES pre-merge
+    semantics)."""
     from .mutate import match_doc_ids
 
     idx = _indexed(spark, sf_dir)
@@ -887,7 +888,7 @@ register(
 register(
     # indexed wildcard: the same dictionary-expansion rewrite feeds the WAND
     # path — the dictionary is V rows (tiny scan), the postings scan stays
-    # bucket/tid-pruned exactly like any multi-term disjunction
+    # tid-pushed exactly like any multi-term disjunction
     "bm25_wand_wildcard",
     _q_prefix("%erge%", 10, indexed=True),
     _bm25_oracle(["LIKE:%erge%"], 10, "or"),
@@ -903,7 +904,7 @@ def _q_regexp(pattern: str, k: int, indexed: bool) -> Callable:
     vocabulary terms score as a disjunction — the last multi-term rewrite
     rung next to prefix/wildcard/fuzzy. Spark RLIKE is substring-matching,
     so the pattern is anchored with ^...$; the dictionary is V rows (tiny
-    scan), the postings scan stays bucket/tid-pruned like any disjunction.
+    scan), the postings scan stays tid-pushed like any disjunction.
     Dialect note: basic alternation/classes/quantifiers behave alike in
     Lucene/Java/RE2; Lucene extras (~, #) are not supported."""
     anchored = f"^(?:{pattern})$"

@@ -5,9 +5,10 @@ Two scorers, required to agree (property-tested):
 * **exact_search** (D8) — pure Spark SQL expressions over
   tf ⋈ doc_stats ⋈ term_stats: whole-stage-codegen'd, DuckDB-oracle-checkable.
   Mirrors ES query-then-fetch with Lucene BM25 [public].
-* **index_search** (D3+D7) — partition-pruned scan of the compressed posting
-  shards + block-max WAND top-k inside a grouped Arrow UDF (engine/wand.py),
-  global top-k via TakeOrderedAndProject.
+* **index_search** (D3+D7) — tid-pushed scan of the compressed posting
+  shards + per-shard block-max WAND top-k in the scan stage's Arrow UDF
+  (engine/searcher.py, engine/wand.py), global top-k via
+  TakeOrderedAndProject.
 
 Query syntax (ES `bool` parity): whitespace-separated terms; a `-term`
 prefix = must_not (D6); mode='and' → bool.must conjunction (D4),

@@ -4,20 +4,23 @@ Mirrors the ES query-then-fetch search lifecycle [public]:
   analyze query (same analyzer as indexing)
    → term-dict seek on the driver, no Spark job: one filtered pyarrow read
      of term_dict that skips row groups by their footer min/max term
-     (global df / bucket / tid per term)
-   → partition-pruned posting fetch (one SQL-text `bucket IN (...) AND
-     tid IN (...)` predicate reaches the Parquet scan as partition pruning
-     + predicate pushdown)
-   → per-shard block-max WAND top-k inside a grouped Arrow UDF
+     (global df / tid per term)
+   → posting scan with one SQL-text `tid IN (...)` predicate pushed to the
+     Parquet reader
+   → per-shard block-max WAND top-k in the scan stage: postings are
+     document-partitioned, one single-row-group file per shard
+     (engine/io.py), so every shard's rows sit in one scan task and a
+     `mapInPandas` scores them there, with the shard's live docs read by
+     the task itself — no exchange
    → coordinating merge: global TakeOrderedAndProject(k, score DESC, doc ASC)
 
 `search`, `search_tree` and `search_many` run this lifecycle through ONE
 executor: every query is a `_Spec`, a single query is a batch of one, and
-`LoadedIndex._execute` answers a whole batch with one pruned posting scan and
-one per-shard Arrow pass (`LoadedIndex._shard_frame`, which
+`LoadedIndex._execute` answers a whole batch with one posting scan and one
+per-shard Arrow pass (`LoadedIndex._shard_frame`, which
 engine.mutate.match_doc_ids shares). Only the coordinating merge differs per
-entry point: a global top-k for `search`/`search_tree`, a per-qid window for
-`search_many`.
+entry point: a global top-k for `search`/`search_tree` (one Spark job), a
+per-qid window for `search_many`.
 
 idf uses GLOBAL corpus stats from the manifest/term_dict (like ES
 dfs_query_then_fetch — pinned so scores are shard-count-invariant).
@@ -38,6 +41,7 @@ from pyspark.sql import types as T
 from . import bm25
 from .codec import decode_postings
 from .index import TOMBSTONE_SCHEMA, IndexManifest, read_index_table
+from .io import check_shard_layout
 from .search import ParsedQuery, parse_query
 from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk, wand_tree_topk
 
@@ -46,19 +50,8 @@ TOPK_SCHEMA = T.StructType(
     [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
 )
 BATCH_TOPK_SCHEMA = T.StructType([T.StructField("qid", T.StringType()), *TOPK_SCHEMA.fields])
-# the posting columns the per-shard bodies read (bucket only prunes)
-_SCAN_COLS = ["bucket", "shard", "tid", "part", "doc_ids_enc", "tfs_enc", "dls_enc", "skips"]
-
-
-def _pin_shard_parallelism(df):
-    """Pin the width of the per-shard scoring exchange. AQE coalesces this
-    shuffle by BYTES — a few hundred pruned posting rows collapse to ONE
-    post-shuffle partition, serializing the Python WAND stage even though
-    its cost is CPU per shard, not bytes (measured 2x on the 8-query batch
-    at sf0.1). Explicit repartition(N, shard) opts this one exchange out of
-    coalescing, exactly like encode_segment does for the encode stage."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
-    return df.repartition(n, "shard")
+# the posting columns the per-shard bodies read
+_SCAN_COLS = ["shard", "tid", "part", "doc_ids_enc", "tfs_enc", "dls_enc", "skips"]
 
 
 def _pack_rows(rows: pd.DataFrame) -> list[dict]:
@@ -86,12 +79,6 @@ def _pack_rows(rows: pd.DataFrame) -> list[dict]:
         }
         for r in rs.itertuples(index=False)
     ]
-
-
-def _by_tid(pdf: pd.DataFrame) -> dict[int, pd.DataFrame]:
-    """One pass over a shard's posting rows → its rows per tid (a dict of
-    sub-frames instead of a boolean mask per term — O(R), not O(T*R))."""
-    return {int(t): g for t, g in pdf.groupby("tid", sort=False)}
 
 
 @dataclass
@@ -145,7 +132,8 @@ def _shard_topk_core(specs: list[_Spec], avgdl: float, round_to: int | None):
     per shard, not 7 times."""
 
     def core(pdf: pd.DataFrame, not_ids=None) -> pd.DataFrame:
-        by_tid = _by_tid(pdf)
+        # one pass → the shard's rows per tid (not a mask per term: O(R))
+        by_tid = {int(t): g for t, g in pdf.groupby("tid", sort=False)}
         packed: dict[int, tuple[list, dict]] = {}
 
         def cursors(terms: dict[str, int], idfs: dict[str, float]) -> dict[str, TermCursor]:
@@ -204,6 +192,9 @@ class LoadedIndex:
         self.spark = spark
         self.root = root
         self.manifest = IndexManifest.load(root)
+        # scan-stage scoring is exact only on the shard layout
+        check_shard_layout(os.path.join(root, "postings"))
+        check_shard_layout(os.path.join(root, "tombstones"), one_file=False)
         self.postings = read_index_table(spark, root, "postings")
         self.term_dict = read_index_table(spark, root, "term_dict")
         self.doc_stats = read_index_table(spark, root, "doc_stats")
@@ -214,19 +205,18 @@ class LoadedIndex:
         # the driver-side terms index: a pyarrow dataset over the term_dict
         # files, whose scans prune row groups by their footer min/max term
         self._td_files = ds.dataset(os.path.join(root, "term_dict"), format="parquet")
-        self._td_cache: dict[str, tuple[int, int, int]] = {}
+        self._td_cache: dict[str, tuple[int, int]] = {}
         # planned once, reused by every query: the pruned posting scan and
         # the coordinator's sort order (each DataFrame/Column call is a py4j
         # round trip)
         self._scan = self.postings.select(*_SCAN_COLS)
         self._order = (F.col("score").desc(), F.col("doc_id").asc())
-        # delete-by-query marks (engine.mutate): applied to every search
-        # until expunge_deletes folds them into the postings (ES semantics)
-        tomb = os.path.isdir(os.path.join(root, "tombstones"))
-        self.tombstones = read_index_table(spark, root, "tombstones") if tomb else None
+        # delete-by-query marks (engine.mutate), one dir per shard that each
+        # search's scoring task reads until expunge_deletes folds them away
+        self._tomb_dir = os.path.join(root, "tombstones")
 
-    def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int, int]]:
-        """D2 term-dict seek → {term: (df, bucket, tid)}, on the driver with
+    def _lookup(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+        """D2 term-dict seek → {term: (df, tid)}, on the driver with
         no Spark job. Cache misses are one filtered pyarrow read: the range
         bounds let the scan skip every row group whose [min, max] term
         statistics miss [min(missing), max(missing)] (pyarrow prunes on
@@ -239,11 +229,11 @@ class LoadedIndex:
 
             term = ds.field("term")
             hits = self._td_files.to_table(
-                columns=["term", "df", "bucket", "tid"],
+                columns=["term", "df", "tid"],
                 filter=term.isin(missing) & (term >= min(missing)) & (term <= max(missing)),
             )
-            cols = (hits[c].to_pylist() for c in ("term", "df", "bucket", "tid"))
-            self._td_cache.update((t, (df, b, tid)) for t, df, b, tid in zip(*cols))
+            cols = (hits[c].to_pylist() for c in ("term", "df", "tid"))
+            self._td_cache.update((t, (df, tid)) for t, df, tid in zip(*cols))
         return {t: self._td_cache[t] for t in terms if t in self._td_cache}
 
     def idf(self, df: int) -> float:
@@ -253,7 +243,7 @@ class LoadedIndex:
         """Analyze query strings with the analyzer the index manifest pins
         (rank identity: an english-stemmed index queried with
         standard-analyzed terms would silently miss), then ONE term-dict seek
-        for the whole batch → (parsed queries, {term: (df, bucket, tid)})."""
+        for the whole batch → (parsed queries, {term: (df, tid)})."""
         qs = [parse_query(t, self.manifest.analyzer) for t in texts]
         return qs, self._lookup([t for q in qs for t in q.terms + q.must_not])
 
@@ -264,63 +254,53 @@ class LoadedIndex:
         """A parsed flat query → its executor spec; None when no doc can
         match (no known positive term, an AND term missing from the
         dictionary, or fewer known terms than min_match)."""
-        pos = {t: found[t][2] for t in q.terms if t in found}
+        pos = {t: found[t][1] for t in q.terms if t in found}
         if not pos or (mode == "and" and len(pos) < len(q.terms)) or len(pos) < min_match:
             return None
         return _Spec(
-            qid, pos, {t: found[t][2] for t in q.must_not if t in found},
+            qid, pos, {t: found[t][1] for t in q.must_not if t in found},
             {t: self.idf(found[t][0]) for t in pos}, k, mode, after, min_match, algo,
         )
 
     def _shard_frame(
-        self, specs: list[_Spec], core, schema: T.StructType, dead=None
+        self, specs: list[_Spec], core, schema: T.StructType, exclude: DataFrame | None = None
     ) -> DataFrame:
-        """The one per-shard exchange: scan the posting rows of every term the
-        specs name (D3: bucket is the file-partition column → partition
-        pruning; tid is a numeric Parquet pushdown predicate over tid-sorted
-        files; both in one SQL-text predicate, one py4j call however many
-        terms), pin the shard exchange, and run core(shard's rows, sorted
-        dead ids or None) once per shard. Without a dead set (DataFrame of
-        doc_id) this is a plain grouped map. With one, the dead ids ride the
-        same shard key through a cogroup — per-shard live-docs arrive WITH the
-        shard's work and the delete set is never broadcast whole (the
-        distributed analog of Lucene's per-segment live-docs [public])."""
-        terms = {t: tid for s in specs for t, tid in (*s.pos.items(), *s.neg.items())}
-        # every spec term came through _lookup, so its bucket is cached
-        buckets = ", ".join(map(str, sorted({self._td_cache[t][1] for t in terms})))
-        tids = ", ".join(f"{t}L" for t in sorted(set(terms.values())))
-        rows = self._scan.filter(f"bucket IN ({buckets}) AND tid IN ({tids})")
-        grouped = _pin_shard_parallelism(rows).groupBy("shard")
-        if dead is None:
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                return core(pdf, None)
+        """The one per-shard pass: scan the rows of every term the specs name
+        (one SQL-text `tid IN (...)` pushed to the Parquet reader) and run
+        core(shard's rows, its sorted dead ids or None) once per shard in
+        the scan stage; a shard is one single-row-group file, so one task
+        holds all its rows: no exchange. Dead ids are the shard's tombstones,
+        read by the task (Lucene's per-segment `.liv` [public]: the index's
+        dead set never goes through the driver), plus its slice of
+        `exclude`, query input (ES `ids`) collected on the driver."""
+        tids = {t for s in specs for t in (*s.pos.values(), *s.neg.values())}
+        tids = ", ".join(f"{t}L" for t in sorted(tids))
+        ex = [r[0] for r in exclude.select("doc_id").collect()] if exclude is not None else []
+        ex = np.unique(np.array(ex, "int64"))
+        tomb, dps = self._tomb_dir, self.manifest.docs_per_shard
 
-            return grouped.applyInPandas(fn, schema)
-        tomb = dead.selectExpr(
-            "CAST(doc_id AS BIGINT) AS doc_id",
-            f"CAST(doc_id / {self.manifest.docs_per_shard} AS INT) AS shard",
-        )
+        def dead(shard: int):
+            ids = [ex[np.searchsorted(ex, shard * dps):np.searchsorted(ex, (shard + 1) * dps)]]
+            if os.path.isdir(d := os.path.join(tomb, f"shard={shard}")):
+                ids.append(pd.read_parquet(d, columns=["doc_id"])["doc_id"].to_numpy())
+            ids = np.unique(np.concatenate(ids))
+            return ids if len(ids) else None
 
-        def cofn(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            not_ids = np.sort(right["doc_id"].to_numpy(dtype="int64")) if len(right) else None
-            return core(left, not_ids)
+        def fn(batches):
+            pdfs = [b for b in batches if len(b)]
+            for shard, rows in pd.concat(pdfs).groupby("shard", sort=False) if pdfs else ():
+                yield core(rows, dead(int(shard)))
 
-        return grouped.cogroup(_pin_shard_parallelism(tomb).groupBy("shard")).applyInPandas(
-            cofn, schema
-        )
+        return self._scan.filter(f"tid IN ({tids})").mapInPandas(fn, schema)
 
     def _execute(
         self, specs: list[_Spec], round_to: int | None, exclude: DataFrame | None = None
     ) -> DataFrame:
         """The shard-scoring executor → every spec's per-shard local top-k as
         (qid, doc_id, score), scores rounded as the kernels ranked them.
-        Persisted tombstones and `exclude` are the dead set."""
-        dead = self.tombstones.select("doc_id") if self.tombstones is not None else None
-        if exclude is not None:
-            ex = exclude.select("doc_id")
-            dead = ex if dead is None else dead.unionByName(ex).distinct()
+        Each shard's tombstones and `exclude` are the dead set."""
         core = _shard_topk_core(specs, self.manifest.avgdl, round_to)
-        local = self._shard_frame(specs, core, BATCH_TOPK_SCHEMA, dead)
+        local = self._shard_frame(specs, core, BATCH_TOPK_SCHEMA, exclude)
         score = f"round(score, {round_to}) AS score" if round_to is not None else "score"
         return local.selectExpr("qid", "doc_id", score)
 
@@ -352,9 +332,10 @@ class LoadedIndex:
         (score, doc_id) of the last hit of the previous page; only hits
         sorting strictly after it are returned (pushed into the per-shard
         top-k heap, so deep pagination never widens k per shard).
-        exclude: DataFrame(doc_id) of docs to treat as deleted, ON TOP of any
-        persisted tombstones — routed per shard via a cogroup so the delete
-        set is never broadcast whole (engine.mutate.delete_by_query)."""
+        exclude: DataFrame(doc_id) of docs to treat as deleted, on top of the
+        index's tombstones: query input, collected on the driver and split
+        per shard (engine.mutate.delete_by_query writes the index's own dead
+        set, which never goes through the driver)."""
         idx_an = self.manifest.analyzer
         if analyzer is not None and analyzer != idx_an:
             # rank-identity invariant: query analysis MUST match the config
@@ -392,12 +373,12 @@ class LoadedIndex:
             )
         pos_t, neg_t = collect_leaves(tree)
         found = self._lookup(sorted(pos_t | neg_t))
-        pos = {t: found[t][2] for t in pos_t if t in found}
+        pos = {t: found[t][1] for t in pos_t if t in found}
         if not pos:
             return self.spark.createDataFrame([], TOPK_SCHEMA)
         # a term in both contexts keeps its positive cursor (match flags are
         # per term, context-free in eval_tree)
-        neg = {t: found[t][2] for t in neg_t if t in found and t not in pos}
+        neg = {t: found[t][1] for t in neg_t if t in found and t not in pos}
         idfs = {t: self.idf(found[t][0]) for t in pos}
         return self._topk(_Spec("", pos, neg, idfs, k, "tree", after, tree=tree), round_to, exclude)
 
@@ -410,12 +391,12 @@ class LoadedIndex:
     ) -> DataFrame:
         """Batched top-k for a whole query set → DataFrame(qid, doc_id, score).
 
-        ONE pruned postings scan + ONE grouped Arrow pass answers every
+        ONE pruned postings scan + ONE per-shard Arrow pass answers every
         query (the reference query set runs as a batch job, not one Spark
-        job per query): the bucket/tid predicates are the union over all
-        queries, each shard computes every query's local top-k in-loop, and
-        a single per-qid window finishes the coordinating merge. Per-query
-        Spark overhead amortizes to ~zero.
+        job per query): the tid predicate is the union over all queries,
+        each shard computes every query's local top-k in-loop, and a single
+        per-qid window finishes the coordinating merge. Per-query Spark
+        overhead amortizes to ~zero.
 
         The merge input is at most len(specs) × n_shards × k rows, and the
         driver collects the result anyway: one exchange to a single
@@ -454,8 +435,6 @@ class LoadedIndex:
         (ES `include: false` default). Selection tie-break: (rounded tf·idf
         DESC, term ASC), rounded half-up at 6 decimals so the DuckDB oracle
         twin selects identically."""
-        import math
-
         from .tokenizer import analyze
 
         row = docs.filter(F.col("doc_id") == int(doc_id)).select("text").collect()

@@ -4,8 +4,13 @@ Asserts the property chain: compressed-index WAND search == exact SQL scorer
 == NumPy oracle; index invariant under segmentation and salting.
 """
 
+import os
+import shutil
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -158,17 +163,84 @@ def test_merge_dedup_latest_segment_wins(spark):
     assert list(dls) == [12, 10]
 
 
-def test_partition_pruning_in_plan(index):
-    """D3: the posting fetch must prune on the bucket partition column and
-    push the numeric tid predicate to the parquet scan."""
-    row = index.term_dict.filter(F.col("term") == "table").collect()[0]
-    df = index.postings.filter(
-        F.col("bucket").isin([int(row["bucket"])])
-        & F.col("tid").isin([int(row["tid"])])
-    )
+def assert_scan_stage_plan(df):
+    """A search plan scores in the scan stage: the tid set is pushed to the
+    Parquet reader as one `In`, one MapInPandas runs every shard's body, and
+    there is no Exchange and no grouped or cogrouped pandas node."""
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    assert "PushedFilters" in plan and "tid" in plan
+    assert "PushedFilters: [In(tid," in plan, plan
+    assert plan.count("MapInPandas") == 1, plan
+    for node in ("Exchange", "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
+        assert node not in plan, plan
+
+
+def test_search_plan_scores_in_scan_stage(index):
+    """D3: the posting fetch pushes the numeric tid predicate to the parquet
+    scan, and shard scoring runs on the scan's own tasks."""
+    assert_scan_stage_plan(index.search("table sort merge", k=10))
+
+
+def _bucket_layout(spark, root):
+    """postings/ rewritten bucket-partitioned, the layout before shards."""
+    src = os.path.join(root, "postings")
+    os.rename(src, src + ".old")
+    spark.read.parquet(src + ".old").write.partitionBy("bucket").parquet(src)
+
+
+def _shard_file(root):
+    d = os.path.join(root, "postings", "shard=0")
+    return os.path.join(d, next(f for f in os.listdir(d) if f.endswith(".parquet")))
+
+
+def _two_files(spark, root):
+    f = _shard_file(root)
+    shutil.copy(f, os.path.join(os.path.dirname(f), "part-copy.parquet"))
+
+
+def _two_row_groups(spark, root):
+    f = _shard_file(root)
+    t = pq.read_table(f)
+    pq.write_table(t, f, row_group_size=(t.num_rows + 1) // 2)
+    assert pq.ParquetFile(f).num_row_groups == 2
+
+
+def _flat_tombstones(spark, root):
+    os.makedirs(os.path.join(root, "tombstones"))
+    pq.write_table(pa.table({"doc_id": [1]}), os.path.join(root, "tombstones", "part-0.parquet"))
+
+
+@pytest.mark.parametrize(
+    "corrupt", [_bucket_layout, _two_files, _two_row_groups, _flat_tombstones],
+    ids=["bucket_layout", "shard_two_files", "shard_two_row_groups", "flat_tombstones"],
+)
+def test_open_refuses_other_layouts(spark, index, tmp_path, corrupt):
+    """The scan-stage scoring is exact only when a shard is one file of one
+    row group and tombstones are per shard: opening anything else raises."""
+    root = str(tmp_path / "idx")
+    shutil.copytree(index.root, root)
+    LoadedIndex(spark, root)  # the copy itself opens
+    corrupt(spark, root)
+    with pytest.raises(ValueError, match="io.write_postings_shards"):
+        LoadedIndex(spark, root)
+
+
+def test_publish_refuses_a_shard_over_the_row_group_ceiling(spark, index, tmp_path, monkeypatch):
+    """A shard whose postings outgrow one row group fails the build before
+    any table is swapped in: no staged table is left, and the index the
+    build would have replaced still opens and answers as before."""
+    import engine.io
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(index.root, root)
+    want = [tuple(r) for r in LoadedIndex(spark, root).search("table", k=10).collect()]
+    # 400 terms in one shard: the Parquet writer checks the row-group size
+    # only after its first 100 rows
+    docs = spark.range(400).selectExpr("id AS doc_id", "concat('term', id, ' table') AS text")
+    monkeypatch.setattr(engine.io, "SHARD_ROW_GROUP_BYTES", 4096)
+    with pytest.raises(ValueError, match="io.write_postings_shards"):
+        build_index(spark, docs, root, n_buckets=4, docs_per_shard=1 << 20, block_size=32)
+    assert not [e for e in os.listdir(root) if e.endswith((".tmp", ".old"))]
+    assert [tuple(r) for r in LoadedIndex(spark, root).search("table", k=10).collect()] == want
 
 
 def test_search_many_matches_single(index):
@@ -296,7 +368,7 @@ def _spark_lookup(spark, root: str, terms: list[str]) -> dict:
 
     td = read_index_table(spark, root, "term_dict")
     return {
-        r["term"]: (int(r["df"]), int(r["bucket"]), int(r["tid"]))
+        r["term"]: (int(r["df"]), int(r["tid"]))
         for r in td.filter(F.col("term").isin(terms)).collect()
     }
 

@@ -17,6 +17,7 @@ from engine import mutate
 from engine.index import IndexManifest, build_index
 from engine.io import read_fixture
 from engine.searcher import LoadedIndex
+from tests.test_index import assert_scan_stage_plan
 
 QUERIES = [
     ("table", 10, "or"),
@@ -33,9 +34,9 @@ def docs(spark, sf_dir):
     return read_fixture(spark, sf_dir, "documents").select("doc_id", "text")
 
 
-def _build(spark, docs, root, n_segments=1, hot_df=None):
+def _build(spark, docs, root, n_segments=1, hot_df=None, docs_per_shard=128):
     build_index(
-        spark, docs, root, n_buckets=4, docs_per_shard=128, n_segments=n_segments,
+        spark, docs, root, n_buckets=4, docs_per_shard=docs_per_shard, n_segments=n_segments,
         hot_df=hot_df, block_size=32,
     )
     return LoadedIndex(spark, root)
@@ -78,7 +79,7 @@ def test_match_doc_ids(spark, index, docs):
 def test_delete_by_query_excludes_hits(spark, index, docs):
     n = mutate.delete_by_query(index, DELETE_Q, mode="and")
     assert n > 0
-    dead = {r["doc_id"] for r in index.tombstones.collect()}
+    dead = {r["doc_id"] for r in mutate.load_tombstones(index.spark, index.root).collect()}
     for q, k, mode in QUERIES:
         for algo in ("wand", "exhaustive"):
             hits = _hits(index.search(q, k=k, mode=mode, algo=algo))
@@ -120,13 +121,13 @@ def test_expunge_equals_fresh_build(spark, docs, tmp_path, layout):
     index = _build(spark, docs, str(tmp_path / "idx"), **layout)
     assert (_parts_per_term(index) > 1) == bool(layout)
     mutate.delete_by_query(index, DELETE_Q, mode="and")
-    dead = {r["doc_id"] for r in index.tombstones.collect()}
+    dead = {r["doc_id"] for r in mutate.load_tombstones(index.spark, index.root).collect()}
     m = mutate.expunge_deletes(spark, index.root)
     expunged = LoadedIndex(spark, index.root)
     assert _parts_per_term(expunged) == 1
     survivors = docs.filter(~F.col("doc_id").isin(list(dead)))
     fresh = _build(spark, survivors, str(tmp_path / "fresh"))
-    assert expunged.tombstones is None
+    assert mutate.load_tombstones(expunged.spark, expunged.root) is None
     assert m.n_docs == fresh.manifest.n_docs
     assert m.avgdl == pytest.approx(fresh.manifest.avgdl)
     # identical doc_ids survive, so (doc_id, score) must match exactly
@@ -170,7 +171,7 @@ def test_expunge_every_doc_deleted(spark, tmp_path):
     saved = IndexManifest.load(idx.root)
     assert (m.n_docs, m.avgdl) == (saved.n_docs, saved.avgdl) == (0, 0.0)
     empty = LoadedIndex(spark, idx.root)
-    assert empty.tombstones is None
+    assert mutate.load_tombstones(empty.spark, empty.root) is None
     assert empty.postings.count() == empty.term_dict.count() == empty.doc_stats.count() == 0
     for q in ("common", "alpha beta"):
         assert _hits(empty.search(q, k=10)) == []
@@ -251,7 +252,7 @@ def test_merge_drop_ids_unit(spark):
 def test_search_many_respects_tombstones(spark, index):
     n = mutate.delete_by_query(index, DELETE_Q, mode="and")
     assert n > 0
-    dead = {r["doc_id"] for r in index.tombstones.collect()}
+    dead = {r["doc_id"] for r in mutate.load_tombstones(index.spark, index.root).collect()}
     res = index.search_many({"q1": "table", "q2": "sort merge join"}, k=10)
     hits = {int(r["doc_id"]) for r in res.collect()}
     assert not (hits & dead)
@@ -290,24 +291,115 @@ def test_entry_points_agree_with_and_without_tombstones(spark, index):
 
     before = answers()
     assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
-    dead = {int(r["doc_id"]) for r in index.tombstones.collect()}
+    dead = {int(r["doc_id"]) for r in mutate.load_tombstones(index.spark, index.root).collect()}
     # non-vacuous: the tombstones remove hits the queries returned before
     assert any(d in dead for hits in before for d, _ in hits)
     after = answers()
     assert not any(d in dead for hits in after for d, _ in hits)
 
 
-def test_search_plans_cogroup_only_with_tombstones(spark, index):
-    """Without tombstones a search is one grouped Arrow map; with live
-    tombstones it is exactly one cogroup (no extra exchange otherwise)."""
-
-    def pandas_nodes(df):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return plan.count("FlatMapGroupsInPandas"), plan.count("FlatMapCoGroupsInPandas")
-
-    assert pandas_nodes(index.search("table", k=10)) == (1, 0)
+def test_search_plan_scores_in_scan_stage_with_tombstones(spark, index):
+    """A search plan is one scan stage before and after a delete_by_query:
+    each scoring task reads its own shard's tombstones, so live deletes add
+    no exchange and no cogroup."""
+    assert_scan_stage_plan(index.search("table sort merge", k=10))
     assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
-    assert pandas_nodes(index.search("table", k=10)) == (0, 1)
+    assert_scan_stage_plan(index.search("table sort merge", k=10))
+
+
+def _jobs(spark, run, group: str) -> int:
+    """The number of Spark jobs run() submits (a job group around the call;
+    the listener bus is drained before the status store is read)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_search_submits_one_spark_job(spark, index):
+    """A warm search or search_tree is one Spark job (scan stage + collect)
+    and a search_many at most two (its per-qid window adds one exchange),
+    with and without live tombstones."""
+    from engine.boolquery import Bool, Term
+
+    calls = {
+        "search": lambda: index.search("table sort merge", k=10).collect(),
+        "must_not": lambda: index.search("window -stream", k=10).collect(),
+        "tree": lambda: index.search_tree(
+            Bool(should=(Term("table"), Term("sort")), must_not=(Term("merge"),)), k=10
+        ).collect(),
+        "many": lambda: index.search_many({"a": "table", "b": "sort merge"}, k=10).collect(),
+    }
+
+    def counts(phase: str) -> dict[str, int]:
+        for run in calls.values():
+            run()
+        return {name: _jobs(spark, run, f"jobs-{phase}-{name}") for name, run in calls.items()}
+
+    for phase in ("live", "tombstoned"):
+        got = counts(phase)
+        assert got["many"] <= 2, (phase, got)
+        assert {n: c for n, c in got.items() if n != "many"} == dict.fromkeys(
+            ("search", "must_not", "tree"), 1
+        ), (phase, got)
+        if phase == "live":
+            assert mutate.delete_by_query(index, DELETE_Q, mode="and") > 0
+
+
+# session confs that change how the shard files map to scan tasks
+_PACKED = {  # every shard file of the index in one scan task
+    "spark.sql.files.openCostInBytes": "1",
+    "spark.sql.files.maxPartitionBytes": str(1 << 30),
+    "spark.sql.files.minPartitionNum": "1",
+}
+_SPLIT = {  # every shard file cut into several byte-range splits
+    "spark.sql.files.openCostInBytes": "1",
+    "spark.sql.files.maxPartitionBytes": "2048",
+}
+
+
+@pytest.mark.parametrize("conf", [_PACKED, _SPLIT], ids=["packed", "split"])
+def test_shard_task_packing_answers_exactly(spark, docs, tmp_path, conf):
+    """Scan tasks holding many small shard files, or a shard file cut into
+    byte-range splits, score exactly: WAND == exhaustive == the default
+    task layout, search_many == search, and tombstoned docs never hit."""
+    root = str(tmp_path / "packed")
+    build_index(spark, docs, root, n_buckets=4, docs_per_shard=16, block_size=32)
+    idx = LoadedIndex(spark, root)
+    n_files = len([e for e in os.listdir(os.path.join(root, "postings")) if e.startswith("shard=")])
+    assert n_files > 8
+    cases = QUERIES + [("customer order", 10, "or")]
+    want = {q: _hits(idx.search(q, k=k, mode=mode)) for q, k, mode in cases}
+    old = {key: spark.conf.get(key, None) for key in conf}
+    try:
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        n_tasks = idx._scan.rdd.getNumPartitions()
+        assert (n_tasks == 1) if conf is _PACKED else (n_tasks > n_files), n_tasks
+        for q, k, mode in cases:
+            got = _hits(idx.search(q, k=k, mode=mode))
+            assert got == want[q], q
+            assert _hits(idx.search(q, k=k, mode=mode, algo="exhaustive")) == got, q
+            many = _hits(idx.search_many({"q": q}, k=k, mode=mode))
+            assert many == got, q
+        assert mutate.delete_by_query(idx, DELETE_Q, mode="and") > 0
+        dead = {int(r["doc_id"]) for r in mutate.load_tombstones(idx.spark, idx.root).collect()}
+        assert any(d in dead for hits in want.values() for d, _ in hits)
+        for q, k, mode in cases:
+            hits = _hits(idx.search(q, k=k, mode=mode))
+            assert not any(d in dead for d, _ in hits), q
+            assert _hits(idx.search(q, k=k, mode=mode, algo="exhaustive")) == hits, q
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
 
 def test_update_by_query_does_not_resurrect_tombstoned(spark, docs, tmp_path):
     """ES _update_by_query only processes LIVE docs: a doc tombstoned by
@@ -353,12 +445,14 @@ def test_update_by_query_empty_match_returns_mapping_shape(spark, docs, tmp_path
     assert mapping.count() == 0
 
 
-def test_expunge_million_row_tombstone_set(spark, index, docs, tmp_path):
+def test_expunge_million_row_tombstone_set(spark, docs, tmp_path):
     """Scale guard: a ~1M-id tombstone set (most ids not even indexed, as a
     wide delete-by-query over a trillion-doc corpus would produce for any
     one shard range) must route per (bucket, shard) cogroup — never through
     a driver-side collect/broadcast — and still expunge exactly the indexed
-    ids it covers."""
+    ids it covers. One shard spans all 2M ids, so every id is a tombstone of
+    an indexed shard and all of them reach the merge."""
+    index = _build(spark, docs, str(tmp_path / "idx"), docs_per_shard=1 << 21)
     n_docs = index.manifest.n_docs
     # every even doc_id dies, plus ~1M ids far beyond the corpus
     tomb = (

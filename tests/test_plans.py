@@ -56,21 +56,14 @@ def test_column_pruning_token_counts(spark, qs, sf_dir):
         assert "lang" not in cols and "source" not in cols, cols
 
 
-def test_postings_fetch_prunes_and_pushes(spark, sf_dir):
-    """D3 (duplicated from test_index at driver level): bucket partition
-    pruning + numeric tid pushdown on the postings scan."""
+def test_postings_fetch_scores_in_scan_stage(spark, sf_dir):
+    """D3 (duplicated from test_index at driver level): on the registry's
+    index a search pushes the tid set to the parquet scan and scores each
+    shard in the scan stage, with no exchange."""
     from engine.registry import _indexed
+    from tests.test_index import assert_scan_stage_plan
 
-    idx = _indexed(spark, sf_dir)
-    from pyspark.sql import functions as F
-
-    row = idx.term_dict.limit(1).collect()[0]
-    df = idx.postings.filter(
-        (F.col("bucket") == int(row["bucket"])) & (F.col("tid") == int(row["tid"]))
-    )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in p and "bucket" in p
-    assert "EqualTo(tid" in p
+    assert_scan_stage_plan(_indexed(spark, sf_dir).search("table sort merge", k=10))
 
 
 def test_exact_bm25_no_doc_stats_join(spark, qs, sf_dir):
