@@ -39,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
 from dataclasses import dataclass
 
 import numpy as np
@@ -67,7 +68,9 @@ POSTINGS_SCHEMA = T.StructType(
         # repartition-by-term shuffle, the in-partition sort and every Arrow
         # crossing move fixed-width longs instead of per-row Python strings
         # (Lucene's term-ordinal idea [public]); the string lives only in
-        # term_dict. Collisions are checked at dict-build time.
+        # term_dict, which stores no tid: readers derive it from the term
+        # (term_id in Spark, tid_of on the driver). Collisions are checked
+        # at dict-build time.
         T.StructField("tid", T.LongType()),
         T.StructField("bucket", T.IntegerType()),
         T.StructField("shard", T.IntegerType()),
@@ -87,13 +90,13 @@ POSTINGS_SCHEMA = T.StructType(
 _POSTINGS_COLS = [f.name for f in POSTINGS_SCHEMA.fields]
 _GROUP_COLS = ["bucket", "shard", "seg_id", "part", "tid"]
 
+# the term only: tid and bucket are functions of it (term_id / tid_of), and
+# an index written with them stored still reads, as the declared columns
 TERM_DICT_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType()),
-        T.StructField("tid", T.LongType()),
         T.StructField("df", T.LongType()),
         T.StructField("cf", T.LongType()),
-        T.StructField("bucket", T.IntegerType()),
     ]
 )
 DOC_STATS_SCHEMA = T.StructType(
@@ -122,6 +125,53 @@ def read_index_table(spark: SparkSession, root: str, name: str) -> DataFrame:
 def term_id(term_col):
     """tid = xxhash64(term): the numeric posting key (see POSTINGS_SCHEMA)."""
     return F.xxhash64(term_col)
+
+
+_P1, _P2, _P3 = 0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9
+_P4, _P5, _M64 = 0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5, (1 << 64) - 1
+_SEED = 42  # F.xxhash64's seed
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def tid_of(term: str) -> int:
+    """term_id of one term on the driver, without a Spark job: XXH64 of its
+    UTF-8 bytes with Spark's seed, as the signed long `F.xxhash64`
+    returns [public: xxHash spec]. The term-dict seek derives tids with it,
+    so term_dict stores only the term (tests/test_index.py pins it against
+    Spark)."""
+    data = term.encode("utf-8")
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(_SEED + _P1 + _P2) & _M64, _SEED + _P2, _SEED, (_SEED - _P1) & _M64]
+        lanes = struct.unpack_from(f"<{n // 32 * 4}Q", data)
+        for j, lane in enumerate(lanes):
+            v[j & 3] = _xxh_round(v[j & 3], lane)
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+        i = n // 32 * 32
+    else:
+        h = _SEED + _P5
+    h = (h + n) & _M64
+    for (lane,) in struct.iter_unpack("<Q", data[i:i + (n - i) // 8 * 8]):
+        h = (_rotl(h ^ _xxh_round(0, lane), 27) * _P1 + _P4) & _M64
+    i += (n - i) // 8 * 8
+    if n - i >= 4:
+        h = (_rotl(h ^ (struct.unpack_from("<I", data, i)[0] * _P1 & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h
 
 
 def run_starts(key_arrays: list[np.ndarray]) -> np.ndarray:
@@ -422,28 +472,22 @@ def detect_hot_terms(ts: DataFrame, hot_df: int) -> list[str]:
     return [r["term"] for r in ts.filter(F.col("df") > hot_df).select("term").collect()]
 
 
-def build_term_dict(ts: DataFrame, n_buckets: int, check_collisions: bool = True) -> DataFrame:
-    """C9: global term directory term → (tid, df, cf, bucket). Built from the
-    term-stats table (term, df, cf) — the postings themselves carry only the
-    numeric tid. The 64-bit hash space makes a collision astronomically
-    unlikely (~V²/2⁶⁵); it is still CHECKED here because a silent collision
-    would merge two posting lists."""
-    td = ts.select(
-        "term",
-        term_id(F.col("term")).alias("tid"),
-        "df",
-        "cf",
-        F.pmod(term_id(F.col("term")), F.lit(n_buckets)).cast("int").alias("bucket"),
-    )
-    if check_collisions:
-        r = td.agg(
-            F.count_distinct("term").alias("t"), F.count_distinct("tid").alias("i")
-        ).collect()[0]
-        if int(r["t"]) != int(r["i"]):
-            raise RuntimeError(
-                f"xxhash64 term-id collision: {int(r['t'])} terms → {int(r['i'])} tids"
-            )
-    return td
+def build_term_dict(ts: DataFrame) -> DataFrame:
+    """C9: global term directory term → (df, cf), built from the term-stats
+    table (term, df, cf). The postings carry only the numeric tid, and the
+    dictionary not even that: a reader derives it from the term. The 64-bit
+    hash space makes a collision astronomically unlikely (~V²/2⁶⁵); it is
+    still CHECKED here because a silent collision would merge two posting
+    lists."""
+    r = ts.agg(
+        F.count_distinct("term").alias("t"),
+        F.count_distinct(term_id(F.col("term"))).alias("i"),
+    ).collect()[0]
+    if int(r["t"]) != int(r["i"]):
+        raise RuntimeError(
+            f"xxhash64 term-id collision: {int(r['t'])} terms → {int(r['i'])} tids"
+        )
+    return ts.select("term", "df", "cf")
 
 
 @dataclass
@@ -523,7 +567,7 @@ def publish_index(
     file and row-group term ranges do not overlap and the driver-side seek
     (LoadedIndex._lookup, a filtered pyarrow read) prunes to the row groups
     whose footer min/max term range holds a wanted term."""
-    from .io import check_shard_layout, write_postings_shards
+    from .io import PARQUET_V2, check_shard_layout, write_postings_shards
 
     spark, root = postings.sparkSession, manifest.root
     os.makedirs(root, exist_ok=True)
@@ -546,7 +590,7 @@ def publish_index(
             .select("term", "df", "cf")
             .cache()
         )
-    tables = {"term_dict": build_term_dict(term_stats, manifest.n_buckets), "doc_stats": doc_stats}
+    tables = {"term_dict": build_term_dict(term_stats), "doc_stats": doc_stats}
     for name, df in tables.items():
         cols = [F.col(f.name).cast(f.dataType) for f in INDEX_SCHEMAS[name].fields]
         df = df.select(*cols)
@@ -554,9 +598,7 @@ def publish_index(
             df = df.repartitionByRange(n_files, "term").sortWithinPartitions("term")
         else:
             df = df.coalesce(n_files)
-        df.write.mode("overwrite").parquet(
-            os.path.join(root, name + ".tmp")
-        )
+        df.write.mode("overwrite").option(*PARQUET_V2).parquet(os.path.join(root, name + ".tmp"))
     if reaggregated:
         term_stats.unpersist()
     for name in ("postings", *tables):

@@ -84,6 +84,13 @@ def read_fixture(
 # per shard reach ~0.8 GB; pages up to ~1,300 tokens fit (scaled linearly).
 SHARD_ROW_GROUP_BYTES = 1 << 30
 
+# The write format of every index table (postings, term_dict, doc_stats):
+# Parquet's v2 writer, whose non-dictionary fallbacks are the delta
+# encodings [public: Parquet encodings spec], so the sorted key columns
+# shrink: postings `tid` and doc_stats `doc_id` are DELTA_BINARY_PACKED,
+# term_dict `term` DELTA_BYTE_ARRAY (prefix-shared, as Lucene's terms dict).
+PARQUET_V2 = ("parquet.writer.version", "PARQUET_2_0")
+
 
 def write_postings_shards(postings: DataFrame, path: str, mode: str = "overwrite"):
     """A3: segment sink — `postings/shard=<s>/` is ONE Parquet file of ONE
@@ -98,6 +105,7 @@ def write_postings_shards(postings: DataFrame, path: str, mode: str = "overwrite
         postings.repartition("shard").sortWithinPartitions("shard", "tid", "part")
         .write.mode(mode)
         .option("parquet.block.size", SHARD_ROW_GROUP_BYTES)
+        .option(*PARQUET_V2)
         .option("maxRecordsPerFile", 0)
         .partitionBy("shard")
         .parquet(path)

@@ -484,7 +484,7 @@ def _dir_tag(sf_dir: str) -> str:
 # Bump when the on-disk index layout (or the build config below) changes:
 # the tag changes with it, so stale caches from older formats are simply
 # never looked at again (and can be swept by hand).
-_CACHE_REV = "v4"
+_CACHE_REV = "v5"
 # The published on-disk caches (index_cache/, update_cache/) live in the
 # data/ dir of the checkout the engine is imported from, so two checkouts on
 # one host never share, or with fresh=True delete, each other's caches.

@@ -3,8 +3,9 @@
 Mirrors the ES query-then-fetch search lifecycle [public]:
   analyze query (same analyzer as indexing)
    → term-dict seek on the driver, no Spark job: one filtered pyarrow read
-     of term_dict that skips row groups by their footer min/max term
-     (global df / tid per term)
+     of term_dict (term, df) that skips row groups by their footer min/max
+     term; each found term's tid is computed from it (index.tid_of), not
+     stored
    → posting scan with one SQL-text `tid IN (...)` predicate pushed to the
      Parquet reader
    → per-shard block-max WAND top-k in the scan stage: postings are
@@ -40,7 +41,7 @@ from pyspark.sql import types as T
 
 from . import bm25
 from .codec import decode_postings
-from .index import TOMBSTONE_SCHEMA, IndexManifest, read_index_table
+from .index import TOMBSTONE_SCHEMA, IndexManifest, read_index_table, tid_of
 from .io import check_shard_layout
 from .search import ParsedQuery, parse_query
 from .wand import TermCursor, exhaustive_topk, intersect_topk, wand_topk, wand_tree_topk
@@ -222,18 +223,19 @@ class LoadedIndex:
         statistics miss [min(missing), max(missing)] (pyarrow prunes on
         comparisons, not on `isin`), so a single-term miss reads one row
         group of the sorted term_dict publish_index writes, and an index
-        with any other layout is still answered exactly."""
+        with any other layout is still answered exactly. The dictionary
+        stores no tid: each hit's is derived from its term (tid_of)."""
         missing = [t for t in terms if t not in self._td_cache]
         if missing:
             import pyarrow.dataset as ds
 
             term = ds.field("term")
             hits = self._td_files.to_table(
-                columns=["term", "df", "tid"],
+                columns=["term", "df"],
                 filter=term.isin(missing) & (term >= min(missing)) & (term <= max(missing)),
             )
-            cols = (hits[c].to_pylist() for c in ("term", "df", "tid"))
-            self._td_cache.update((t, (df, tid)) for t, df, tid in zip(*cols))
+            found, dfs = hits["term"].to_pylist(), hits["df"].to_pylist()
+            self._td_cache.update((t, (df, tid_of(t))) for t, df in zip(found, dfs))
         return {t: self._td_cache[t] for t in terms if t in self._td_cache}
 
     def idf(self, df: int) -> float:

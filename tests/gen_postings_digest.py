@@ -9,7 +9,8 @@ bits) per (tid, shard, part) of the row's (doc_ids_enc, tfs_enc, dls_enc,
 skips, block_max, df, cf).
 
 Every case that publishes an index also gets a `<case>.tables` entry: a
-sha256 of the sorted term_dict rows (term, tid, df, cf, bucket), one of the
+sha256 of the sorted term_dict rows (term, tid, df, cf, bucket), tid and
+bucket derived from the term as the engine derives them, one of the
 sorted doc_stats rows (doc_id, dl), and the manifest fields other than
 `root`, with avgdl as its repr (so the float's bits are pinned). The update
 runs on the build_index index, so its entries are `build_index.update_by_query`
@@ -66,15 +67,24 @@ def _rows_digest(rows) -> str:
 def table_digests(spark, root: str) -> dict[str, str]:
     """Digests of a published index's term_dict and doc_stats rows, and its
     manifest fields (root excluded, avgdl as repr)."""
-    from engine.index import IndexManifest
+    from pyspark.sql import functions as F
+
+    from engine.index import IndexManifest, term_id
 
     def rows(name, cols):
         return spark.read.parquet(os.path.join(root, name)).select(*cols).collect()
 
     m = IndexManifest.load(root).__dict__
     fields = {k: (repr(v) if k == "avgdl" else v) for k, v in m.items() if k != "root"}
+    # term_dict stores no tid or bucket: both are derived from the term, so
+    # the digest covers the same (term, tid, df, cf, bucket) rows as ever
+    tid = term_id(F.col("term"))
+    derived = [
+        "term", tid.alias("tid"), "df", "cf",
+        F.pmod(tid, F.lit(m["n_buckets"])).cast("int").alias("bucket"),
+    ]
     return {
-        "term_dict": _rows_digest(rows("term_dict", ["term", "tid", "df", "cf", "bucket"])),
+        "term_dict": _rows_digest(rows("term_dict", derived)),
         "doc_stats": _rows_digest(rows("doc_stats", ["doc_id", "dl"])),
         "manifest": json.dumps(fields, sort_keys=True),
     }

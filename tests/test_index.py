@@ -63,7 +63,7 @@ def test_manifest_and_layout(index, exact):
     _, _, _, n, avgdl = exact
     assert index.manifest.n_docs == n
     assert index.manifest.avgdl == pytest.approx(avgdl)
-    # every term maps to exactly one bucket; df consistent with term_stats
+    # df and cf consistent with term_stats
     td = {r["term"]: r for r in index.term_dict.collect()}
     for r in exact[2].collect():
         assert td[r["term"]]["df"] == r["df"]
@@ -363,17 +363,105 @@ def test_partial_encode_multi_flush_roundtrip(spark):
 
 
 def _spark_lookup(spark, root: str, terms: list[str]) -> dict:
-    """The reference seek: a Spark filter over the term_dict table."""
-    from engine.index import read_index_table
+    """The reference seek: a Spark filter over the term_dict table, the tid
+    derived in Spark (term_id) from the term."""
+    from engine.index import read_index_table, term_id
 
     td = read_index_table(spark, root, "term_dict")
     return {
         r["term"]: (int(r["df"]), int(r["tid"]))
-        for r in td.filter(F.col("term").isin(terms)).collect()
+        for r in td.filter(F.col("term").isin(terms))
+        .select("term", "df", term_id(F.col("term")).alias("tid")).collect()
     }
 
 
 ABSENT = ["zzznonexistent", "", "a" * 300, "étéx", "\U0001f600"]
+
+
+def test_tid_of_matches_spark_xxhash64(spark, index):
+    """The driver's XXH64 twin equals Spark's xxhash64 on the fixture
+    vocabulary, every byte length 0-70 (the 32-byte stripes and the 8-, 4-
+    and 1-byte tails), multi-byte UTF-8 and the absent-term probes."""
+    from engine.index import term_id, tid_of
+
+    vocab = [r["term"] for r in index.term_dict.select("term").collect()]
+    lengths = ["".join(chr(33 + (i * 37 + n) % 94) for i in range(n)) for n in range(71)]
+    utf8 = ["é" * n for n in range(1, 24)] + ["日本語の検索", "größe", "Ελληνικά", "\U0001f600" * 9]
+    strings = vocab + lengths + utf8 + ABSENT
+    assert len({len(s.encode()) for s in lengths}) == 71
+    frame = spark.createDataFrame([(s,) for s in strings], "term string")
+    want = [r[0] for r in frame.select(term_id(F.col("term"))).collect()]
+    assert [tid_of(s) for s in strings] == want
+
+
+def test_term_dict_format(index):
+    """The published term_dict holds only (term, df, cf); the sorted key
+    columns are delta-encoded by Parquet's v2 writer: term DELTA_BYTE_ARRAY,
+    postings tid and doc_stats doc_id DELTA_BINARY_PACKED."""
+
+    def encodings(table: str, column: str) -> set:
+        files = [
+            os.path.join(d, n)
+            for d, _, names in os.walk(os.path.join(index.root, table))
+            for n in names if n.endswith(".parquet")
+        ]
+        assert files, table
+        out = set()
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            i = md.schema.names.index(column)
+            out |= {e for g in range(md.num_row_groups) for e in md.row_group(g).column(i).encodings}
+        return out
+
+    td = os.path.join(index.root, "term_dict")
+    for n in os.listdir(td):
+        if n.endswith(".parquet"):
+            assert pq.read_schema(os.path.join(td, n)).names == ["term", "df", "cf"]
+    assert index.term_dict.columns == ["term", "df", "cf"]
+    assert encodings("term_dict", "term") == {"DELTA_BYTE_ARRAY"}
+    assert encodings("postings", "tid") == {"DELTA_BINARY_PACKED"}
+    assert encodings("doc_stats", "doc_id") == {"DELTA_BINARY_PACKED"}
+
+
+def test_term_id_collision_still_raises(spark, docs, tmp_path, monkeypatch):
+    """With tid no longer stored, the dictionary build still checks that
+    no two terms share one: a constant term_id collides every term."""
+    from engine import index as index_mod
+
+    ts = spark.createDataFrame([("alpha", 1, 1), ("beta", 2, 3)], "term string, df long, cf long")
+    assert build_term_dict(ts).count() == 2
+    monkeypatch.setattr(index_mod, "term_id", lambda c: F.lit(7).cast("long"))
+    with pytest.raises(RuntimeError, match="collision"):
+        build_term_dict(ts)
+    root = str(tmp_path / "collide")
+    with pytest.raises(RuntimeError, match="collision"):
+        build_index(spark, docs.limit(20), root, n_buckets=2, docs_per_shard=64, block_size=8)
+    assert not os.path.exists(os.path.join(root, "manifest.json"))
+
+
+def test_term_dict_with_stored_tid_still_reads(spark, index, tmp_path):
+    """An index whose term_dict still carries the tid and bucket columns
+    (the earlier layout) seeks and searches exactly as the current one."""
+    from engine.index import tid_of
+
+    root = str(tmp_path / "stored_tid")
+    shutil.copytree(index.root, root)
+    td = os.path.join(root, "term_dict")
+    rows = pq.read_table(td).to_pandas()
+    shutil.rmtree(td)
+    os.mkdir(td)
+    rows["tid"] = [tid_of(t) for t in rows["term"]]
+    rows["bucket"] = (rows["tid"] % index.manifest.n_buckets).astype("int32")
+    rows = rows[["term", "tid", "df", "cf", "bucket"]]
+    pq.write_table(pa.Table.from_pandas(rows, preserve_index=False), os.path.join(td, "part-0.parquet"))
+    old = LoadedIndex(spark, root)
+    assert old.term_dict.columns == ["term", "df", "cf"]
+    vocab = rows["term"].tolist()
+    terms = vocab[::4] + ABSENT
+    assert _seek(spark, root, terms) == _seek(spark, index.root, terms)
+    assert _seek(spark, root, terms) == _spark_lookup(spark, root, terms)
+    for q, k, mode in QUERIES:
+        assert old.search(q, k=k, mode=mode).collect() == index.search(q, k=k, mode=mode).collect()
 
 
 def test_lookup_submits_no_spark_job(spark, index):
